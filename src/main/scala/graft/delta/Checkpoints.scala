@@ -3,6 +3,9 @@ package graft.delta
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Encoders, SaveMode}
 
+import graft.delta.write.LocalParquet
+import graft.delta.write.LocalParquet.MaxDriverRows
+
 /** `_last_checkpoint` contents (ref: Checkpoints.scala:54-101). */
 case class LastCheckpoint(version: Long, size: Long, parts: Option[Int] = None)
 
@@ -74,9 +77,12 @@ object Checkpoints {
     * or reader task handles the whole state). Tables with
     * `delta.checkpointPolicy=v2` get a V2 (uuid-named) checkpoint with
     * sidecars instead — multi-part classic checkpoints are not legal
-    * under that policy. */
+    * under that policy. Beyond the driver-state bound the file list flows
+    * checkpoint → checkpoint as a Spark job, never through the driver
+    * ([[writeCheckpointDistributed]]). */
   def writeCheckpoint(snapshot: Snapshot, parts: Int = 1): Unit = {
     if (checkpointPolicy(snapshot) == "v2") return writeV2Checkpoint(snapshot, parts)
+    if (snapshot.distributedState) return writeCheckpointDistributed(snapshot, parts)
     implicit val enc = Encs.singleAction
     val statsXf = statsTransform(snapshot.metadata)
     val actions: Seq[SingleAction] =
@@ -167,13 +173,7 @@ object Checkpoints {
     // protocol; distributed-state (and non-local-scheme) tables keep the
     // Spark-job path unchanged.
     val driverSmall = !snapshot.distributedState &&
-      "file".equalsIgnoreCase(Option(log.logPath.toUri.getScheme)
-        .getOrElse(fs.getUri.getScheme)) &&
-      total <= graft.delta.write.LocalParquet.MaxDriverRows
-    lazy val adds =
-      if (snapshot.distributedState)
-        snapshot.allFilesDistributed.map(a => statsXf(a).wrap)(enc)
-      else spark.createDataset(snapshot.allFiles.map(a => statsXf(a).wrap))
+      LocalParquet.onDriver(Seq(log.logPath), fs, Some(total), MaxDriverRows)
 
     val plan = planV2CarryOver(snapshot, parts)
     // full-rewrite bucket count: driven by the SIDECAR size target, not
@@ -218,13 +218,12 @@ object Checkpoints {
           .filter { case (b, _) => changed.forall(_.contains(b)) }
           .map { case (b, rows) =>
             val tmp = new Path(tempDir, s"b$b.parquet")
-            graft.delta.write.LocalParquet.write(spark, tmp.toString, rows,
-              Encs.singleAction)
+            LocalParquet.write(spark, tmp.toString, rows, Encs.singleAction)
             publish(tmp, s"$uuid.b${b}of$nBuckets.0.parquet")
           }
       } else {
         val bucketOf = udf((p: String) => sidecarBucket(canonical(p), nb))
-        val bucketed = adds.toDF
+        val bucketed = snapshot.allFilesDS.map(a => statsXf(a).wrap)(enc).toDF
           .withColumn("__bucket", bucketOf(col("add.path")))
         val toWrite = plan match {
           case Some(p) if p.changed.isEmpty => bucketed.filter(lit(false))
@@ -260,7 +259,7 @@ object Checkpoints {
         if (snapshot.tombstones.isEmpty) Seq.empty[SidecarFile]
         else if (driverSmall) {
           val tmp = new Path(tempDir, "tombstones.parquet")
-          graft.delta.write.LocalParquet.write(spark, tmp.toString,
+          LocalParquet.write(spark, tmp.toString,
             snapshot.tombstones.map(_.wrap), Encs.singleAction)
           Seq(publish(tmp, s"$uuid.tombstones.0.parquet"))
         } else {
@@ -297,12 +296,11 @@ object Checkpoints {
       // actions + sidecar references) — on the local scheme write it
       // driver-side whatever the state mode; the temp+rename publish is
       // unchanged so readers never observe a torn main
-      val localScheme = "file".equalsIgnoreCase(
-        Option(log.logPath.toUri.getScheme).getOrElse(fs.getUri.getScheme))
-      if (localScheme) {
+      if (LocalParquet.onDriver(Seq(log.logPath), fs,
+          Some(mainRows.size.toLong), MaxDriverRows)) {
         val mainTmp = new Path(tempDir, "main.parquet")
-        graft.delta.write.LocalParquet.write(spark, mainTmp.toString,
-          mainRows, Encs.v2MainAction)
+        LocalParquet.write(spark, mainTmp.toString, mainRows,
+          Encs.v2MainAction)
         val dest = FileNames.v2CheckpointFile(
           log.logPath, snapshot.version, uuid, "parquet")
         fs.delete(dest, false)
@@ -437,7 +435,7 @@ object Checkpoints {
   private def atomicCreateMarker(fs: org.apache.hadoop.fs.FileSystem,
                                  p: Path): Boolean =
     try {
-      if (Option(p.toUri.getScheme).forall(_ == "file")) {
+      if (storage.LogStore.isLocalScheme(p, fs)) {
         java.nio.file.Files.createFile(
           java.nio.file.Paths.get(p.toUri.getPath))
       } else {
@@ -538,12 +536,10 @@ object Checkpoints {
     // one-task job, none of the job/committer/chmod scaffolding, measured
     // 0.3-0.9 s per cadence checkpoint). The publish protocol below
     // (claim marker, rename, _last_checkpoint) is unchanged.
-    val local = "file".equalsIgnoreCase(
-      Option(log.logPath.toUri.getScheme).getOrElse(fs.getUri.getScheme))
     val wroteDriverSide = driverRows match {
-      case Some(rows) if parts == 1 && local &&
-          rows.size <= graft.delta.write.LocalParquet.MaxDriverRows =>
-        graft.delta.write.LocalParquet.write(snapshot.spark,
+      case Some(rows) if parts == 1 && LocalParquet.onDriver(
+          Seq(log.logPath), fs, Some(rows.size.toLong), MaxDriverRows) =>
+        LocalParquet.write(snapshot.spark,
           new Path(tempDir, "part-00000.parquet").toString, rows,
           Encs.singleAction)
         true

@@ -80,27 +80,12 @@ object Checksums {
     } catch { case _: Exception => }
   }
 
-  /** `(numFiles, tableSizeBytes)` of a snapshot without forcing a driver
-    * materialization: beyond the driver-state bound the totals come from
-    * an aggregation Spark job over the distributed file list. */
-  private def stateTotals(snapshot: Snapshot): (Long, Long) =
-    if (snapshot.distributedState) {
-      import org.apache.spark.sql.functions.{count, lit, sum}
-      val row = snapshot.allFilesDistributed.toDF()
-        .agg(count(lit(1)), sum("size")).head()
-      (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-    } else {
-      val files = snapshot.allFiles
-      (files.size.toLong, files.map(_.size).sum)
-    }
-
-  /** Re-seed the chain from a materialized state (checkpoint time — the
-    * checkpoint already paid for the file list). */
+  /** Re-seed the chain from a snapshot's state (checkpoint time — the
+    * checkpoint already paid for the file totals). */
   def writeFromState(snapshot: Snapshot): Unit = {
     try {
-      val (files, bytes) = stateTotals(snapshot)
       write(snapshot.deltaLog, snapshot.version,
-        VersionChecksum(bytes, files, 1L, 1L,
+        VersionChecksum(snapshot.sizeInBytes, snapshot.numOfFiles, 1L, 1L,
           snapshot.metadata, snapshot.protocol,
           snapshot.inCommitTimestampOpt))
     } catch { case _: Exception => }
@@ -129,7 +114,7 @@ object Checksums {
     * replay bug, either of which must not serve answers silently. */
   def validate(snapshot: Snapshot): Unit = {
     read(snapshot.deltaLog, snapshot.version).foreach { crc =>
-      val (files, bytes) = stateTotals(snapshot)
+      val (files, bytes) = (snapshot.numOfFiles, snapshot.sizeInBytes)
       if (files != crc.numFiles || bytes != crc.tableSizeBytes) {
         throw new IllegalStateException(
           s"Version checksum mismatch at version ${snapshot.version}: " +

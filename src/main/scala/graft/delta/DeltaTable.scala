@@ -442,9 +442,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     * data-changing transaction (Serializable — conflicts with concurrent
     * writers are detected through the read predicate). */
   /** DML candidate selection: the files whose partition values / stats
-    * admit a match. In distributed-state mode the pruning runs as a
-    * Spark job and only survivors are driver-materialized (they must be —
-    * they become the commit's RemoveFiles). */
+    * admit a match (they become the commit's RemoveFiles). */
   private def candidateFiles(
       snapshot: Snapshot,
       resolved: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -456,16 +454,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     // (e.g. ts under day=date(ts)) prunes its candidates too
     val metaPreds = metaPreds0 ++
       read.GeneratedPartitionFilters.derive(metadata, dataPreds, spark)
-    if (snapshot.distributedState) {
-      read.FilePruning.prune(snapshot.allFilesDistributed,
-        metadata.partitionSchema, metaPreds, dataPreds,
-        metadata.dataSchema).collect().toSeq
-    } else {
-      val partitionPruned = read.PartitionUtils.filterFileList(
-        metadata.partitionSchema, snapshot.allFiles, metaPreds)
-      read.DataSkipping.filterFiles(partitionPruned, dataPreds,
-        metadata.dataSchema)
-    }
+    snapshot.filesMatching(metaPreds, dataPreds)
   }
 
   private def rewriteMatchedFiles(
@@ -567,10 +556,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     val dataPathStr = deltaLog.dataPath.toString
     val sconf = new SerializableHadoopConf(deltaLog.hadoopConf)
     implicit val enc = Encs.addFile
-    val files =
-      if (snapshot.distributedState) snapshot.allFilesDistributed
-      else spark.createDataset(snapshot.allFiles)
-    val missing = files.mapPartitions { it =>
+    val missing = snapshot.allFilesDS.mapPartitions { it =>
       val base = new org.apache.hadoop.fs.Path(dataPathStr)
       lazy val fs = base.getFileSystem(sconf.value)
       it.filterNot(a =>
@@ -821,23 +807,20 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
           "(^|/)(?!" + write.CdcWriter.ChangeDir + "(/|$))(?![._][^/]*=)[._]"))
     }
 
-    val activeDF =
-      (if (snapshot.distributedState) {
-        val dataPathStr = deltaLog.dataPath.toString
-        val prefix = rootPrefixForDv
-        snapshot.allFilesDistributed.flatMap { f =>
-          val dvPath = f.deletionVector
-            .filter(x => x.storageType == "u" || x.storageType == "p")
-            .map(x => dv.DeletionVectors.absolutePath(x,
-              new org.apache.hadoop.fs.Path(dataPathStr))
-              .toUri.getPath.stripPrefix(prefix))
-          new org.apache.hadoop.fs.Path(new java.net.URI(f.path))
-            .toUri.getPath +: dvPath.toSeq
-        }
-      } else {
-        spark.createDataset(snapshot.allFiles.flatMap(f =>
-          decode(f.path) +: dvRelPath(f.deletionVector).toSeq))
-      }).toDF("rel")
+    // the same rows as decode/dvRelPath, from serializable values only
+    val activeDF = {
+      val dataPathStr = deltaLog.dataPath.toString
+      val prefix = rootPrefixForDv
+      snapshot.allFilesDS.flatMap { f =>
+        val dvPath = f.deletionVector
+          .filter(x => x.storageType == "u" || x.storageType == "p")
+          .map(x => dv.DeletionVectors.absolutePath(x,
+            new org.apache.hadoop.fs.Path(dataPathStr))
+            .toUri.getPath.stripPrefix(prefix))
+        new org.apache.hadoop.fs.Path(new java.net.URI(f.path))
+          .toUri.getPath +: dvPath.toSeq
+      }.toDF("rel")
+    }
     val protectedDF = spark.createDataset(protectedPaths).toDF("rel")
 
     val deletable = listing.filter(col("mtime") < cutoff)
@@ -1066,14 +1049,12 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     if (version == current.version) return current.version
     val target = deltaLog.getSnapshotForVersionAsOf(version)
 
-    def filesDs(s: Snapshot): org.apache.spark.sql.Dataset[AddFile] =
-      if (s.distributedState) s.allFilesDistributed else s.allFilesDS
     implicit val enc = Encs.addFile
     // both sides feed TWO anti-joins; persist so time-travel snapshots
     // (which never cache their distributed state) replay once, not twice
-    val targetFiles = filesDs(target)
+    val targetFiles = target.allFilesDS
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val currentFiles = filesDs(current)
+    val currentFiles = current.allFilesDS
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the diff keys by (path, dvId), not path alone: restoring across a
     // DV change must swap (F, dv) for (F, none) — a path-only diff would
@@ -1227,15 +1208,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       .splitMetadataAndDataPredicates(resolved, metadata.partitionColumns)
     require(dataPreds.isEmpty,
       s"replaceWhere predicate must reference partition columns only, got: $condition")
-    val matched =
-      if (snapshot.distributedState) {
-        read.FilePruning.prune(snapshot.allFilesDistributed,
-          metadata.partitionSchema, metaPreds, Nil, metadata.dataSchema)
-          .collect().toSeq
-      } else {
-        read.PartitionUtils.filterFileList(
-          metadata.partitionSchema, snapshot.allFiles, metaPreds)
-      }
+    val matched = snapshot.filesMatching(metaPreds)
     txn.markFilesAsRead(condition)
 
     // generated and identity columns compute exactly as on append
@@ -1325,9 +1298,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     val snap = deltaLog.update()
     val pcols = snap.metadata.partitionColumns
     require(pcols.nonEmpty, "Table is not partitioned")
-    val files =
-      if (snap.distributedState) snap.allFilesDistributed else snap.allFilesDS
-    files.select(
+    snap.allFilesDS.select(
         pcols.map(c => element_at(col("partitionValues"), c).as(c)) ++ Seq(
           col("size"),
           get_json_object(col("stats"), "$.numRecords").cast("long")
@@ -1340,19 +1311,10 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
 
   /** DESCRIBE DETAIL: one row of table-level metadata. Protocol, schema
     * and configuration come from light state (no AddFile decode — M5);
-    * numFiles/sizeInBytes aggregate the file list WITHOUT materializing
-    * it on the driver in distributed-state mode (two scalars come back).
-    */
+    * numFiles/sizeInBytes are the snapshot's own totals. */
   def detail(): DataFrame = {
-    import org.apache.spark.sql.functions.{count, lit, sum}
     import spark.implicits._
     val snap = deltaLog.update()
-    val (numFiles, sizeInBytes) =
-      if (snap.distributedState) {
-        val r = snap.allFilesDistributed
-          .agg(count(lit(1)), sum($"size")).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      } else (snap.allFiles.size.toLong, snap.allFiles.map(_.size).sum)
     val m = snap.metadata
     Seq((
       "delta",
@@ -1362,8 +1324,8 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       new java.sql.Timestamp(m.createdTime.getOrElse(0L)),
       new java.sql.Timestamp(snap.timestamp),
       m.partitionColumns,
-      numFiles,
-      sizeInBytes,
+      snap.numOfFiles,
+      snap.sizeInBytes,
       m.configuration,
       snap.protocol.minReaderVersion,
       snap.protocol.minWriterVersion))
@@ -1410,10 +1372,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       createdTime = Some(targetLog.clock())))
     val fs = deltaLog.dataPath.getFileSystem(deltaLog.hadoopConf)
     val qualified = fs.makeQualified(deltaLog.dataPath)
-    val files =
-      if (snapshot.distributedState) snapshot.allFilesDistributed.collect().toSeq
-      else snapshot.allFiles
-    val adds = files.map { f =>
+    val adds = snapshot.filesWhere(_ => true).map { f =>
       f.copy(
         path = read.PartitionUtils.absolutePath(qualified, f.path).toUri.toString,
         // a relative ("u") deletion vector resolves against the TABLE
@@ -1477,9 +1436,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
 
     import org.apache.spark.sql.Encoders
     implicit val enc = Encs.addFile
-    val filesDs =
-      if (snapshot.distributedState) snapshot.allFilesDistributed
-      else spark.createDataset(snapshot.allFiles)(enc)
+    val filesDs = snapshot.allFilesDS
 
     // function VALUES, not defs: these run inside task closures, and a
     // nested def would drag the (non-serializable) enclosing instance in
@@ -1827,10 +1784,15 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
         "CLUSTER BY them first); it cannot combine with explicit ZORDER BY")
     val liquidIncremental = clusteringDriven && !fullReCluster
     val clusterTag = zOrderCols.mkString(",")
-    def alreadyClustered(f: AddFile): Boolean =
+    // function values, not defs: they run inside distributed filters
+    val alreadyClustered: AddFile => Boolean = f =>
       f.deletionVector.isEmpty &&
         f.tags.exists(_.get(DeltaTable.ClusteringColumnsTag)
           .contains(clusterTag))
+    val target = targetFileBytes
+    val purge = purgeOnly
+    val packable: AddFile => Boolean = f =>
+      (f.size < target && !purge) || f.deletionVector.isDefined
     // Candidate SELECTION runs where the file list lives: in
     // distributed-state mode the sub-target-size filter is a Spark job
     // over allFilesDistributed and only the files that will actually be
@@ -1853,10 +1815,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       case Some(pred) =>
         val matched = txn.markFilesAsRead(pred)
         if (zOrderCols.isEmpty)
-          DeltaTable.packableGroups(
-            matched.filter(f =>
-              (f.size < targetFileBytes && !purgeOnly) ||
-                f.deletionVector.isDefined),
+          DeltaTable.packableGroups(matched.filter(packable),
             targetFileBytes, maxFilesPerCommit)
         // Z-order must rewrite EVERY candidate in one clustering pass —
         // a truncated subset would leave the table partially clustered
@@ -1865,58 +1824,39 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
         else matched
       case None =>
         txn.readWholeTable()
-        if (snapshot.distributedState) {
-          val target = targetFileBytes
+        if (zOrderCols.nonEmpty) {
+          if (liquidIncremental)
+            snapshot.filesWhere(f => !alreadyClustered(f))
+          else snapshot.filesWhere(_ => true)
+        } else if (snapshot.distributedState) {
+          // group + qualify where the file list lives; only survivors
+          // (files that will become RemoveFiles) reach the driver. The
+          // driver re-qualifies after the limit() truncation so a group
+          // split by the cap is deferred, never half-rewritten.
           val cap = maxFilesPerCommit
-          val purge = purgeOnly
-          if (zOrderCols.isEmpty) {
-            // group + qualify where the file list lives; only survivors
-            // (files that will become RemoveFiles) reach the driver. The
-            // driver re-qualifies after the limit() truncation so a group
-            // split by the cap is deferred, never half-rewritten.
-            import spark.implicits._
-            val survivors = snapshot.allFilesDistributed
-              .filter(f => (f.size < target && !purge) ||
-                f.deletionVector.isDefined)
-              .groupByKey(_.partitionValues.toSeq.sortBy(_._1)
-                .map { case (k, v) => s"$k=$v" }.mkString("/"))
-              .flatMapGroups { (_, it) =>
-                // buffer at most the per-commit cap per group — a
-                // million-small-file partition must not materialize in
-                // one task's memory; past the cap the group is emitted
-                // as-is and the driver re-qualifies the truncation
-                val buf = scala.collection.mutable.ArrayBuffer.empty[AddFile]
-                while (it.hasNext && buf.size <= cap) buf += it.next()
-                val fs = buf.toSeq
-                if (fs.size > cap) fs
-                else if (fs.exists(_.deletionVector.isDefined)) fs
-                else if (fs.size >= 2 &&
-                  DeltaTable.packedFileCount(fs, target) < fs.size) fs
-                else Iterator.empty
-              }
-              .limit(maxFilesPerCommit).collect().toSeq
-            DeltaTable.packableGroups(survivors, target, maxFilesPerCommit)
-          } else if (liquidIncremental) {
-            // the tag filter runs WHERE THE FILE LIST LIVES; only files
-            // that will actually rewrite reach the driver
-            val tagVal = clusterTag
-            snapshot.allFilesDistributed
-              .filter(f => !(f.deletionVector.isEmpty &&
-                f.tags.exists(_.get(DeltaTable.ClusteringColumnsTag)
-                  .contains(tagVal))))
-              .collect().toSeq
-          } else snapshot.allFilesDistributed.collect().toSeq
-        } else {
-          if (zOrderCols.isEmpty) {
-            DeltaTable.packableGroups(
-              snapshot.allFiles.filter(f =>
-                (f.size < targetFileBytes && !purgeOnly) ||
-                  f.deletionVector.isDefined),
-              targetFileBytes, maxFilesPerCommit)
-          } else if (liquidIncremental)
-            snapshot.allFiles.filterNot(alreadyClustered)
-          else snapshot.allFiles
-        }
+          import spark.implicits._
+          val survivors = snapshot.allFilesDistributed
+            .filter(packable)
+            .groupByKey(_.partitionValues.toSeq.sortBy(_._1)
+              .map { case (k, v) => s"$k=$v" }.mkString("/"))
+            .flatMapGroups { (_, it) =>
+              // buffer at most the per-commit cap per group — a
+              // million-small-file partition must not materialize in
+              // one task's memory; past the cap the group is emitted
+              // as-is and the driver re-qualifies the truncation
+              val buf = scala.collection.mutable.ArrayBuffer.empty[AddFile]
+              while (it.hasNext && buf.size <= cap) buf += it.next()
+              val fs = buf.toSeq
+              if (fs.size > cap) fs
+              else if (fs.exists(_.deletionVector.isDefined)) fs
+              else if (fs.size >= 2 &&
+                DeltaTable.packedFileCount(fs, target) < fs.size) fs
+              else Iterator.empty
+            }
+            .limit(maxFilesPerCommit).collect().toSeq
+          DeltaTable.packableGroups(survivors, target, maxFilesPerCommit)
+        } else DeltaTable.packableGroups(snapshot.filesWhere(packable),
+          targetFileBytes, maxFilesPerCommit)
     }
     if (rewrite.isEmpty) return snapshot.version
 

@@ -80,8 +80,7 @@ object FeatureRemoval {
     // the boundary checkpoint: serves every surviving version, and is the
     // checkpoint the protected-prefix cleanup contract requires
     val post = deltaLog.update()
-    if (post.distributedState) Checkpoints.writeCheckpointDistributed(post)
-    else Checkpoints.writeCheckpoint(post)
+    Checkpoints.writeCheckpoint(post)
     if (truncateHistory) truncateBelow(deltaLog, v)
     v
   }
@@ -96,11 +95,7 @@ object FeatureRemoval {
       require(!cond, s"Cannot drop feature $name: $what. $remedy")
     name match {
       case "deletionVectors" =>
-        val shaded =
-          if (snapshot.distributedState)
-            !snapshot.allFilesDistributed.filter(_.deletionVector.isDefined).isEmpty
-          else snapshot.allFiles.exists(_.deletionVector.isDefined)
-        refuse(shaded, "files still carry deletion vectors",
+        refuse(!snapshot.dvFiles.isEmpty, "files still carry deletion vectors",
           "Run OPTIMIZE to purge the shades first")
         (Seq(DeltaConfigs.ENABLE_DELETION_VECTORS.key), Nil)
       case "v2Checkpoint" =>

@@ -1,7 +1,8 @@
 package graft.delta
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** The contiguous slice of the log that defines one table version:
   * an optional checkpoint plus every commit after it.
@@ -32,11 +33,20 @@ object LogSegment {
   *    (SnapshotImpl.scala:161-246): metadata-only callers — `history()`,
   *    config lookups, schema reads — touch no AddFile.
   *  - '''file state''' — the active-file list. Below
-  *    `spark.graft.snapshot.driverStateMaxBytes` of checkpoint (default
-  *    128 MB ≈ low millions of files) it is folded on the driver; above
-  *    it, [[DistributedLogReplay]] computes it as a Spark job and scans
-  *    prune distributively, collecting only surviving files
-  *    (see [[read.DeltaFileIndex]]).
+  *    `spark.graft.snapshot.driverStateMaxBytes` of checkpoint plus log
+  *    (default 128 MB ≈ low millions of files) it is folded on the
+  *    driver; above it, [[DistributedLogReplay]] computes it as a Spark
+  *    job.
+  *
+  * This class is the only code that decides where the file state lives.
+  * Consumers ask [[filesMatching]] (partition + stats pruning),
+  * [[filesWhere]] (any serializable predicate), [[allFilesDS]] (a
+  * Dataset for jobs), [[dvFiles]] (files with deletion vectors) or
+  * [[numOfFiles]]/[[sizeInBytes]]; each accessor runs where the state
+  * lives and, in distributed mode, brings only its answer to the driver.
+  * Whether a checkpoint artifact is read on the driver is decided by
+  * [[write.LocalParquet.readArtifacts]], from its size and the
+  * filesystem's resolved scheme.
   *
   * JSON commits after the checkpoint are driver-side: there are at most
   * `checkpointInterval` of them, bounded-size by construction.
@@ -106,28 +116,22 @@ class Snapshot(
       .map(f => V2Checkpoints.readMain(
         spark, deltaLog.logPath, f, deltaLog.hadoopConf))
 
-  /** The sidecar parquet paths of a V2 checkpoint (empty otherwise). */
-  private def sidecarPaths: Seq[String] = v2Main.fold(Seq.empty[String])(
-    _.sidecars.map(s =>
-      V2Checkpoints.sidecarPath(deltaLog.logPath, s).toString))
-
-  /** Checkpoint parquet bytes small enough (and local) to read on the
-    * driver instead of through a Spark job (r16, guide §1 profile: a
-    * KB-sized checkpoint read cost a full job — scheduling + AQE — per
-    * snapshot bootstrap). None when any size is unknown or the total
-    * exceeds [[write.LocalParquet.MaxDriverReadBytes]]. */
-  private def driverReadableCheckpoint: Boolean = {
-    val local = "file".equalsIgnoreCase(
-      Option(deltaLog.logPath.toUri.getScheme).getOrElse("file"))
-    local && {
-      val bytes = v2Main match {
-        case Some(m) =>
+  /** Rows of the checkpoint's parquet files — a V2 checkpoint's
+    * sidecars, or the classic parts — decoded through `enc`'s columns
+    * ([[write.LocalParquet.readArtifacts]] picks driver or job; a V2
+    * sidecar of undeclared size forces the job). */
+  private def readCheckpointParquet[T](enc: Encoder[T]): Vector[T] = {
+    val (paths, bytes) = v2Main match {
+      case Some(m) =>
+        (m.sidecars.map(V2Checkpoints.sidecarPath(deltaLog.logPath, _)),
           if (m.sidecars.exists(_.sizeInBytes.isEmpty)) None
-          else Some(m.sidecars.flatMap(_.sizeInBytes).sum)
-        case None => Some(logSegment.checkpoint.map(_.getLen).sum)
-      }
-      bytes.exists(_ <= write.LocalParquet.MaxDriverReadBytes)
+          else Some(m.sidecars.flatMap(_.sizeInBytes).sum))
+      case None =>
+        (logSegment.checkpoint.map(_.getPath),
+          Some(logSegment.checkpoint.map(_.getLen).sum))
     }
+    write.LocalParquet.readArtifacts(spark,
+      deltaLog.logPath.getFileSystem(deltaLog.hadoopConf), paths, bytes, enc)
   }
 
   /** Above this many state bytes the file list stays distributed.
@@ -209,48 +213,12 @@ class Snapshot(
 
   /** Checkpoint actions with the `add` column pruned at the parquet layer.
     * V2 checkpoints: the driver-parsed main file supplies every non-file
-    * action, and only the `remove` column of the sidecars is decoded
+    * action, and only the light columns of the sidecars are decoded
     * (tombstones; same columnar pruning as the classic path). */
-  private def readCheckpointLightActions(): Iterator[Action] = v2Main match {
-    case Some(main) =>
-      val fromMain = main.actions.iterator.filter(!_.isInstanceOf[AddFile])
-      if (sidecarPaths.isEmpty) fromMain
-      else if (driverReadableCheckpoint) {
-        // same requested-schema pruning (only the light columns decode),
-        // no Spark job — the null-unwrap drop below subsumes the job
-        // path's remove-only filter
-        fromMain ++ write.LocalParquet
-          .read(spark, sidecarPaths, Encs.lightAction)
-          .iterator.map(_.unwrap).filter(_ != null)
-      } else {
-        implicit val enc = Encs.lightAction
-        fromMain ++ spark.read
-          .schema(Encs.singleAction.schema)
-          .parquet(sidecarPaths: _*)
-          .selectExpr("txn", "remove", "metaData", "protocol",
-            "domainMetadata")
-          .where("remove IS NOT NULL")
-          .as[Snapshot.LightAction]
-          .collect().iterator.map(_.unwrap).filter(_ != null)
-      }
-    case None =>
-      implicit val enc = Encs.lightAction
-      val paths = logSegment.checkpoint.map(_.getPath.toString)
-      if (driverReadableCheckpoint) {
-        write.LocalParquet.read(spark, paths, Encs.lightAction)
-          .iterator.map(_.unwrap).filter(_ != null)
-      } else {
-        spark.read.schema(Encs.singleAction.schema)
-          .parquet(paths: _*)
-          .selectExpr("txn", "remove", "metaData", "protocol",
-            "domainMetadata")
-          .where("txn IS NOT NULL OR remove IS NOT NULL OR " +
-            "metaData IS NOT NULL OR protocol IS NOT NULL OR " +
-            "domainMetadata IS NOT NULL")
-          .as[Snapshot.LightAction]
-          .collect().iterator.map(_.unwrap).filter(_ != null)
-      }
-  }
+  private def readCheckpointLightActions(): Iterator[Action] =
+    v2Main.fold(Iterator.empty[Action])(
+      _.actions.iterator.filter(!_.isInstanceOf[AddFile])) ++
+      readCheckpointParquet(Encs.lightAction).iterator.map(_.unwrap)
 
   // --------------------------------------------------------- file state
   /** Whether the full driver-side fold ran (observable so specs can prove
@@ -272,23 +240,12 @@ class Snapshot(
       // (e.g. commitInfo.timestamp as a parquet TIMESTAMP where the JSON
       // model uses millis) that state reconstruction must never touch.
       logSegment.checkpointVersion.foreach { cpVersion =>
-        implicit val enc = Encs.stateAction
         // V2 checkpoints: driver-parsed main actions (incl. inline file
         // actions when no sidecars) + the sidecar parquets; classic:
         // the checkpoint part files themselves
-        val paths = v2Main.fold(
-          logSegment.checkpoint.map(_.getPath.toString))(_ => sidecarPaths)
-        val fromParquet: Iterator[Action] =
-          if (paths.isEmpty) Iterator.empty
-          else if (driverReadableCheckpoint)
-            write.LocalParquet.read(spark, paths, Encs.stateAction)
-              .iterator.map(_.unwrap).filter(_ != null)
-          else spark.read.schema(enc.schema).parquet(paths: _*)
-            .as[Snapshot.StateAction]
-            .collect().iterator.map(_.unwrap).filter(_ != null)
         replay.append(cpVersion,
-          v2Main.fold(Iterator.empty: Iterator[Action])(_.actions.iterator)
-            ++ fromParquet)
+          v2Main.fold(Iterator.empty[Action])(_.actions.iterator) ++
+            readCheckpointParquet(Encs.stateAction).iterator.map(_.unwrap))
       }
       -1L
     }
@@ -342,7 +299,7 @@ class Snapshot(
 
   /** The active files, materialized on the driver. In distributed mode
     * this collects the DISTRIBUTED replay's result — callers that can
-    * stay distributed (scans) should use [[allFilesDistributed]]. */
+    * stay distributed use the accessors below. */
   lazy val allFiles: Seq[AddFile] = {
     filesMaterialized = true
     if (distributedState) allFilesDistributed.collect().toVector
@@ -378,12 +335,48 @@ class Snapshot(
       allFiles.iterator.flatMap(_.deletionVector).map(_.cardinality).sum
     }
 
-  /** Active files as a Dataset — the distributed face of the state, used
-    * for metadata queries and checkpoint writing at large file counts. */
-  def allFilesDS: Dataset[AddFile] = {
-    implicit val enc = Encs.addFile
-    spark.createDataset(allFiles)
+  // ------------------------------------------------ file-state accessors
+  // The only code that chooses between the driver list and the
+  // distributed Dataset. Callers state what they need; each accessor
+  // runs it where the state lives, and in distributed mode only the
+  // answer reaches the driver (never through `allFiles`).
+
+  /** Active files whose partition values and stats admit the filters
+    * (partition conjuncts over partition columns, data conjuncts over
+    * file stats). */
+  def filesMatching(partitionFilters: Seq[Expression],
+                    dataFilters: Seq[Expression] = Nil): Seq[AddFile] = {
+    val m = metadata
+    if (distributedState) read.FilePruning.prune(allFilesDistributed,
+      m.partitionSchema, partitionFilters, dataFilters, m.dataSchema)
+      .collect().toSeq
+    else read.FilePruning.pruneLocal(allFiles,
+      m.partitionSchema, partitionFilters, dataFilters, m.dataSchema)
   }
+
+  /** Active files satisfying `keep`, which must be serializable (in
+    * distributed mode it runs in a Spark job). */
+  def filesWhere(keep: AddFile => Boolean): Seq[AddFile] =
+    if (distributedState) allFilesDistributed.filter(keep).collect().toSeq
+    else allFiles.filter(keep)
+
+  /** Active files as a Dataset: the distributed replay past the state
+    * bound, the driver list otherwise. */
+  def allFilesDS: Dataset[AddFile] =
+    if (distributedState) allFilesDistributed
+    else spark.createDataset(allFiles)(Encs.addFile)
+
+  /** Active files carrying a deletion vector (filtered before the
+    * driver list becomes a Dataset). */
+  def dvFiles: Dataset[AddFile] =
+    if (distributedState) allFilesDistributed.filter(_.deletionVector.isDefined)
+    else spark.createDataset(
+      allFiles.filter(_.deletionVector.isDefined))(Encs.addFile)
+
+  /** The file state in the container it lives in, for consumers that
+    * serve both (a [[read.DeltaFileIndex]] over this snapshot). */
+  private[delta] def fileState: Either[Seq[AddFile], Dataset[AddFile]] =
+    if (distributedState) Right(allFilesDistributed) else Left(allFiles)
 
   private var cachedFilesDS: Option[Dataset[AddFile]] = None
 

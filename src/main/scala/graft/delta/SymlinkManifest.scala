@@ -50,6 +50,7 @@ object SymlinkManifest {
     val manifestRoot = new Path(deltaLog.dataPath, ManifestDirName)
     fs.delete(manifestRoot, true)
     writeManifests(spark, deltaLog, snapshot, partitionFilter = None)
+      .size.toLong
   }
 
   /** Post-commit incremental update: regenerate ONLY the partitions the
@@ -73,16 +74,16 @@ object SymlinkManifest {
     }.distinct
     if (touched.isEmpty) return 0L
     val touchedDirs = touched.map(pv => partitionDir(partCols, pv)).toSet
+    val written = writeManifests(spark, deltaLog, snapshot,
+      partitionFilter = Some(touchedDirs))
     // partitions emptied by this commit: drop their manifest directory
     val fs = deltaLog.dataPath.getFileSystem(deltaLog.hadoopConf)
     val manifestRoot = new Path(deltaLog.dataPath, ManifestDirName)
-    val live = activePartitionDirs(spark, snapshot, partCols)
-    touchedDirs.diff(live).foreach { dir =>
+    touchedDirs.diff(written).foreach { dir =>
       val p = if (dir.isEmpty) manifestRoot else new Path(manifestRoot, dir)
       fs.delete(p, true)
     }
-    writeManifests(spark, deltaLog, snapshot,
-      partitionFilter = Some(touchedDirs.intersect(live)))
+    written.size.toLong
   }
 
   /** The relative manifest directory for one partition-value map —
@@ -96,33 +97,18 @@ object SymlinkManifest {
         ExternalCatalogUtils.escapePathName(v)
     }.mkString("/")
 
-  private def activePartitionDirs(spark: SparkSession, snapshot: Snapshot,
-                                  partCols: Seq[String]): Set[String] = {
-    import spark.implicits._
-    if (partCols.isEmpty) {
-      if (snapshot.numOfFiles > 0) Set("") else Set.empty
-    } else if (snapshot.distributedState) {
-      snapshot.allFilesDistributed
-        .map(a => partitionDir(partCols, a.partitionValues))
-        .distinct().collect().toSet // bounded by partition count
-    } else {
-      snapshot.allFiles.map(a => partitionDir(partCols, a.partitionValues))
-        .toSet
-    }
-  }
-
-  /** Write one manifest per (selected) partition as a Spark job; file
-    * URIs are absolute and sorted for reproducibility. */
+  /** Write one manifest per (selected) partition that still has active
+    * files, as a Spark job; file URIs are absolute and sorted for
+    * reproducibility. Returns the partition directories written. */
   private def writeManifests(spark: SparkSession, deltaLog: DeltaLog,
                              snapshot: Snapshot,
-                             partitionFilter: Option[Set[String]]): Long = {
+                             partitionFilter: Option[Set[String]]): Set[String] = {
     import spark.implicits._
     val partCols = snapshot.metadata.partitionColumns
     val dataPathStr = deltaLog.dataPath.toString
     val sconf = new SerializableHadoopConf(deltaLog.hadoopConf)
 
-    val pairs = (if (snapshot.distributedState) snapshot.allFilesDistributed
-                 else spark.createDataset(snapshot.allFiles))
+    val pairs = snapshot.allFilesDS
       .map { a =>
         val abs = read.PartitionUtils.absolutePath(
           new Path(dataPathStr), a.path).toString
@@ -132,7 +118,7 @@ object SymlinkManifest {
       case Some(dirs) => pairs.filter(p => dirs.contains(p._1))
       case None => pairs
     }
-    selected.groupByKey(_._1).mapGroups { (dir, it) =>
+    val written = selected.groupByKey(_._1).mapGroups { (dir, it) =>
       val files = it.map(_._2).toArray.sorted
       val fs = new Path(dataPathStr).getFileSystem(sconf.value)
       val target = if (dir.isEmpty)
@@ -142,23 +128,18 @@ object SymlinkManifest {
       try out.write(files.mkString("", "\n", "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      1L
-    }.toDF("n").agg(org.apache.spark.sql.functions.sum("n"))
-      .collect().headOption.flatMap(r => Option(r.get(0)))
-      .map(_.asInstanceOf[Long]).getOrElse {
-        // emptied unpartitioned table: a reader must still find an
-        // (empty) manifest — both on full GENERATE and on the incremental
-        // path (whose partition filter is empty exactly when the commit
-        // emptied the table; leaving NO manifest would break symlink
-        // readers until a manual full GENERATE)
-        if (partCols.isEmpty) {
-          val fs = new Path(dataPathStr).getFileSystem(deltaLog.hadoopConf)
-          val out = fs.create(
-            new Path(s"$dataPathStr/$ManifestDirName/manifest"), true)
-          out.close()
-          1L
-        } else 0L
-      }
+      dir
+    }.collect().toSet // bounded by partition count
+    // emptied unpartitioned table: a reader must still find an (empty)
+    // manifest — both on full GENERATE and on the incremental path
+    // (leaving NO manifest would break symlink readers until a manual
+    // full GENERATE)
+    if (written.isEmpty && partCols.isEmpty) {
+      val fs = new Path(dataPathStr).getFileSystem(deltaLog.hadoopConf)
+      fs.create(new Path(s"$dataPathStr/$ManifestDirName/manifest"), true)
+        .close()
+      Set("")
+    } else written
   }
 
   private def checkSupported(snapshot: Snapshot): Unit = {
@@ -166,12 +147,7 @@ object SymlinkManifest {
         .getOrElse(ColumnMapping.DeltaModeKey, "none") == "none",
       "Cannot generate a symlink manifest for a column-mapping table: " +
         "external readers resolve columns by physical parquet name")
-    val shaded =
-      if (snapshot.distributedState)
-        !snapshot.allFilesDistributed
-          .filter(_.deletionVector.isDefined).isEmpty
-      else snapshot.allFiles.exists(_.deletionVector.isDefined)
-    require(!shaded,
+    require(snapshot.dvFiles.isEmpty,
       "Cannot generate a symlink manifest while files carry deletion " +
         "vectors: a manifest names whole files, so row-level deletes " +
         "would be resurrected. Run OPTIMIZE to purge the shades first")

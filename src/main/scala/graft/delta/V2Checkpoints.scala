@@ -37,9 +37,9 @@ case class CheckpointMetadata(
   *
   * Scale shape: the main file is sidecar-count-bounded when sidecars are
   * present (the spec keeps all file actions out of it), so the driver
-  * parse here is small; the sidecars themselves are only ever read as
-  * Spark parquet jobs through the existing light/full/distributed state
-  * paths, with the same column pruning as classic checkpoint parts. */
+  * parse here is small; the sidecars themselves are read through the
+  * same light/full/distributed state paths, with the same column pruning,
+  * as classic checkpoint parts. */
 object V2Checkpoints {
 
   /** Driver-parsed main file: its actions (non-file actions, plus inline
@@ -94,18 +94,11 @@ object V2Checkpoints {
         lines.flatMap(l => JsonCodec.mapper
           .readValue(l, classOf[SidecarEnvelope]).sidecar))
     } else {
-      implicit val enc = Encs.v2StateAction
-      // a main file is KB-sized metadata: on the local scheme read it
-      // driver-side (same requested-schema semantics) instead of paying
-      // a Spark job per read (r16, guide §1 profile)
-      val local = "file".equalsIgnoreCase(
-        Option(file.getPath.toUri.getScheme).getOrElse("file"))
-      val rows =
-        if (local && file.getLen <= write.LocalParquet.MaxDriverReadBytes)
-          write.LocalParquet.read(spark, Seq(file.getPath.toString), enc)
-        else spark.read.schema(enc.schema)
-          .parquet(file.getPath.toString)
-          .as[V2StateAction].collect().toVector
+      // a main file is KB-sized metadata: read driver-side where
+      // LocalParquet allows it, instead of paying a Spark job per read
+      val rows = write.LocalParquet.readArtifacts(spark,
+        file.getPath.getFileSystem(hadoopConf), Seq(file.getPath),
+        Some(file.getLen), Encs.v2StateAction)
       Main(
         rows.iterator.map(_.unwrap).filter(_ != null).toVector,
         rows.iterator.flatMap(_.sidecar).toVector)

@@ -48,9 +48,7 @@ class DeltaFileIndex private (
 
   def this(spark: SparkSession, snapshot: Snapshot) =
     this(spark, snapshot.deltaLog.dataPath, snapshot.metadata,
-      if (snapshot.distributedState) Right(snapshot.allFilesDistributed)
-      else Left(snapshot.allFiles),
-      Some(() => snapshot.sizeInBytes))
+      snapshot.fileState, Some(() => snapshot.sizeInBytes))
 
   override def rootPaths: Seq[Path] = Seq(dataPath)
 
@@ -81,9 +79,8 @@ class DeltaFileIndex private (
       GeneratedPartitionFilters.derive(metadata, dataFilters, spark)
     source match {
       case Left(files) =>
-        val partitionPruned = PartitionUtils.filterFileList(
-          partitionSchema, files, allPartFilters)
-        DataSkipping.filterFiles(partitionPruned, dataFilters, metadata.dataSchema)
+        FilePruning.pruneLocal(files, partitionSchema, allPartFilters,
+          dataFilters, metadata.dataSchema)
       case Right(ds) =>
         FilePruning.prune(ds, partitionSchema, allPartFilters, dataFilters,
           metadata.dataSchema).collect().toSeq

@@ -36,22 +36,10 @@ class DeltaScan(snapshot: Snapshot, filter: Option[Expression]) {
     GeneratedPartitionFilters.derive(snapshot.metadata, residualPredicates,
       snapshot.deltaLog.spark)
 
-  /** The active files surviving partition pruning. In distributed-state
-    * mode the pruning runs as a Spark job and only survivors are
-    * collected (never the full file list). */
+  /** The active files surviving partition pruning (data filters are not
+    * applied: the caller re-applies the residual). */
   def getFiles: Seq[AddFile] =
-    if (snapshot.distributedState) {
-      // dataFilters = Nil: getFiles' contract is partition pruning only
-      // (the caller re-applies the residual), same as the driver path
-      FilePruning.prune(snapshot.allFilesDistributed,
-        snapshot.metadata.partitionSchema,
-        pushedPredicates ++ derivedPredicates,
-        Nil, snapshot.metadata.dataSchema).collect().toSeq
-    } else {
-      PartitionUtils.filterFileList(
-        snapshot.metadata.partitionSchema, snapshot.allFiles,
-        pushedPredicates ++ derivedPredicates)
-    }
+    snapshot.filesMatching(pushedPredicates ++ derivedPredicates)
 }
 
 /** Assembles the snapshot's DataFrame through a [[DeltaFileIndex]]-backed
@@ -97,11 +85,7 @@ class DeltaScanBuilder(snapshot: Snapshot) {
     val spark = snapshot.spark
     import spark.implicits._
     val dataPathStr = snapshot.deltaLog.dataPath.toString
-    implicit val addEnc = Encs.addFile
-    val files: org.apache.spark.sql.Dataset[AddFile] =
-      if (snapshot.distributedState) snapshot.allFilesDistributed
-      else spark.createDataset(snapshot.allFiles)
-    val perFile = files.map { a =>
+    val perFile = snapshot.allFilesDS.map { a =>
       val file = PartitionUtils.inputFileName(
         new org.apache.hadoop.fs.Path(dataPathStr), a.path)
       (file, a.baseRowId, a.defaultRowCommitVersion)
@@ -142,13 +126,7 @@ class DeltaScanBuilder(snapshot: Snapshot) {
   }
 
   private def antiJoinDeletedRows(df: DataFrame): DataFrame = {
-    implicit val addEnc = Encs.addFile
-    val spark = snapshot.spark
-    val dvFiles: org.apache.spark.sql.Dataset[AddFile] =
-      if (snapshot.distributedState)
-        snapshot.allFilesDistributed.filter(_.deletionVector.isDefined)
-      else spark.createDataset(snapshot.allFiles.filter(_.deletionVector.isDefined))
-    DvFilter(df, dvFiles, snapshot.dvCardinality,
+    DvFilter(df, snapshot.dvFiles, snapshot.dvCardinality,
       snapshot.deltaLog.dataPath, snapshot.deltaLog.hadoopConf)
   }
 }

@@ -6,17 +6,29 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.delta.AddFile
 
-/** Partition pruning + stats skipping over a DISTRIBUTED file list.
+/** Partition pruning + stats skipping: the per-file pruning rules, for
+  * both homes of a file list.
   *
-  * The same conservative per-file evaluation as the driver-side path
-  * ([[PartitionUtils.filterFileList]] + [[DataSkipping.filterFiles]]),
-  * run as a `Dataset.filter` so that at large file counts the pruning
-  * itself is a Spark job and only the surviving files ever reach the
-  * driver. Catalyst expressions are bound on the driver and shipped in
-  * the closure (they are serializable; evaluation is interpreted —
-  * metadata-scale rows, not data-scale).
+  * [[pruneLocal]] prunes a driver list ([[PartitionUtils.filterFileList]]
+  * memoizes the partition predicate per distinct partition value, then
+  * [[DataSkipping.filterFiles]]). [[prune]] runs the same conservative
+  * per-file evaluation as a `Dataset.filter`, so that at large file
+  * counts the pruning itself is a Spark job and only the surviving files
+  * ever reach the driver. Catalyst expressions are bound on the driver
+  * and shipped in the closure (they are serializable; evaluation is
+  * interpreted — metadata-scale rows, not data-scale).
   */
 object FilePruning {
+
+  def pruneLocal(
+      files: Seq[AddFile],
+      partitionSchema: StructType,
+      partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression],
+      dataSchema: StructType): Seq[AddFile] =
+    DataSkipping.filterFiles(
+      PartitionUtils.filterFileList(partitionSchema, files, partitionFilters),
+      dataFilters, dataSchema)
 
   def prune(
       files: Dataset[AddFile],
@@ -30,7 +42,7 @@ object FilePruning {
 
   /** A serializable per-file predicate closing over bound expressions
     * and plain schemas only (no SparkSession, no FileIndex). */
-  def keepFile(
+  private def keepFile(
       partitionSchema: StructType,
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression],

@@ -89,52 +89,22 @@ class HadoopFileSystemLogStore extends LogStore {
     val temp = new Path(path.getParent,
       s".${path.getName}.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(temp)
-    var published = false
     try {
       lines.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
       out.close()
-      // LOCAL scheme: publish with link(2), not rename(2). Hadoop's
-      // local rename bottoms out in POSIX rename, which silently
-      // REPLACES an existing destination — so two PROCESSES that both
-      // pass the exists() pre-check can both "successfully" rename and
-      // one commit is clobbered (CrossProcessCommitSpec caught exactly
-      // this: 24 racing commits, version 23). createLink is the atomic
-      // no-overwrite primitive: exactly one winner per destination,
-      // EEXIST for the loser, content fully visible at publish (the
-      // link IS the written temp's inode).
-      val local = "file".equalsIgnoreCase(
-        Option(path.toUri.getScheme).getOrElse(fs.getUri.getScheme))
-      if (local) {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(path.toUri.getPath),
-            java.nio.file.Paths.get(temp.toUri.getPath))
-          published = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            throw new FileAlreadyExistsException(path.toString)
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            // no hard links on this mount: fall through to rename (the
-            // single-process exists() pre-check still holds)
-        }
-      }
-      if (!published) {
-        // HDFS: rename is atomic AND no-overwrite by contract — the
-        // false return with the destination present is a concurrent
-        // loss. (abfs/other rename-atomic schemes route here too.)
-        if (fs.rename(temp, path)) {
-          published = true
+      // HDFS: rename is atomic AND no-overwrite by contract — the false
+      // return with the destination present is a concurrent loss.
+      // (abfs/other rename-atomic schemes route here too; the local
+      // scheme never reaches this point, see writeLocalNio.)
+      if (!fs.rename(temp, path)) {
+        if (fs.exists(path)) {
+          throw new FileAlreadyExistsException(path.toString)
         } else {
-          if (fs.exists(path)) {
-            throw new FileAlreadyExistsException(path.toString)
-          } else {
-            throw new java.io.IOException(s"rename $temp -> $path failed")
-          }
+          throw new java.io.IOException(s"rename $temp -> $path failed")
         }
       }
     } finally {
-      // after a link publish the temp is a second name for the same
-      // inode — always drop it; on any failure drop the orphan
+      // on any failure drop the orphan (a successful rename left none)
       fs.delete(temp, false)
     }
   }
@@ -188,8 +158,7 @@ class ObjectStoreLogStore extends LogStore {
             fs.exists(path))) {
         throw new FileAlreadyExistsException(path.toString)
       }
-      val scheme = Option(path.toUri.getScheme).getOrElse("file")
-      if (!overwrite && scheme == "file") {
+      if (!overwrite && LogStore.isLocalScheme(path, fs)) {
         // the cache+exists gate above is atomic only within this JVM;
         // on a LOCAL filesystem RawLocalFileSystem.create(overwrite =
         // false) is itself check-then-act, so two PROCESSES could both
@@ -304,7 +273,12 @@ object LogStore {
     }
   }
 
-  private[storage] def isLocalScheme(path: Path, fs: FileSystem): Boolean =
+  /** The engine's one local-scheme predicate: whether `path` lives on
+    * the local filesystem, so java.nio may stand in for Hadoop IO. A
+    * scheme-less path resolves against `fs` (what `path.getFileSystem`
+    * returned: the default FS), never against a hard-coded `file` — under
+    * a non-local `fs.defaultFS`, `/tmp/x` is not local. */
+  private[delta] def isLocalScheme(path: Path, fs: FileSystem): Boolean =
     "file".equalsIgnoreCase(
       Option(path.toUri.getScheme).getOrElse(fs.getUri.getScheme))
 
@@ -345,8 +319,13 @@ object LogStore {
         Files.move(temp, dest, StandardCopyOption.REPLACE_EXISTING,
           StandardCopyOption.ATOMIC_MOVE)
       } else {
-        // link(2): atomic no-overwrite publish, EEXIST names the loser
-        // (same primitive and reasoning as the Hadoop route below)
+        // link(2), not rename(2): POSIX rename silently REPLACES an
+        // existing destination, so two PROCESSES that both pass the
+        // exists() pre-check could both "succeed" and one commit is
+        // clobbered (CrossProcessCommitSpec: 24 racing commits, version
+        // 23). createLink is the atomic no-overwrite primitive: exactly
+        // one winner, EEXIST for the loser, content fully visible at
+        // publish (the link IS the written temp's inode).
         try Files.createLink(dest, temp)
         catch {
           case _: java.nio.file.FileAlreadyExistsException =>

@@ -1118,16 +1118,8 @@ class DeltaSource(
     val base = Shims.relationToDataFrame(spark, relation, isStreaming = true)
     val undeleted =
       if (snap.dvCardinality == 0L) base
-      else {
-        implicit val enc = Encs.addFile
-        val dvFiles =
-          if (snap.distributedState)
-            snap.allFilesDistributed.filter(_.deletionVector.isDefined)
-          else spark.createDataset(
-            snap.allFiles.filter(_.deletionVector.isDefined))
-        graft.delta.read.DvFilter(base, dvFiles, snap.dvCardinality,
-          deltaLog.dataPath, deltaLog.hadoopConf)
-      }
+      else graft.delta.read.DvFilter(base, snap.dvFiles, snap.dvCardinality,
+        deltaLog.dataPath, deltaLog.hadoopConf)
     undeleted.select(metadata.schema.fieldNames
       .map(org.apache.spark.sql.functions.col).toSeq: _*)
   }

@@ -92,16 +92,7 @@ class OptimisticTransaction(
     // a data-column conjunct can match rows in ANY file — without per-file
     // stats we must be conservative and treat it as a whole-table read
     if (data.nonEmpty && meta.isEmpty) readTheWholeTable = true
-    val matched =
-      if (snapshot.distributedState) {
-        // prune as a Spark job; only the read set reaches the driver
-        graft.delta.read.FilePruning.prune(snapshot.allFilesDistributed,
-          snapshot.metadata.partitionSchema, meta, Nil,
-          snapshot.metadata.dataSchema).collect().toSeq
-      } else {
-        PartitionUtils.filterFileList(
-          snapshot.metadata.partitionSchema, snapshot.allFiles, meta)
-      }
+    val matched = snapshot.filesMatching(meta)
     readPredicates ++= meta
     readFiles ++= matched.map(_.path)
     matched
@@ -806,15 +797,10 @@ class OptimisticTransaction(
       if (version != 0 && version % deltaLog.checkpointInterval == 0) {
         val snap = deltaLog.update()
         val parts = DeltaConfigs.CHECKPOINT_PARTS.fromMetadata(deltaLog.metadata)
-        // beyond the driver-state bound the file list must flow checkpoint →
-        // checkpoint as a Spark job, never through the driver
-        if (snap.distributedState) Checkpoints.writeCheckpointDistributed(snap, parts)
-        else {
-          Checkpoints.writeCheckpoint(snap, parts)
-          // re-seed the checksum chain from the state the checkpoint just
-          // materialized (heals gaps left by foreign commits without crc)
-          Checksums.writeFromState(snap)
-        }
+        Checkpoints.writeCheckpoint(snap, parts)
+        // re-seed the checksum chain from the totals the checkpoint just
+        // computed (heals gaps left by foreign commits without crc)
+        Checksums.writeFromState(snap)
         if (deltaLog.enableExpiredLogCleanup) deltaLog.cleanUpExpiredLogs()
       }
     } catch {

@@ -498,8 +498,7 @@ object DeltaWriter {
     // local scheme: walk with java.nio — Hadoop's checksummed local FS
     // materializes permission info per listed file by fork+exec'ing `ls`
     // when the native lib is absent (profiled ~140 ms per commit here)
-    if ("file".equalsIgnoreCase(
-        Option(dir.toUri.getScheme).getOrElse(fs.getUri.getScheme))) {
+    if (graft.delta.storage.LogStore.isLocalScheme(dir, fs)) {
       import java.nio.file.{Files, Paths}
       val root = Paths.get(dir.toUri.getPath)
       // an EMPTY write under the direct-commit protocol creates no batch

@@ -1,15 +1,16 @@
 package graft.delta.write
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 
-/** Driver-side parquet writer for DRIVER-SMALL, already-materialized
-  * action sets (checkpoint main files, small checkpoint parts, sidecars).
+/** Driver-side parquet IO for DRIVER-SMALL log artifacts (checkpoint
+  * main files, small checkpoint parts, sidecars).
   *
   * Rationale (guide §1 profile, r16): a cadence checkpoint of a small
   * table writes a handful of KB-sized parquet files, but doing it through
@@ -17,14 +18,15 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
   * the output committer's temp-dir/rename protocol, and the checksummed
   * local FS's fork+exec chmod + .crc sidecars; measured 0.3-0.9 s per
   * checkpoint on an idle host, ~0 data. The rows are ALREADY on the
-  * driver in these paths (the same driver-small precondition the
-  * driver-local vacuum uses), so write them with parquet's own writer
+  * driver in these paths, so write them with parquet's own writer
   * through java.nio — same bytes a one-task Spark job would produce
   * (same WriteSupport, same schema, same codec), none of the scaffolding.
+  * Reads mirror it: a KB-sized checkpoint read costs a job per snapshot
+  * bootstrap otherwise.
   *
-  * Distributed-state paths never route here: callers guard on
-  * `!snapshot.distributedState` and a row-count bound, so at scale the
-  * Spark-job path runs unchanged. */
+  * [[onDriver]] is the only place that decides "local and small enough"
+  * and [[readArtifacts]] the only reader that acts on it; at scale, or
+  * off the local scheme, the Spark-job path runs unchanged. */
 object LocalParquet {
 
   /** Rows a checkpoint artifact may be asked to hold driver-side; above
@@ -61,10 +63,12 @@ object LocalParquet {
       sqlc.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE).toString)
     conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
       sqlc.getConf(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).toString)
+    // resolve the session codec exactly as the job path does: short
+    // names such as `none` and `lz4raw` are legal there but are not
+    // CompressionCodecName constants
     val codec = CompressionCodecName.fromConf(
-      spark.sessionState.conf
-        .getConfString("spark.sql.parquet.compression.codec", "snappy")
-        .toUpperCase(java.util.Locale.ROOT))
+      new ParquetOptions(Map.empty[String, String], sqlc)
+        .compressionCodecClassName)
     val nioPath = java.nio.file.Paths.get(
       if (path.startsWith("file:")) new java.net.URI(path).getPath else path)
     val parent = nioPath.getParent
@@ -101,14 +105,38 @@ object LocalParquet {
     * one reads faster WITH 32 cores. */
   val MaxDriverReadBytes: Long = 16L * 1024 * 1024
 
+  /** Whether an artifact of `size` (rows or bytes, held against `max`)
+    * at `paths` is read or written on the driver: its size is known and
+    * at most `max`, and every path is on the local scheme. */
+  def onDriver(paths: Seq[Path], fs: FileSystem, size: Option[Long],
+               max: Long): Boolean =
+    size.exists(_ <= max) &&
+      paths.forall(graft.delta.storage.LogStore.isLocalScheme(_, fs))
+
+  /** Rows of small log artifacts as `T`, with the semantics of
+    * `spark.read.schema(enc.schema).parquet(paths)` minus the rows whose
+    * every requested column is null. `bytes` is the files' total size
+    * (None when unknown). Read on the driver when [[onDriver]] allows it,
+    * else by a Spark job that drops the all-null rows before they ship:
+    * a large checkpoint read through a narrow schema never sends the
+    * other actions' rows to the driver. */
+  def readArtifacts[T](spark: SparkSession, fs: FileSystem, paths: Seq[Path],
+                       bytes: Option[Long], enc: Encoder[T]): Vector[T] =
+    if (paths.isEmpty) Vector.empty
+    else if (onDriver(paths, fs, bytes, MaxDriverReadBytes)) read(spark, paths, enc)
+    else spark.read.schema(enc.schema).parquet(paths.map(_.toString): _*)
+      .where(enc.schema.fieldNames.map(c => s"`$c` IS NOT NULL").mkString(" OR "))
+      .as[T](enc).collect().toVector
+
   /** Driver-side read of small local parquet files as `T`, decoding with
     * the same ReadSupport/schema-clipping Spark's non-vectorized reader
     * uses (`enc.schema` plays the requested schema: missing columns null-
-    * fill, extra columns prune at the parquet layer — the exact semantics
-    * of `spark.read.schema(enc.schema).parquet(...)`). Caveat: the
-    * plain-constructor ReadSupport performs no datetime rebase — callers
-    * here read ACTION schemas (long/string/bool/struct/map only). */
-  def read[T](spark: SparkSession, paths: Seq[String], enc: Encoder[T]): Vector[T] = {
+    * fill, extra columns prune at the parquet layer). All-null rows are
+    * dropped, as on the job path. Caveat: the plain-constructor
+    * ReadSupport performs no datetime rebase — callers here read ACTION
+    * schemas (long/string/bool/struct/map only). */
+  private def read[T](spark: SparkSession, paths: Seq[Path],
+                      enc: Encoder[T]): Vector[T] = {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
     val schema = enc.schema
     val conf = spark.sessionState.newHadoopConf()
@@ -131,15 +159,14 @@ object LocalParquet {
       .resolveAndBind().createDeserializer()
     val out = Vector.newBuilder[T]
     paths.foreach { p =>
-      val nioPath = java.nio.file.Paths.get(
-        if (p.startsWith("file:")) new java.net.URI(p).getPath else p)
+      val nioPath = java.nio.file.Paths.get(p.toUri.getPath)
       val reader = new RowReadBuilder(
         new org.apache.parquet.io.LocalInputFile(nioPath))
         .withConf(conf).build()
       try {
         var row = reader.read()
         while (row != null) {
-          out += deser(row)
+          if ((0 until row.numFields).exists(!row.isNullAt(_))) out += deser(row)
           row = reader.read()
         }
       } finally reader.close()

@@ -283,24 +283,15 @@ final class MergeBuilder private[delta] (
     val candidateFiles: Option[Seq[AddFile]] =
       if (metaC.nonEmpty) {
         // narrow read tracking + partition pruning; stats skip survivors
-        val matched = txn.markFilesAsRead(targetPred.get)
-        val keep = read.FilePruning.keepFile(
-          metadata.partitionSchema, derivedC, dataC, metadata.dataSchema)
-        Some(matched.filter(keep))
+        Some(read.FilePruning.pruneLocal(txn.markFilesAsRead(targetPred.get),
+          metadata.partitionSchema, derivedC, dataC, metadata.dataSchema))
       } else if (dataC.nonEmpty) {
         // no partition conjunct: conflict tracking stays whole-table
         // (a concurrent append could add matching rows anywhere), but
         // stats still bound the SCAN — pruning runs where the file list
         // lives and only survivors reach the driver
         txn.readWholeTable()
-        val survivors =
-          if (snapshot.distributedState)
-            read.FilePruning.prune(snapshot.allFilesDistributed,
-              metadata.partitionSchema, derivedC, dataC, metadata.dataSchema)
-              .collect().toSeq
-          else snapshot.allFiles.filter(read.FilePruning.keepFile(
-            metadata.partitionSchema, derivedC, dataC, metadata.dataSchema))
-        Some(survivors)
+        Some(snapshot.filesMatching(derivedC, dataC))
       } else {
         txn.readWholeTable() // merge reads target rows by data condition
         None
@@ -360,27 +351,17 @@ final class MergeBuilder private[delta] (
     // AddFile side the same way or encoded paths silently never match.
     val matchedFileNames = touched.map(_.getAs[String]("__file")).toSet
     // Resolve the (file-count-bounded) touched-name set against the file
-    // list WHERE IT LIVES: in distributed-state mode that's a Dataset
-    // filter collecting only the touched files — a 3-file merge on a
-    // million-file table never materializes the full state on the driver.
-    val matchedFiles: Seq[AddFile] = candidateFiles match {
-      case Some(cands) =>
-        // the touched set is a subset of the (already driver-resident)
-        // candidate files — no second pass over the state
-        cands.filter(f => matchedFileNames.contains(
-          read.PartitionUtils.inputFileName(deltaLog.dataPath, f.path)))
-      case None if snapshot.distributedState =>
-        val names = matchedFileNames
-        val dataPathStr = deltaLog.dataPath.toString
-        snapshot.allFilesDistributed.filter { f =>
-          names.contains(read.PartitionUtils.inputFileName(
-            new org.apache.hadoop.fs.Path(dataPathStr), f.path))
-        }.collect().toSeq
-      case None =>
-        snapshot.allFiles.filter { f =>
-          matchedFileNames.contains(
-            read.PartitionUtils.inputFileName(deltaLog.dataPath, f.path))
-        }
+    // list WHERE IT LIVES: a 3-file merge on a million-file table never
+    // materializes the full state on the driver.
+    val matchedFiles: Seq[AddFile] = {
+      val names = matchedFileNames
+      val dataPathStr = deltaLog.dataPath.toString
+      val touched: AddFile => Boolean = f => names.contains(
+        read.PartitionUtils.inputFileName(
+          new org.apache.hadoop.fs.Path(dataPathStr), f.path))
+      // the touched set is a subset of the (already driver-resident)
+      // candidate files — no second pass over the state
+      candidateFiles.fold(snapshot.filesWhere(touched))(_.filter(touched))
     }
 
     // files that may hold NOT-MATCHED-BY-SOURCE rows the clauses can
@@ -391,22 +372,14 @@ final class MergeBuilder private[delta] (
       if (bySourceClauses.isEmpty) Nil
       else {
         val conds = bySourceClauses.map(_.cond)
-        if (conds.exists(_.isEmpty)) {
-          if (snapshot.distributedState)
-            snapshot.allFilesDistributed.collect().toSeq
-          else snapshot.allFiles
-        } else {
+        if (conds.exists(_.isEmpty)) snapshot.filesWhere(_ => true)
+        else {
           val resolved = read.PartitionUtils.resolveFilter(spark, schema,
             stripTargetAlias(conds.flatten.reduce(_ || _)))
           val (m0, d) = read.PartitionUtils.splitMetadataAndDataPredicates(
             resolved, metadata.partitionColumns)
-          val m = m0 ++ read.GeneratedPartitionFilters.derive(metadata, d, spark)
-          if (snapshot.distributedState)
-            read.FilePruning.prune(snapshot.allFilesDistributed,
-              metadata.partitionSchema, m, d, metadata.dataSchema)
-              .collect().toSeq
-          else snapshot.allFiles.filter(read.FilePruning.keepFile(
-            metadata.partitionSchema, m, d, metadata.dataSchema))
+          snapshot.filesMatching(
+            m0 ++ read.GeneratedPartitionFilters.derive(metadata, d, spark), d)
         }
       }
     // the files the rewrite must re-emit: match-touched files (only when

@@ -47,11 +47,11 @@ object StatsCollector {
       // LocalFileSystem, which opens and verifies the .crc sidecar on
       // every footer read (the write path's recurring per-commit driver
       // cost; same bypass the log store uses)
-      val uri = path.toUri
       val input: org.apache.parquet.io.InputFile =
-        if (uri.getScheme == null || uri.getScheme == "file")
+        if (graft.delta.storage.LogStore.isLocalScheme(
+            path, path.getFileSystem(conf)))
           new org.apache.parquet.io.LocalInputFile(
-            java.nio.file.Paths.get(uri.getPath))
+            java.nio.file.Paths.get(path.toUri.getPath))
         else HadoopInputFile.fromPath(path, conf)
       val reader = ParquetFileReader.open(input)
       try Some(fromFooter(reader, dataSchema, phys, maxCols))

@@ -83,6 +83,28 @@ class CheckpointAndStoreSpec extends SparkSpec {
     }
   }
 
+  test("a driver-small checkpoint written under codec `none` round-trips") {
+    withTempDir { dir =>
+      DeltaTable.write((1 to 10).toDF("v"), dir)
+      DeltaTable.write((11 to 20).toDF("v"), dir)
+      val log = DeltaLog.forTable(spark, dir)
+      // `none` is a legal session value but not a CompressionCodecName
+      spark.conf.set("spark.sql.parquet.compression.codec", "none")
+      try Checkpoints.writeCheckpoint(log.update())
+      finally spark.conf.unset("spark.sql.parquet.compression.codec")
+      val cp = FileNames.checkpointFileSingular(log.logPath, 1)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(cp, log.hadoopConf))
+      try assert(reader.getFooter.getBlocks.get(0).getColumns.get(0)
+        .getCodec.name == "UNCOMPRESSED")
+      finally reader.close()
+      DeltaLog.clearCache()
+      val after = DeltaLog.forTable(spark, dir).update()
+      assert(after.logSegment.checkpointVersion.contains(1L))
+      assert(after.toDF.count() == 20)
+    }
+  }
+
   test("an incomplete multi-part checkpoint is ignored") {
     withTempDir { dir =>
       DeltaTable.write((1 to 10).toDF("v"), dir)

@@ -15,6 +15,34 @@ import graft.SparkSpec
 class DistributedStateSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `f`'s result and the number of Spark jobs it launched. Listener
+    * events arrive asynchronously but in order, so a marker job run
+    * afterwards flushes them: once its start is seen, every earlier
+    * job's start has been counted. */
+  private def jobsLaunchedBy[T](f: => T): (T, Int) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setJobGroup("jobs-marker", "flush the listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("jobs-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("jobs-marker"), "listener bus did not drain")
+      (out, groups.asScala.count(_ != "jobs-marker"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Commit `n` synthetic AddFiles (log-only; no parquet behind them) in
     * partitions other than the real one — if a scan ever touches them,
     * the read fails loudly on the missing files. */
@@ -349,12 +377,37 @@ class DistributedStateSpec extends SparkSpec {
         DeltaTable.forPath(spark, dir).toDF
           .select($"v", $"g").as[(Int, String)].collect().toSet
       }
+      // a partition filter (drops g3) plus a stats filter (drops the
+      // single-row v > 100 appends): the same answers in both modes, and
+      // a cold driver-mode listing launches no Spark job
+      def listings() = {
+        DeltaLog.clearCache()
+        val snap = DeltaLog.forTable(spark, dir).update()
+        val cond = read.PartitionUtils.resolveFilter(spark,
+          snap.metadata.schema, $"g" =!= "g3" && $"v" < 50)
+        val (part, data) = read.PartitionUtils
+          .splitMetadataAndDataPredicates(cond, snap.metadata.partitionColumns)
+        val ((matching, scanned), jobs) = jobsLaunchedBy((
+          snap.filesMatching(part, data).map(_.path).toSet,
+          new read.DeltaScan(snap, Some(cond)).getFiles.map(_.path).toSet))
+        val detail = DeltaTable.forPath(spark, dir).detail()
+          .select("num_files", "size_in_bytes").as[(Long, Long)].head()
+        (matching, scanned, detail, jobs)
+      }
       val driverMode = readAll()
+      val (dMatching, dScanned, dDetail, dJobs) = listings()
+      assert(dJobs == 0, s"driver-mode listing launched $dJobs Spark job(s)")
+      assert(dMatching.nonEmpty && dMatching.size < dScanned.size)
+      assert(dMatching.subsetOf(dScanned))
       spark.conf.set(Snapshot.DriverStateMaxBytesKey, "1")
       try {
         val distributedMode = readAll()
         assert(DeltaLog.forTable(spark, dir).update().distributedState)
         assert(distributedMode == driverMode)
+        val (matching, scanned, detail, _) = listings()
+        assert(matching == dMatching)
+        assert(scanned == dScanned)
+        assert(detail == dDetail)
         // a DML rewrite in distributed mode stays correct
         DeltaTable.forPath(spark, dir).deleteWhere($"g" === "g2")
         val afterDelete = readAll()
