@@ -34,7 +34,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(_ => GraftExtensions.RouteDeltaDeletes)
     ext.injectResolutionRule(_ => GraftExtensions.RouteDeltaUpdates)
     ext.injectResolutionRule(_ => GraftExtensions.RouteDeltaMerges)
-    ext.injectResolutionRule(spark => new GraftExtensions.ResolveGraftCatalogReads(spark))
+    ext.injectResolutionRule(_ => GraftExtensions.ResolveGraftCatalogReads)
+    ext.injectResolutionRule(_ => GraftExtensions.FilterDeletedRows)
     ext.injectOptimizerRule(_ => GraftExtensions.MetadataOnlyCount)
     // extension grammar: OPTIMIZE [ZORDER BY] / VACUUM statements
     ext.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))
@@ -177,7 +178,7 @@ object GraftExtensions {
     * LogicalRelation — same DeltaFileIndex pruning as path-based reads —
     * reusing the V2 relation's output attributes so references upstream
     * stay bound. Writes stay on the V2 path (V1_BATCH_WRITE fallback). */
-  class ResolveGraftCatalogReads(spark: org.apache.spark.sql.SparkSession)
+  object ResolveGraftCatalogReads
     extends org.apache.spark.sql.catalyst.rules.Rule[
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -197,10 +198,40 @@ object GraftExtensions {
             if dsv2.table.isInstanceOf[graft.sql.GraftTable] &&
               !writeTargets.exists(_ eq dsv2) =>
           val t = dsv2.table.asInstanceOf[graft.sql.GraftTable]
-          LogicalRelation(t.v1Relation(spark), dsv2.output, None,
+          LogicalRelation(t.v1Relation, dsv2.output, None,
             isStreaming = false, stream = None)
       }
     }
+  }
+
+  /** SQL and `format("graft-delta")` batch reads of a table with deletion
+    * vectors: each READ of an [[graft.delta.read.InsertableDeltaRelation]]
+    * becomes `Project(lr.output, <lr minus its DV-hidden rows>)`, the
+    * filter coming from [[graft.delta.read.LiveRows]] like every other
+    * scan's. `InsertIntoStatement.table` is not a child, so insert
+    * targets stay bare; DML routing finds the relation among the leaves.
+    * A DV-free snapshot keeps the bare relation. The wrapped relation is
+    * tagged so this rule (and the nested analysis that builds the
+    * filter) never wraps it twice. */
+  object FilterDeletedRows
+    extends org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import graft.delta.read.InsertableDeltaRelation
+
+    private val Filtered = TreeNodeTag[Unit]("graft.dvFiltered")
+
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      plan.resolveOperatorsUp {
+        case lr @ LogicalRelation(rel: InsertableDeltaRelation, _, _, false, _)
+            if lr.getTagValue(Filtered).isEmpty =>
+          // tag a copy: `lr` may be shared with plans analyzed elsewhere
+          val marked = lr.copy()
+          marked.setTagValue(Filtered, ())
+          graft.delta.read.LiveRows.filterSqlRead(marked, rel)
+      }
   }
 
   /** `COUNT(*)`-only aggregates over an UNFILTERED, unshaded Delta scan

@@ -607,9 +607,6 @@ class DeltaLog private (
   }
 
   // ------------------------------------------------------------- cleanup (M14)
-  /** Delete commit/checkpoint files older than the retention window that
-    * precede a newer checkpoint (ref MetadataCleanup.scala:32-97; day
-    * truncation matches the reference). */
   /** WRITE a log compaction file `{start}.{end}.compacted.json`
     * (PROTOCOL.md "Log Compaction Files"): the newest-wins reconciliation
     * of commits start..end, readable by this engine (and by delta-spark)
@@ -681,6 +678,9 @@ class DeltaLog private (
     target
   }
 
+  /** Delete commit/checkpoint files older than the retention window that
+    * precede a newer checkpoint (ref MetadataCleanup.scala:32-97; day
+    * truncation matches the reference). */
   def cleanUpExpiredLogs(): Int = {
     val latestCheckpoint = Checkpoints.lastCheckpoint(this).map(_.version)
       .getOrElse(return 0)

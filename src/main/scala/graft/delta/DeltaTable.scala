@@ -229,19 +229,8 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     transaction.markFilesAsRead(condition)
     if (matched.isEmpty) return snapshot.version
 
-    val index = new read.DeltaFileIndex(spark, deltaLog.dataPath, metadata, matched)
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = metadata.partitionSchema,
-      dataSchema = metadata.dataSchema,
-      bucketSpec = None,
-      fileFormat = new read.GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-      options = Map.empty)(spark)
-    val base = read.DvFilter.forFiles(spark.baseRelationToDataFrame(relation),
-      matched, deltaLog.dataPath, deltaLog.hadoopConf)
-    val hits = base
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__pos", col("_metadata.row_index"))
+    val hits = read.LiveRows.files(deltaLog, metadata, matched)(
+        extra = write.DvShade.Positions)
       // a plain filter already excludes null-evaluating rows (Filter
       // keeps only TRUE); the old coalesce(cond, false) wrapper blocked
       // parquet pushdown of the whole predicate — the position-discovery
@@ -342,19 +331,9 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     transaction.markFilesAsRead(condition)
     if (matched.isEmpty) return snapshot.version
 
-    val index = new read.DeltaFileIndex(spark, deltaLog.dataPath, metadata, matched)
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = metadata.partitionSchema,
-      dataSchema = metadata.dataSchema,
-      bucketSpec = None,
-      fileFormat = new read.GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-      options = Map.empty)(spark)
     // live rows only (through any existing shade), with positions
-    val hits = read.DvFilter.forFiles(spark.baseRelationToDataFrame(relation),
-        matched, deltaLog.dataPath, deltaLog.hadoopConf)
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__pos", col("_metadata.row_index"))
+    val hits = read.LiveRows.files(deltaLog, metadata, matched)(
+        extra = write.DvShade.Positions)
       // plain filter: null-evaluating rows are excluded either way, and
       // the bare predicate pushes down to parquet (see delete)
       .filter(condition)
@@ -429,18 +408,13 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
         cdcFiles ++= c
         derived ++= d
       }
-    read.CdfRelation.frame(spark, deltaLog, metadata, cdcFiles, derived,
+    read.CdfRelation.frame(deltaLog, metadata, cdcFiles, derived,
       streaming = false).getOrElse {
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         read.CdfRelation.cdfSchema(metadata))
     }
   }
 
-  /** Shared rewrite-DML machinery: select the files whose partition
-    * values or stats admit rows matching `condition`, apply `transform`
-    * to their contents, write replacements and commit adds+removes as one
-    * data-changing transaction (Serializable — conflicts with concurrent
-    * writers are detected through the read predicate). */
   /** DML candidate selection: the files whose partition values / stats
     * admit a match (they become the commit's RemoveFiles). */
   private def candidateFiles(
@@ -457,6 +431,11 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     snapshot.filesMatching(metaPreds, dataPreds)
   }
 
+  /** Shared rewrite-DML machinery: select the files whose partition
+    * values or stats admit rows matching `condition`, apply `transform`
+    * to their contents, write replacements and commit adds+removes as one
+    * data-changing transaction (Serializable — conflicts with concurrent
+    * writers are detected through the read predicate). */
   private def rewriteMatchedFiles(
       transaction: graft.delta.txn.OptimisticTransaction,
       condition: Column,
@@ -470,20 +449,9 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     transaction.markFilesAsRead(condition)
     if (matched.isEmpty) return snapshot.version
 
-    val index = new read.DeltaFileIndex(spark, deltaLog.dataPath, metadata, matched)
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = metadata.partitionSchema,
-      dataSchema = metadata.dataSchema,
-      bucketSpec = None,
-      fileFormat = new read.GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-      options = Map.empty)(spark)
     // read THROUGH any deletion vectors: a rewrite that re-materialized
     // shaded rows would resurrect them
-    val current = read.DvFilter.forFiles(spark.baseRelationToDataFrame(relation),
-        matched, deltaLog.dataPath, deltaLog.hadoopConf)
-      .select(metadata.schema.fieldNames.map(org.apache.spark.sql.functions.col)
-        .toIndexedSeq: _*)
+    val current = read.LiveRows.files(deltaLog, metadata, matched)()
     val rewritten = transform(current)
 
     val adds = write.DeltaWriter.writeFiles(
@@ -504,32 +472,6 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       operationParameters = Map("predicate" -> Seq(resolved.sql)))
   }
 
-  /** Physically delete data files no longer referenced by the latest
-    * snapshot, once their tombstones have aged past `retentionMillis`
-    * (default: the table's deletedFileRetentionDuration). Files still
-    * named by a younger tombstone are kept so time travel within the
-    * retention window — and any reader pinned to an old snapshot — stays
-    * intact. Returns the number of deleted files.
-    *
-    * Scale shape: the recursive table listing runs as a Spark job (one
-    * task per top-level directory — on a 100 TB table a driver loop over
-    * `fs.listFiles(recursive)` takes hours), candidates anti-join against
-    * the (possibly distributed) active-file set, and the deletes
-    * themselves run in tasks.
-    *
-    * `lite = true` (delta-spark 4.0's `VACUUM … LITE`) skips the table
-    * listing entirely: candidates come from the LOG's remove actions —
-    * O(recent churn) instead of O(table files), the steady-state shape a
-    * 100 TB table wants between occasional full vacuums. The tradeoff is
-    * inherent to the mode: files the log never tracked (a crashed
-    * writer's orphans) are only ever cleaned by a FULL vacuum. LITE runs
-    * record `VACUUM START`/`VACUUM END` commits (delta-spark's vacuum
-    * logging; opt-in for full vacuums via
-    * `spark.graft.vacuum.logging.enabled`), and the next LITE run uses
-    * the last `VACUUM END`'s recorded cutoff to skip commits whose
-    * removes are provably already deleted — a remove committed before
-    * the previous cutoff carries `deletionTimestamp <= commit time <
-    * cutoff`, so it was eligible then. */
   /** `FSCK REPAIR TABLE` (delta-spark's surface): drop table entries
     * whose physical data file has VANISHED out-of-band (manual deletion,
     * a too-aggressive external cleanup, object-store lifecycle rules) so
@@ -579,6 +521,32 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     missing.length.toLong
   }
 
+  /** Physically delete data files no longer referenced by the latest
+    * snapshot, once their tombstones have aged past `retentionMillis`
+    * (default: the table's deletedFileRetentionDuration). Files still
+    * named by a younger tombstone are kept so time travel within the
+    * retention window — and any reader pinned to an old snapshot — stays
+    * intact. Returns the number of deleted files.
+    *
+    * Scale shape: the recursive table listing runs as a Spark job (one
+    * task per top-level directory — on a 100 TB table a driver loop over
+    * `fs.listFiles(recursive)` takes hours), candidates anti-join against
+    * the (possibly distributed) active-file set, and the deletes
+    * themselves run in tasks.
+    *
+    * `lite = true` (delta-spark 4.0's `VACUUM … LITE`) skips the table
+    * listing entirely: candidates come from the LOG's remove actions —
+    * O(recent churn) instead of O(table files), the steady-state shape a
+    * 100 TB table wants between occasional full vacuums. The tradeoff is
+    * inherent to the mode: files the log never tracked (a crashed
+    * writer's orphans) are only ever cleaned by a FULL vacuum. LITE runs
+    * record `VACUUM START`/`VACUUM END` commits (delta-spark's vacuum
+    * logging; opt-in for full vacuums via
+    * `spark.graft.vacuum.logging.enabled`), and the next LITE run uses
+    * the last `VACUUM END`'s recorded cutoff to skip commits whose
+    * removes are provably already deleted — a remove committed before
+    * the previous cutoff carries `deletionTimestamp <= commit time <
+    * cutoff`, so it was eligible then. */
   def vacuum(retentionMillis: Option[Long] = None,
              dryRun: Boolean = false,
              lite: Boolean = false): Int = {
@@ -1123,21 +1091,10 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
           if (files.isEmpty) None
           else {
             import org.apache.spark.sql.functions.{col, lit}
-            val index = new read.DeltaFileIndex(spark, deltaLog.dataPath, m, files)
-            val relation = org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation(
-                location = index,
-                partitionSchema = m.partitionSchema,
-                dataSchema = m.dataSchema,
-                bucketSpec = None,
-                fileFormat = new read.GuardedParquetFileFormat(m.columnMapping, m.fieldIdMapping),
-                options = Map.empty)(spark)
             // images align to the RESTORED schema; columns the other
             // version lacks null-fill (forward restore across an add);
             // shaded files contribute only their LIVE rows
-            val base = read.DvFilter.forFiles(
-              spark.baseRelationToDataFrame(relation),
-              files, deltaLog.dataPath, deltaLog.hadoopConf)
+            val base = read.LiveRows.files(deltaLog, m, files)()
             Some(base.select(target.metadata.schema.fields.map { f =>
                 if (base.columns.contains(f.name)) col(f.name)
                 else lit(null).cast(f.dataType).as(f.name)
@@ -1238,19 +1195,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     // (an add+remove commit without change files is unreconstructable)
     val cdc: Seq[Action] =
       if (write.CdcWriter.enabled(metadata) && matched.nonEmpty) {
-        val index = new read.DeltaFileIndex(spark, deltaLog.dataPath,
-          metadata, matched)
-        val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          location = index,
-          partitionSchema = metadata.partitionSchema,
-          dataSchema = metadata.dataSchema,
-          bucketSpec = None,
-          fileFormat = new read.GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-          options = Map.empty)(spark)
-        val removedRows = read.DvFilter.forFiles(
-            spark.baseRelationToDataFrame(relation),
-            matched, deltaLog.dataPath, deltaLog.hadoopConf)
-          .select(metadata.schema.fieldNames.map(col).toIndexedSeq: _*)
+        val removedRows = read.LiveRows.files(deltaLog, metadata, matched)()
           .withColumn(write.CdcWriter.ChangeTypeCol, lit("delete"))
         val insertedRows = df
           .withColumn(write.CdcWriter.ChangeTypeCol, lit("insert"))
@@ -1861,20 +1806,9 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     if (rewrite.isEmpty) return snapshot.version
 
     val metadata = snapshot.metadata
-    val index = new read.DeltaFileIndex(spark, deltaLog.dataPath, metadata, rewrite)
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = metadata.partitionSchema,
-      dataSchema = metadata.dataSchema,
-      bucketSpec = None,
-      fileFormat = new read.GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-      options = Map.empty)(spark)
     // compaction PURGES deletion vectors: shaded candidates contribute
     // their live rows only, and the rewritten files carry no descriptors
-    val df = read.DvFilter.forFiles(spark.baseRelationToDataFrame(relation),
-        rewrite, deltaLog.dataPath, deltaLog.hadoopConf)
-      .select(metadata.schema.fieldNames.map(org.apache.spark.sql.functions.col)
-        .toIndexedSeq: _*)
+    val df = read.LiveRows.files(deltaLog, metadata, rewrite)()
     val numOutput = math.max(1,
       math.ceil(rewrite.map(_.size).sum.toDouble / targetFileBytes).toInt)
     val compacted =

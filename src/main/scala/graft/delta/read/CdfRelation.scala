@@ -1,8 +1,6 @@
 package graft.delta.read
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.delta._
@@ -82,33 +80,18 @@ object CdfRelation {
     * the change parquet (type in data, version stitched) plus one over
     * the derived files (type AND version stitched). None for an empty
     * range (callers own the empty-frame shape). */
-  def frame(spark: SparkSession, deltaLog: DeltaLog, metadata: Metadata,
+  def frame(deltaLog: DeltaLog, metadata: Metadata,
             cdcFiles: Seq[AddFile], derivedFiles: Seq[AddFile],
             streaming: Boolean): Option[DataFrame] = {
     val typeCol = CdcWriter.ChangeTypeCol
     val extended = cdfSchema(metadata)
-    val outCols = (metadata.schema.fieldNames.toSeq :+ typeCol :+ VersionCol)
-      .map(n => col(s"`$n`"))
 
-    def rel(meta: Metadata, files: Seq[AddFile]): DataFrame = {
-      val index = new DeltaFileIndex(spark, deltaLog.dataPath, meta, files)
-      val relation = HadoopFsRelation(
-        location = index,
-        partitionSchema = meta.partitionSchema,
-        dataSchema = meta.dataSchema,
-        bucketSpec = None,
-        // the ORIGINAL mapping: synthetic columns are never read from
-        // parquet, data columns decode by their physical names
-        fileFormat = new GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-        options = Map.empty)(spark)
-      val df =
-        if (streaming) org.apache.spark.sql.graft.Shims
-          .relationToDataFrame(spark, relation, isStreaming = true)
-        else spark.baseRelationToDataFrame(relation)
-      // derived files that carried a shade contribute LIVE rows only
-      DvFilter.forFiles(df, files, deltaLog.dataPath, deltaLog.hadoopConf)
-        .select(outCols: _*)
-    }
+    // the ORIGINAL mapping: synthetic columns are never read from
+    // parquet, data columns decode by their physical names; derived files
+    // that carried a shade contribute LIVE rows only
+    def rel(meta: Metadata, files: Seq[AddFile]): DataFrame =
+      LiveRows.files(deltaLog, meta, files)(mapping = metadata,
+        streaming = streaming)
 
     // change parquet comes in two shapes: our CdcWriter stores partition
     // columns IN THE DATA (empty partitionValues), foreign writers

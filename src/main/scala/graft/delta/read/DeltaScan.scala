@@ -1,10 +1,13 @@
 package graft.delta.read
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Expression}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.graft.Shims
 
-import graft.delta.{AddFile, Encs, Snapshot}
+import graft.delta.{AddFile, DeltaLog, Encs, Metadata, Snapshot}
 
 /** Filtered file scan with the reference's pushed/residual contract
   * (SURVEY §2.3 S1/S2; ref DeltaScan.java:33-67,
@@ -42,45 +45,27 @@ class DeltaScan(snapshot: Snapshot, filter: Option[Expression]) {
     snapshot.filesMatching(pushedPredicates ++ derivedPredicates)
 }
 
-/** Assembles the snapshot's DataFrame through a [[DeltaFileIndex]]-backed
-  * HadoopFsRelation: Spark's vectorized parquet reader, whole-stage
-  * codegen, filter pushdown (`PushedFilters` in explain) and partition
-  * pruning all apply natively (S4 via Spark instead of row-at-a-time
-  * parquet4s).
-  *
-  * Files carrying a deletion vector get their deleted rows dropped by a
-  * (file, row-position) ANTI-JOIN against the materialized bitmaps:
-  * `_metadata.file_path`/`_metadata.row_index` identify every row's
-  * position (split-correct — Spark computes the index against the file's
-  * row groups, so parallel splits of one parquet file keep absolute
-  * positions), and the bitmap side explodes to one row per deleted
-  * position, read on EXECUTORS from the descriptors. The total deleted
-  * cardinality is known from the log alone (descriptor `cardinality`
-  * sums), so the broadcast decision needs no data read; scans of DV-free
-  * tables — and DV-free snapshots of DV-capable tables — take none of
-  * these steps. */
+/** A snapshot's table frame for the read APIs (`DeltaTable.toDF`,
+  * `graft_table`, time travel): the [[LiveRows]] of the snapshot in the
+  * table's declared column order, after the readability gate. Relation,
+  * file format and deletion-vector filter are all [[LiveRows]]' choice;
+  * this class only adds the caller's filter or the row-tracking columns. */
 class DeltaScanBuilder(snapshot: Snapshot) {
 
   def buildDF(filter: Option[Column]): DataFrame = {
     snapshot.assertReadable()
-    val df = baseDF
-    val undeleted =
-      if (snapshot.dvCardinality == 0L) df else antiJoinDeletedRows(df)
-    // present columns in the table-schema order (partition columns are
-    // appended last by HadoopFsRelation)
-    val projected = projectTableOrder(undeleted, Nil)
-    filter.map(projected.filter).getOrElse(projected)
+    val live = LiveRows.snapshot(snapshot)()
+    filter.map(live.filter).getOrElse(live)
   }
 
   /** The scan plus stable row ids (writer feature rowTracking): `_row_id`
     * = the file's `baseRowId` + the row's PHYSICAL position, and
     * `_row_commit_version` = the file's `defaultRowCommitVersion` — both
     * null for files written before the feature. Per-file constants join
-    * in on `_metadata.file_path` (broadcast — one small row per FILE),
-    * and the id derives from `_metadata.row_index` BEFORE the DV
-    * anti-filter, so deletion-vector DML never shifts a survivor's id. */
+    * in on `_metadata.file_path` (broadcast — one small row per FILE);
+    * the id derives from `_metadata.row_index`, the physical position,
+    * so deletion-vector DML never shifts a survivor's id. */
   def buildDFWithRowIds: DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     snapshot.assertReadable()
     val spark = snapshot.spark
     import spark.implicits._
@@ -94,48 +79,125 @@ class DeltaScanBuilder(snapshot: Snapshot) {
     // beyond-driver logs let AQE pick — the join stays file-keyed either way
     val perFileSide =
       if (snapshot.distributedState) perFile else broadcast(perFile)
-    val withIds = baseDF
-      .join(perFileSide,
-        col("_metadata.file_path") === col("__rt_file"), "left")
-      .withColumn("_row_id", col("__rt_base") + col("_metadata.row_index"))
-      .withColumn("_row_commit_version", col("__rt_ver"))
-    val undeleted =
-      if (snapshot.dvCardinality == 0L) withIds
-      else antiJoinDeletedRows(withIds)
-    projectTableOrder(undeleted, Seq("_row_id", "_row_commit_version"))
-  }
-
-  private def baseDF: DataFrame = {
-    val spark = snapshot.spark
-    val index = new DeltaFileIndex(spark, snapshot)
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = snapshot.metadata.partitionSchema,
-      dataSchema = snapshot.metadata.dataSchema,
-      bucketSpec = None,
-      fileFormat = new graft.delta.read.GuardedParquetFileFormat(snapshot.metadata.columnMapping, snapshot.metadata.fieldIdMapping),
-      options = Map.empty)(spark)
-    spark.baseRelationToDataFrame(relation)
-  }
-
-  private def projectTableOrder(df: DataFrame, extra: Seq[String]): DataFrame = {
-    val ordered = snapshot.metadata.schema.fieldNames.toSeq ++ extra
-    if (ordered.nonEmpty)
-      df.select(ordered.map(org.apache.spark.sql.functions.col): _*)
-    else df
-  }
-
-  private def antiJoinDeletedRows(df: DataFrame): DataFrame = {
-    DvFilter(df, snapshot.dvFiles, snapshot.dvCardinality,
-      snapshot.deltaLog.dataPath, snapshot.deltaLog.hadoopConf)
+    LiveRows.snapshot(snapshot)(extra = Seq(
+        col("_metadata.file_path").as("__rt_path"),
+        col("_metadata.row_index").as("__rt_pos")))
+      .join(perFileSide, col("__rt_path") === col("__rt_file"), "left")
+      .select(LiveRows.tableColumns(snapshot.metadata) ++ Seq(
+        (col("__rt_base") + col("__rt_pos")).as("_row_id"),
+        col("__rt_ver").as("_row_commit_version")): _*)
   }
 }
 
-/** The deletion-vector row filter shared by the batch scan and the
-  * streaming source: anti-join the frame's `(_metadata.file_path,
-  * _metadata.row_index)` against the exploded deleted positions, read on
-  * EXECUTORS from the descriptors. */
-object DvFilter {
+/** The one place a set of Delta files becomes rows — every batch read,
+  * DML scan, change-feed frame and streaming micro-batch is built here,
+  * so the relation, the parquet format and the deletion-vector rule are
+  * decided once:
+  *
+  *  - the relation is a [[HadoopFsRelation]] over a [[DeltaFileIndex]]:
+  *    Spark's vectorized parquet reader, whole-stage codegen, filter
+  *    pushdown (`PushedFilters` in explain) and partition pruning all
+  *    apply natively, and partition values stitch in from the log;
+  *  - the format is a [[GuardedParquetFileFormat]] carrying the table's
+  *    logical→physical name and field-id mapping;
+  *  - rows a deletion vector hides are never returned: a (file,
+  *    row-position) ANTI-JOIN against the deleted positions
+  *    ([[DvFilter]]). A file set without descriptors plans no join;
+  *  - the frame presents the table schema in declared order (the
+  *    relation appends partition columns last), plus any `extra` columns
+  *    the caller asks for — evaluated after the anti-join, so
+  *    `_metadata.file_path`/`_metadata.row_index` reach DML that shades by
+  *    position.
+  *
+  * Two faces: [[snapshot]] serves a whole snapshot through the
+  * snapshot-backed index (pruning runs where the file state lives, the
+  * deleted cardinality comes from the log), [[files]] serves a
+  * driver-side file list (DML candidates, compaction groups, CDF ranges,
+  * streaming slices). SQL reads of `format("graft-delta")` relations take
+  * the same filter through [[filterSqlRead]]. */
+object LiveRows {
+
+  /** A snapshot's live rows. `metadata` shapes the frame (a streaming
+    * source keeps its initial schema across later snapshots). */
+  def snapshot(snapshot: Snapshot)(
+      metadata: Metadata = snapshot.metadata,
+      streaming: Boolean = false,
+      extra: Seq[Column] = Nil): DataFrame = {
+    val rows = frame(snapshot.spark, new DeltaFileIndex(snapshot.spark, snapshot),
+      metadata, metadata, streaming)
+    project(dropDeleted(rows, snapshot), metadata, extra)
+  }
+
+  /** The live rows of `files`. `metadata` shapes the relation; `mapping`
+    * is the metadata whose column mapping decodes the parquet (the CDF
+    * range keeps the table's mapping under its extended schema). */
+  def files(deltaLog: DeltaLog, metadata: Metadata, files: Seq[AddFile])(
+      mapping: Metadata = metadata,
+      streaming: Boolean = false,
+      extra: Seq[Column] = Nil): DataFrame = {
+    val spark = deltaLog.spark
+    val rows = frame(spark,
+      new DeltaFileIndex(spark, deltaLog.dataPath, metadata, files),
+      metadata, mapping, streaming)
+    project(DvFilter.forFiles(rows, files, deltaLog.dataPath, deltaLog.hadoopConf),
+      metadata, extra)
+  }
+
+  /** The relation behind every frame, and the superclass arguments of
+    * the SQL relation ([[InsertableDeltaRelation]]). */
+  private[read] def relation(spark: SparkSession, index: DeltaFileIndex,
+                             metadata: Metadata,
+                             mapping: Metadata): HadoopFsRelation =
+    HadoopFsRelation(
+      location = index,
+      partitionSchema = metadata.partitionSchema,
+      dataSchema = metadata.dataSchema,
+      bucketSpec = None,
+      fileFormat = new GuardedParquetFileFormat(mapping.columnMapping, mapping.fieldIdMapping),
+      options = Map.empty)(spark)
+
+  /** A resolved SQL read of [[InsertableDeltaRelation]] `lr`, minus the
+    * rows its snapshot's deletion vectors hide; `lr.output` is kept, so
+    * references above stay bound and DML routing still finds `lr` among
+    * the leaves. A DV-free snapshot returns `lr` itself. */
+  private[graft] def filterSqlRead(lr: LogicalRelation,
+                                   rel: InsertableDeltaRelation): LogicalPlan =
+    if (rel.snapshot.dvCardinality == 0L) lr
+    else Project(lr.output,
+      dropDeleted(Shims.ofRows(rel.snapshot.spark, lr), rel.snapshot)
+        .queryExecution.analyzed)
+
+  /** The table columns in declared order. */
+  private[read] def tableColumns(metadata: Metadata): Seq[Column] =
+    metadata.schema.fieldNames.toSeq.map(n => col(s"`${n.replace("`", "``")}`"))
+
+  private def frame(spark: SparkSession, index: DeltaFileIndex,
+                    metadata: Metadata, mapping: Metadata,
+                    streaming: Boolean): DataFrame =
+    Shims.relationToDataFrame(spark, relation(spark, index, metadata, mapping),
+      streaming)
+
+  private def dropDeleted(df: DataFrame, snapshot: Snapshot): DataFrame =
+    if (snapshot.dvCardinality == 0L) df
+    else DvFilter(df, snapshot.dvFiles, snapshot.dvCardinality,
+      snapshot.deltaLog.dataPath, snapshot.deltaLog.hadoopConf)
+
+  private def project(df: DataFrame, metadata: Metadata,
+                      extra: Seq[Column]): DataFrame = {
+    val cols = tableColumns(metadata) ++ extra
+    if (cols.isEmpty) df else df.select(cols: _*)
+  }
+}
+
+/** The deletion-vector row filter, private to [[LiveRows]]: anti-join the
+  * frame's `(_metadata.file_path, _metadata.row_index)` against the
+  * exploded deleted positions, read on EXECUTORS from the descriptors.
+  * `_metadata.row_index` is split-correct — Spark computes it against the
+  * file's row groups, so parallel splits of one parquet file keep
+  * absolute positions. The total deleted cardinality is known from the
+  * log alone (descriptor `cardinality` sums), so the broadcast decision
+  * needs no data read. */
+private object DvFilter {
 
   /** Positions under ~1M broadcast (a few MB of (path, long) rows); above
     * that the join shuffles — still linear in deleted rows, never in the
@@ -147,7 +209,6 @@ object DvFilter {
             totalCardinality: Long,
             dataPath: org.apache.hadoop.fs.Path,
             hadoopConf: org.apache.hadoop.conf.Configuration): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val spark = df.sparkSession
     import spark.implicits._
     val dataPathStr = dataPath.toString
@@ -170,7 +231,7 @@ object DvFilter {
         "left_anti")
   }
 
-  /** Driver-side-file-list face (streaming micro-batches, DML scans). */
+  /** Driver-side-file-list face: only files carrying a descriptor join. */
   def forFiles(df: DataFrame, files: Seq[AddFile],
                dataPath: org.apache.hadoop.fs.Path,
                hadoopConf: org.apache.hadoop.conf.Configuration): DataFrame = {
@@ -178,8 +239,7 @@ object DvFilter {
     if (withDv.isEmpty) df
     else {
       implicit val addEnc = Encs.addFile
-      val spark = df.sparkSession
-      apply(df, spark.createDataset(withDv),
+      apply(df, df.sparkSession.createDataset(withDv),
         withDv.iterator.flatMap(_.deletionVector).map(_.cardinality).sum,
         dataPath, hadoopConf)
     }

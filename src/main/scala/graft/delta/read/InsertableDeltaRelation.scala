@@ -1,6 +1,6 @@
 package graft.delta.read
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.sources.InsertableRelation
 
@@ -18,20 +18,26 @@ import graft.delta.Snapshot
   * Reference parity: the Flink connector's SQL INSERT surface
   * (`DeltaDynamicTableSink`, SURVEY §2.4 F9) re-expressed on Spark's V1
   * source API.
+  *
+  * Rows hidden by deletion vectors are dropped from SQL reads by
+  * [[graft.GraftExtensions]]' `FilterDeletedRows` rule, through the same
+  * filter [[LiveRows]] applies to every other frame.
   */
-class InsertableDeltaRelation(
-    index: DeltaFileIndex,
-    snapshot: Snapshot,
-    val tablePath: String,
-    spark: SparkSession)
-  extends HadoopFsRelation(
-    location = index,
-    partitionSchema = snapshot.metadata.partitionSchema,
-    dataSchema = snapshot.metadata.dataSchema,
-    bucketSpec = None,
-    fileFormat = new GuardedParquetFileFormat(snapshot.metadata.columnMapping, snapshot.metadata.fieldIdMapping),
-    options = Map.empty)(spark)
+class InsertableDeltaRelation private (
+    base: HadoopFsRelation,
+    private[graft] val snapshot: Snapshot,
+    val tablePath: String)
+  extends HadoopFsRelation(base.location, base.partitionSchema,
+    base.dataSchema, base.bucketSpec, base.fileFormat, base.options)(
+    base.sparkSession)
   with InsertableRelation {
+
+  /** The relation over `snapshot`, built by [[LiveRows]] like every other
+    * scan of this engine. */
+  def this(snapshot: Snapshot, tablePath: String) =
+    this(LiveRows.relation(snapshot.spark,
+      new DeltaFileIndex(snapshot.spark, snapshot),
+      snapshot.metadata, snapshot.metadata), snapshot, tablePath)
 
   /** The DECLARED column order (metadata schema). HadoopFsRelation's own
     * output reorders partition columns last — positional SQL inserts

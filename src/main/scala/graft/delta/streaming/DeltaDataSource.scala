@@ -1,15 +1,12 @@
 package graft.delta.streaming
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.delta._
-import graft.delta.read.DeltaFileIndex
 
 /** `format("graft-delta")` registration: batch read (with time travel
   * options `versionAsOf` / `timestampAsOf`, F4), batch write, streaming
@@ -23,6 +20,12 @@ import graft.delta.read.DeltaFileIndex
   * spark.readStream.format("graft-delta").load(path)
   * df.writeStream.format("graft-delta").option("checkpointLocation", c).start(path)
   * }}}
+  *
+  * Batch reads of a table with deletion vectors need the session built
+  * with [[graft.GraftExtensions]] (as SQL `INSERT` does): its analyzer
+  * rule drops the rows the vectors hide. Without it the relation reads
+  * every physical row. `DeltaTable.toDF` and streaming reads apply the
+  * vectors either way.
   */
 class DeltaDataSource
   extends RelationProvider
@@ -75,8 +78,7 @@ class DeltaDataSource
         "Cannot specify both versionAsOf and timestampAsOf")
     }
     snapshot.assertReadable()
-    new read.InsertableDeltaRelation(
-      new DeltaFileIndex(spark, snapshot), snapshot, pathOf(parameters), spark)
+    new read.InsertableDeltaRelation(snapshot, pathOf(parameters))
   }
 
   // ----------------------------------------------------------- batch write

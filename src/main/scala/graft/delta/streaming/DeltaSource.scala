@@ -2,14 +2,11 @@ package graft.delta.streaming
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow, Offset => OffsetV2}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types.StructType
 
 import graft.delta._
-import graft.delta.read.DeltaFileIndex
 
 /** Streaming offset: `(version, index)`, plus a `snapshot` tier. A
   * version-boundary offset (`index == END`) means every data AddFile of
@@ -86,7 +83,7 @@ private[delta] case class SnapshotIndexedFile(idx: Long, cumBytes: Long,
   * Flink enumerator's {version, processedPaths} checkpoints (F5), and
   * task scheduling replaces split assignment. A batch for offset range
   * (o1, o2] is the union of sanitized AddFiles committed in that range,
-  * planned through the same [[DeltaFileIndex]] as batch reads
+  * planned through the same [[graft.delta.read.DeltaFileIndex]] as batch reads
   * (vectorized parquet, pushdown, pruning all apply).
   *
   * Scale shape: every walk over the commit range STREAMS each commit
@@ -1028,7 +1025,7 @@ class DeltaSource(
           derived ++= d
         }
       }
-    graft.delta.read.CdfRelation.frame(spark, deltaLog,
+    graft.delta.read.CdfRelation.frame(deltaLog,
       initialSnapshot.metadata, cdcFiles, derived, streaming = true)
       .getOrElse {
         // empty range: an empty streaming frame with the CDF schema
@@ -1102,48 +1099,21 @@ class DeltaSource(
 
   /** Whole-snapshot streaming frame via the snapshot-backed index:
     * in distributed-state mode pruning runs as a Spark job and the file
-    * list never materializes on the driver. Files shaded by deletion
-    * vectors get the same (file, row_index) anti-filter as batch scans —
-    * without it the initial snapshot of a foreign DV table would
-    * RESURRECT its deleted rows into the stream. */
-  private def buildSnapshotDF(snap: Snapshot): DataFrame = {
-    val metadata = initialSnapshot.metadata
-    val relation = HadoopFsRelation(
-      location = new DeltaFileIndex(spark, snap),
-      partitionSchema = metadata.partitionSchema,
-      dataSchema = metadata.dataSchema,
-      bucketSpec = None,
-      fileFormat = new graft.delta.read.GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-      options = Map.empty)(spark)
-    val base = Shims.relationToDataFrame(spark, relation, isStreaming = true)
-    val undeleted =
-      if (snap.dvCardinality == 0L) base
-      else graft.delta.read.DvFilter(base, snap.dvFiles, snap.dvCardinality,
-        deltaLog.dataPath, deltaLog.hadoopConf)
-    undeleted.select(metadata.schema.fieldNames
-      .map(org.apache.spark.sql.functions.col).toSeq: _*)
-  }
+    * list never materializes on the driver. Rows a deletion vector hides
+    * stay hidden — without that the initial snapshot of a foreign DV
+    * table would RESURRECT its deleted rows into the stream. */
+  private def buildSnapshotDF(snap: Snapshot): DataFrame =
+    graft.delta.read.LiveRows.snapshot(snap)(
+      metadata = initialSnapshot.metadata, streaming = true)
 
-  private def buildBatchDF(files: Seq[AddFile]): DataFrame = {
-    val metadata = initialSnapshot.metadata
-    val index = new DeltaFileIndex(spark, deltaLog.dataPath, metadata, files)
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = metadata.partitionSchema,
-      dataSchema = metadata.dataSchema,
-      bucketSpec = None,
-      fileFormat = new graft.delta.read.GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-      options = Map.empty)(spark)
-    val df = Shims.relationToDataFrame(spark, relation, isStreaming = true)
-    // a re-emitted rewrite (ignoreChanges) may carry a deletion vector;
-    // emit the file MINUS its deleted rows, same as a batch read would
-    val undeleted = graft.delta.read.DvFilter.forFiles(
-      df, files, deltaLog.dataPath, deltaLog.hadoopConf)
-    // project the TABLE schema (the source schema may carry CDF columns
-    // that only exist after cdfBatch appends them)
-    undeleted.select(metadata.schema.fieldNames
-      .map(org.apache.spark.sql.functions.col).toSeq: _*)
-  }
+  /** A slice of files as a streaming frame in the TABLE schema (the
+    * source schema may carry CDF columns that only exist after cdfBatch
+    * appends them). A re-emitted rewrite (ignoreChanges) may carry a
+    * deletion vector: the file is emitted MINUS its deleted rows, same as
+    * a batch read. */
+  private def buildBatchDF(files: Seq[AddFile]): DataFrame =
+    graft.delta.read.LiveRows.files(deltaLog, initialSnapshot.metadata, files)(
+      streaming = true)
 
   /** Offsets arrive as our own type, LongOffset (legacy/bare), or (from
     * the offset log) serialized JSON — all normalize through the parser.

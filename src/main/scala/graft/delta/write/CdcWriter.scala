@@ -38,16 +38,13 @@ object CdcWriter {
       // shared projection + ref-counted conf flip (DeltaWriter) so the
       // change-file path cannot diverge from the data-file path
       val phys = DeltaWriter.physicalProjection(changes, mapping, fieldIds)
-      graft.tools.PhaseTimers.time("write.cdc") {
-        DirectWriteCommitProtocol.withDirectCommit(phys.sparkSession) {
+      val committedNames = graft.tools.PhaseTimers.time("write.cdc") {
+        DirectWriteCommitProtocol.write(phys.sparkSession, batchDir.toString) {
           DeltaWriter.withFieldIdWrite(phys.sparkSession, fieldIds.nonEmpty) {
             phys.write.mode(SaveMode.Overwrite).parquet(batchDir.toString)
           }
         }
       }
-      val committedNames = DirectWriteCommitProtocol
-        .takeResult(batchDir.toString)
-        .map(_.map(p => new Path(p).getName).toSet)
       // an empty change set under the direct-commit protocol creates no
       // batch dir at all
       if (!fs.exists(batchDir)) return Seq.empty

@@ -324,8 +324,11 @@ object DeltaWriter {
       // the files we write resolve BY ID for foreign id-mode readers
       val fieldIds = meta.map(_.fieldIdMapping).getOrElse(Map.empty)
       val physDf = physicalProjection(shaped, mapping, fieldIds)
-      graft.tools.PhaseTimers.time("write.job") {
-        DirectWriteCommitProtocol.withDirectCommit(physDf.sparkSession) {
+      // the COMMITTED file names are authoritative under the direct-write
+      // protocol: a speculated/retried attempt may have left an orphan in
+      // the batch dir that must not become an AddFile
+      val committedNames = graft.tools.PhaseTimers.time("write.job") {
+        DirectWriteCommitProtocol.write(physDf.sparkSession, batchDir.toString) {
           withFieldIdWrite(physDf.sparkSession, fieldIds.nonEmpty) {
             val writer = physDf.write.mode(SaveMode.Overwrite)
             (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
@@ -333,12 +336,6 @@ object DeltaWriter {
           }
         }
       }
-      // the COMMITTED file names are authoritative under the direct-write
-      // protocol: a speculated/retried attempt may have left an orphan in
-      // the batch dir that must not become an AddFile
-      val committedNames = DirectWriteCommitProtocol
-        .takeResult(batchDir.toString)
-        .map(_.map(p => new Path(p).getName).toSet)
       val files = graft.tools.PhaseTimers.time("write.list") {
         val listed = listParquetFiles(fs, batchDir)
         committedNames.fold(listed)(ns =>

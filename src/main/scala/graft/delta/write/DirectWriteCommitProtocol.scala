@@ -21,22 +21,22 @@ import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
   *
   * Retry/speculation safety: every file name embeds a fresh UUID, so a
   * re-attempted task never collides with its predecessor; only the files
-  * named in COMMITTED task messages reach [[takeResult]], and the caller
-  * derives AddFiles from that list — an abandoned attempt's leftover is
-  * never committed (and is swept with the batch dir on failure, or by
-  * VACUUM as an orphan past retention).
+  * named in COMMITTED task messages reach
+  * [[DirectWriteCommitProtocol.write]], and the caller derives AddFiles
+  * from that list — an abandoned attempt's leftover is never committed
+  * (and is swept with the batch dir on failure, or by VACUUM as an orphan
+  * past retention).
+  *
+  * Dynamic partition overwrite (`spark.sql.sources.partitionOverwriteMode
+  * =dynamic`) is accepted and needs nothing: the batch directory is fresh,
+  * so there is no partition to replace, and the log commit decides what
+  * the table's partitions hold.
   *
   * Results are published under the job's output path at commitJob time;
-  * the caller collects them with [[DirectWriteCommitProtocol.takeResult]]
-  * right after the write returns. */
+  * the caller collects them through [[DirectWriteCommitProtocol.write]]. */
 class DirectWriteCommitProtocol(jobId: String, path: String,
                                 dynamicPartitionOverwrite: Boolean)
   extends FileCommitProtocol with Serializable {
-
-  def this(jobId: String, path: String) = this(jobId, path, false)
-
-  require(!dynamicPartitionOverwrite,
-    "DirectWriteCommitProtocol does not support dynamic partition overwrite")
 
   // task-side state (executor): the files this attempt created
   @transient private var addedFiles: ArrayBuffer[String] = _
@@ -49,9 +49,9 @@ class DirectWriteCommitProtocol(jobId: String, path: String,
     DirectWriteCommitProtocol.publish(path, files)
   }
 
-  override def abortJob(jobContext: JobContext): Unit =
-    // the caller deletes the whole batch directory on failure
-    DirectWriteCommitProtocol.clear(path)
+  // the caller deletes the whole batch directory on failure, and
+  // DirectWriteCommitProtocol.write drops any published list
+  override def abortJob(jobContext: JobContext): Unit = ()
 
   override def setupTask(taskContext: TaskAttemptContext): Unit = {
     addedFiles = ArrayBuffer.empty[String]
@@ -110,18 +110,23 @@ object DirectWriteCommitProtocol {
 
   private[write] def publish(path: String, files: Seq[String]): Unit =
     results.put(keyOf(path), files)
-  private[write] def clear(path: String): Unit = results.remove(keyOf(path))
 
-  /** The committed file list of the write that targeted `path`, claimed
-    * at most once (keyed by the caller's unique batch directory). */
-  def takeResult(path: String): Option[Seq[String]] =
-    Option(results.remove(keyOf(path)))
+  /** Run `body` — a file-source write into the unique batch directory
+    * `path` — with this protocol installed, and return the NAMES of the
+    * files its committed tasks produced (None when the write published no
+    * list). The published entry is cleared however the write ends. */
+  def write(session: org.apache.spark.sql.SparkSession, path: String)
+           (body: => Unit): Option[Set[String]] =
+    try {
+      withDirectCommit(session)(body)
+      Option(results.get(keyOf(path))).map(_.map(p => new Path(p).getName).toSet)
+    } finally results.remove(keyOf(path))
 
-  /** Run `body` with this protocol installed for the session's file-
-    * source writes. Ref-counted per session (the withFieldIdWrite
-    * pattern) so concurrent delta writers share one save/restore. */
-  def withDirectCommit[T](session: org.apache.spark.sql.SparkSession)
-                         (body: => T): T = {
+  /** Installs the protocol for the session's file-source writes.
+    * Ref-counted per session (the withFieldIdWrite pattern) so concurrent
+    * delta writers share one save/restore. */
+  private def withDirectCommit[T](session: org.apache.spark.sql.SparkSession)
+                                 (body: => T): T = {
     Lock.synchronized {
       val (depth, saved) = Option(state.get(session)).getOrElse((0, None))
       if (depth == 0) {

@@ -32,10 +32,16 @@ private[delta] object DvShade {
     def isEmpty: Boolean = actions.isEmpty
   }
 
+  /** The `__file` / `__pos` columns [[shade]] reads: a scan's
+    * `_metadata.file_path` and `_metadata.row_index`, requested as
+    * `extra` columns of [[graft.delta.read.LiveRows]]. */
+  val Positions: Seq[org.apache.spark.sql.Column] = Seq(
+    col("_metadata.file_path").as("__file"),
+    col("_metadata.row_index").as("__pos"))
+
   /** Build shade actions for the rows in `hits` — a frame exposing
-    * `__file` (`_metadata.file_path` spelling) and `__pos`
-    * (`_metadata.row_index`) — against `candidates`, the AddFiles the
-    * hits were scanned from. */
+    * [[Positions]] — against `candidates`, the AddFiles the hits were
+    * scanned from. */
   def shade(deltaLog: DeltaLog, hits: DataFrame,
             candidates: Seq[AddFile]): Result = {
     val spark = hits.sparkSession

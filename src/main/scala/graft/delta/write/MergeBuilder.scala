@@ -302,24 +302,11 @@ final class MergeBuilder private[delta] (
     // writes KBs, not the file. Rows no clause accepts never move.
     val dvMode = DeltaConfigs.ENABLE_DELETION_VECTORS.fromMetadata(metadata) &&
       rewriteClauses.nonEmpty
-    def scanFiles(files: Seq[AddFile], withPos: Boolean = false): DataFrame = {
-      val index = new read.DeltaFileIndex(spark, deltaLog.dataPath, metadata, files)
-      val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        location = index,
-        partitionSchema = metadata.partitionSchema,
-        dataSchema = metadata.dataSchema,
-        bucketSpec = None,
-        fileFormat = new read.GuardedParquetFileFormat(metadata.columnMapping, metadata.fieldIdMapping),
-        options = Map.empty)(spark)
-      // shaded target files contribute live rows only (merge must never
-      // match against — or copy forward — DV-deleted rows)
-      val live = read.DvFilter.forFiles(spark.baseRelationToDataFrame(relation),
-        files, deltaLog.dataPath, deltaLog.hadoopConf)
-      val cols = schema.fieldNames.map(col) ++
-        (if (withPos) Seq(col("_metadata.file_path").as("__file"),
-          col("_metadata.row_index").as("__pos")) else Nil)
-      live.select(cols.toIndexedSeq: _*)
-    }
+    // shaded target files contribute live rows only (merge must never
+    // match against — or copy forward — DV-deleted rows)
+    def scanFiles(files: Seq[AddFile], withPos: Boolean = false): DataFrame =
+      read.LiveRows.files(deltaLog, metadata, files)(
+        extra = if (withPos) DvShade.Positions else Nil)
     val target = candidateFiles.map(f => scanFiles(f))
       .getOrElse(snapshot.toDF).alias("t")
     val src = source.alias("s")

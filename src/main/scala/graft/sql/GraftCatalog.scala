@@ -580,11 +580,8 @@ class GraftTable(
 
   /** The V1 relation batch reads resolve to (DeltaFileIndex pruning,
     * transactional inserts) — wired by GraftExtensions' conversion rule. */
-  private[graft] def v1Relation(
-      spark: org.apache.spark.sql.SparkSession): graft.delta.read.InsertableDeltaRelation =
-    new graft.delta.read.InsertableDeltaRelation(
-      new graft.delta.read.DeltaFileIndex(spark, snapshot),
-      snapshot, path, spark)
+  private[graft] def v1Relation: graft.delta.read.InsertableDeltaRelation =
+    new graft.delta.read.InsertableDeltaRelation(snapshot, path)
 
   override def v1Table: CatalogTable = CatalogTable(
     identifier = TableIdentifier(ident.name(),

@@ -297,6 +297,63 @@ class DeletionVectorSpec extends SparkSpec {
     }
   }
 
+  test("every read surface returns only the live rows of a shaded table") {
+    withTempDir { wh =>
+      spark.conf.set("spark.sql.catalog.graftdv", "graft.sql.GraftCatalog")
+      spark.conf.set("spark.sql.catalog.graftdv.warehouse", wh)
+      val dir = s"$wh/db/t"
+      DeltaTable.write(
+        (0 until 10).map(i => (i.toLong, s"p${i % 2}")).toDF("id", "p")
+          .repartition(1), dir, partitionBy = Seq("p"),
+        configuration = Map("delta.enableDeletionVectors" -> "true"))
+      DeltaTable.forPath(spark, dir).delete($"id" <= 3L)
+      assert(DeltaLog.forTable(spark, dir).update().dvCardinality == 4L)
+      val live = (4L until 10L).toSeq
+
+      def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+        df.select("id").as[Long].collect().sorted.toSeq
+      val streamed = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val q = spark.readStream.format("graft-delta").load(dir).writeStream
+        .option("checkpointLocation", s"$wh/_ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          streamed.synchronized(streamed ++= ids(batch)); ()
+        }.start()
+      try q.awaitTermination() finally q.stop()
+
+      val surfaces: Seq[(String, Seq[Long], Long)] = Seq(
+        ("DeltaTable.toDF", ids(DeltaTable.forPath(spark, dir).toDF),
+          DeltaTable.forPath(spark, dir).toDF.count()),
+        ("format(graft-delta).load",
+          ids(spark.read.format("graft-delta").load(dir)),
+          spark.read.format("graft-delta").load(dir).count()),
+        ("catalog SELECT", ids(spark.sql("SELECT id FROM graftdv.db.t")),
+          spark.sql("SELECT count(*) FROM graftdv.db.t").as[Long].head()),
+        ("graft_table", ids(spark.sql(s"SELECT id FROM graft_table('$dir')")),
+          spark.sql(s"SELECT count(*) FROM graft_table('$dir')").as[Long].head()),
+        ("readStream initial snapshot", streamed.sorted.toSeq,
+          streamed.size.toLong))
+      surfaces.foreach { case (name, got, count) =>
+        assert(got == live, s"$name returned $got")
+        assert(count == live.size, s"$name counted $count")
+      }
+      // a filtered SQL read and a catalog DML still see the live rows only
+      assert(spark.sql("SELECT count(*) FROM graftdv.db.t WHERE p = 'p0'")
+        .as[Long].head() == 3L)
+      // a self-join filters each side exactly once
+      val self = spark.sql("SELECT count(*) FROM graftdv.db.t a " +
+        "JOIN graftdv.db.t b ON a.id = b.id")
+      assert(self.as[Long].head() == live.size)
+      assert(self.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+      }.size == 2)
+      spark.sql("UPDATE graftdv.db.t SET id = id + 100 WHERE id >= 8")
+      assert(ids(spark.sql("SELECT id FROM graftdv.db.t")) ==
+        Seq(4L, 5L, 6L, 7L, 108L, 109L))
+    }
+  }
+
   test("appends to a DV table work; unknown writer features still refuse by name") {
     withTempDir { dir =>
       seedTable(dir, 4)

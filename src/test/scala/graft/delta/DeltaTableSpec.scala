@@ -33,6 +33,44 @@ class DeltaTableSpec extends SparkSpec {
     }
   }
 
+  test("partitioned writes succeed under dynamic partitionOverwriteMode") {
+    withTempDir { dir =>
+      val key = "spark.sql.sources.partitionOverwriteMode"
+      spark.conf.set(key, "dynamic")
+      try {
+        DeltaTable.write(sampleDF(30), dir, partitionBy = Seq("grp"))
+        DeltaTable.write(sampleDF(6, 30), dir, partitionBy = Seq("grp"))
+        DeltaTable.write(sampleDF(3, 100), dir, SaveMode.Overwrite,
+          partitionBy = Seq("grp"))
+      } finally spark.conf.unset(key)
+      val t = DeltaTable.forPath(spark, dir)
+      // overwrite stays a whole-table replace; the log names exactly the
+      // files the committed tasks wrote
+      assert(t.toDF.select("id").as[Long].collect().sorted.toSeq ==
+        Seq(100L, 101L, 102L))
+      val logged = t.deltaLog.update().allFiles.map(_.path)
+      assert(logged.forall(p => new java.io.File(s"$dir/$p").isFile), logged)
+      assert(logged.map(_.split("/").dropRight(1).last).toSet ==
+        Set("grp=g0", "grp=g1", "grp=g2"))
+    }
+  }
+
+  test("the direct-write result list is dropped when the write fails") {
+    withTempDir { dir =>
+      val batch = s"$dir/batch-failing"
+      val e = intercept[IllegalStateException] {
+        graft.delta.write.DirectWriteCommitProtocol.write(spark, batch) {
+          spark.range(3).write.parquet(batch) // commits and publishes
+          throw new IllegalStateException("fails after the job committed")
+        }
+      }
+      assert(e.getMessage.contains("after the job committed"))
+      // nothing stale is left for a later claim of the same batch
+      assert(graft.delta.write.DirectWriteCommitProtocol
+        .write(spark, batch)(()).isEmpty)
+    }
+  }
+
   test("partitioned write records partition values from the log") {
     withTempDir { dir =>
       DeltaTable.write(sampleDF(30), dir, partitionBy = Seq("grp"))

@@ -175,4 +175,58 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("one scan constructor: DV-free file sets plan no join, a shade one " +
+      "broadcast anti-join, and DV DML predicates stay pushed") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def joins(df: org.apache.spark.sql.DataFrame): Seq[Join] =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j }
+    def scans(plan: SparkPlan): Seq[FileSourceScanExec] = plan match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case s: FileSourceScanExec => Seq(s)
+      case p => p.children.flatMap(scans)
+    }
+    withTempDir { dir =>
+      DeltaTable.write((0 until 100).map(i => (i.toLong, i % 4)).toDF("id", "k")
+        .repartition(1), dir,
+        configuration = Map("delta.enableDeletionVectors" -> "true"))
+      val table = DeltaTable.forPath(spark, dir)
+      val clean = table.deltaLog.update()
+      assert(joins(table.toDF).isEmpty)
+      assert(joins(read.LiveRows.files(table.deltaLog, clean.metadata,
+        clean.allFiles)()).isEmpty)
+
+      table.delete($"id" >= 90L)
+      val shaded = joins(table.toDF)
+      assert(shaded.size == 1 && shaded.head.joinType == LeftAnti, shaded)
+      assert(shaded.head.hint.rightHint.exists(_.strategy.contains(BROADCAST)),
+        shaded.head.hint)
+
+      // a second delete scans the shaded file through the anti-join; its
+      // predicate must still reach parquet
+      val captured = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          captured.add(qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      import scala.jdk.CollectionConverters._
+      def pushed = captured.asScala.toSeq.flatMap(scans)
+        .map(_.metadata.getOrElse("PushedFilters", ""))
+      try {
+        table.delete($"id" <= 5L)
+        // the listener bus is async: wait for the scan to surface
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (!pushed.exists(_.contains("LessThanOrEqual(id,5)")) &&
+            System.nanoTime() < deadline) Thread.sleep(50)
+      } finally spark.listenerManager.unregister(listener)
+      assert(pushed.exists(_.contains("LessThanOrEqual(id,5)")), pushed)
+      assert(table.toDF.count() == 84L)
+    }
+  }
+
 }
