@@ -206,31 +206,23 @@ object GraftExtensions {
 
   /** SQL and `format("graft-delta")` batch reads of a table with deletion
     * vectors: each READ of an [[graft.delta.read.InsertableDeltaRelation]]
-    * becomes `Project(lr.output, <lr minus its DV-hidden rows>)`, the
-    * filter coming from [[graft.delta.read.LiveRows]] like every other
-    * scan's. `InsertIntoStatement.table` is not a child, so insert
-    * targets stay bare; DML routing finds the relation among the leaves.
-    * A DV-free snapshot keeps the bare relation. The wrapped relation is
-    * tagged so this rule (and the nested analysis that builds the
-    * filter) never wraps it twice. */
+    * becomes `Project(lr.output, Filter(<row is live>, lr))`, the filter
+    * coming from [[graft.delta.read.LiveRows]] like every other scan's.
+    * `InsertIntoStatement.table` is not a child, so insert targets stay
+    * bare; DML routing finds the relation among the leaves. A DV-free
+    * snapshot keeps the bare relation, and a relation already filtered is
+    * left alone. */
   object FilterDeletedRows
     extends org.apache.spark.sql.catalyst.rules.Rule[
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.catalyst.trees.TreeNodeTag
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     import graft.delta.read.InsertableDeltaRelation
 
-    private val Filtered = TreeNodeTag[Unit]("graft.dvFiltered")
-
     override def apply(plan: LogicalPlan): LogicalPlan =
       plan.resolveOperatorsUp {
-        case lr @ LogicalRelation(rel: InsertableDeltaRelation, _, _, false, _)
-            if lr.getTagValue(Filtered).isEmpty =>
-          // tag a copy: `lr` may be shared with plans analyzed elsewhere
-          val marked = lr.copy()
-          marked.setTagValue(Filtered, ())
-          graft.delta.read.LiveRows.filterSqlRead(marked, rel)
+        case lr @ LogicalRelation(rel: InsertableDeltaRelation, _, _, false, _) =>
+          graft.delta.read.LiveRows.filterSqlRead(lr, rel)
       }
   }
 

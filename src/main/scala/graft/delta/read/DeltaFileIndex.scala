@@ -3,7 +3,7 @@ package graft.delta.read
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
 import graft.delta.{AddFile, Snapshot}
@@ -23,7 +23,11 @@ import graft.delta.{AddFile, Snapshot}
   *    for the same reason, DeltaHelper.scala:170-186);
   *  - partition values are decoded from the log's string map, NOT from
   *    directory names — Delta semantics require log-supplied values
-  *    (hive/DeltaInputFormat.scala:43-45).
+  *    (hive/DeltaInputFormat.scala:43-45);
+  *  - each listed file carries its deletion-vector descriptor, if any, as
+  *    the constant `_metadata.dv_descriptor` of its splits: the task that
+  *    reads the file drops its deleted rows itself ([[LiveRows]]), and
+  *    only files that survive pruning ever bring a bitmap into play.
   *
   * The file list is either a driver-side `Seq[AddFile]` (small logs, DML
   * rewrites over known files) or a `Dataset[AddFile]` from the
@@ -59,10 +63,10 @@ class DeltaFileIndex private (
 
   /** COUNT(*) from file statistics alone — `Some(total)` only when EVERY
     * active file records `numRecords` and none carries a deletion vector
-    * (a shade changes the visible row count through the anti-join, which
-    * lives outside this relation). The distributed source aggregates in
-    * a Spark job over the narrow AddFile dataset; the scan of actual
-    * data files — the 100 TB — never happens. */
+    * (a shade changes the visible row count through the filter
+    * [[LiveRows]] plans above this relation). The distributed source
+    * aggregates in a Spark job over the narrow AddFile dataset; the scan
+    * of actual data files — the 100 TB — never happens. */
   lazy val metadataOnlyCount: Option[Long] =
     metadataAggregate(Seq(DeltaFileIndex.StarSpec))
       .map(_.head.asInstanceOf[Long])
@@ -93,12 +97,12 @@ class DeltaFileIndex private (
     val files = prunedFiles(partitionFilters, dataFilters)
     if (partitionSchema.isEmpty) {
       Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty,
-        files.map(toFileStatus).toArray))
+        files.map(toFileStatus)))
     } else {
       files.groupBy(_.partitionValues).toSeq.map { case (values, group) =>
         PartitionDirectory(
           PartitionUtils.partitionRow(partitionSchema, values),
-          group.map(toFileStatus).toArray)
+          group.map(toFileStatus))
       }
     }
   }
@@ -111,7 +115,7 @@ class DeltaFileIndex private (
   private val statLenCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  private def toFileStatus(add: graft.delta.AddFile): FileStatus = {
+  private def toFileStatus(add: graft.delta.AddFile): FileStatusWithMetadata = {
     // a 0-length status plans ZERO splits and the file is silently never
     // read — a derived-delete CDF entry built from a RemoveFile without
     // size (optional per protocol; foreign writers omit it) would drop
@@ -124,8 +128,8 @@ class DeltaFileIndex private (
         p.getFileSystem(spark.sessionState.newHadoopConf())
           .getFileStatus(p).getLen
       }).longValue()
-    new FileStatus(size, false, 1, 128L * 1024 * 1024,
-      add.modificationTime, absolutePath(add.path))
+    FileStatusWithMetadata(new FileStatus(size, false, 1, 128L * 1024 * 1024,
+      add.modificationTime, absolutePath(add.path)), DvFilter.fileMetadata(add))
   }
 
   override def inputFiles: Array[String] = source match {

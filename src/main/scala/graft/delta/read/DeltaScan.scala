@@ -1,13 +1,23 @@
 package graft.delta.read
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, BinaryExpression, Expression, FileSourceMetadataAttribute, GetStructField, Predicate}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.delta.{AddFile, DeltaLog, Encs, Metadata, Snapshot}
+import graft.delta.{AddFile, DeletionVectorDescriptor, DeltaLog, JsonCodec, Metadata, SerializableHadoopConf, Snapshot}
+import graft.delta.dv.{DeletionVectors, RoaringBitmapArray}
 
 /** Filtered file scan with the reference's pushed/residual contract
   * (SURVEY §2.3 S1/S2; ref DeltaScan.java:33-67,
@@ -100,12 +110,15 @@ class DeltaScanBuilder(snapshot: Snapshot) {
   *    apply natively, and partition values stitch in from the log;
   *  - the format is a [[GuardedParquetFileFormat]] carrying the table's
   *    logical→physical name and field-id mapping;
-  *  - rows a deletion vector hides are never returned: a (file,
-  *    row-position) ANTI-JOIN against the deleted positions
-  *    ([[DvFilter]]). A file set without descriptors plans no join;
+  *  - rows a deletion vector hides are never returned: each listed file
+  *    carries its own descriptor to the task that reads it, and one
+  *    deterministic `Filter` drops a row whose `_metadata.row_index` is
+  *    in that file's bitmap ([[DvFilter]]). No Spark job reads bitmaps
+  *    and nothing joins; a file set that cannot hold a descriptor plans
+  *    no filter;
   *  - the frame presents the table schema in declared order (the
   *    relation appends partition columns last), plus any `extra` columns
-  *    the caller asks for — evaluated after the anti-join, so
+  *    the caller asks for — evaluated after the filter, so
   *    `_metadata.file_path`/`_metadata.row_index` reach DML that shades by
   *    position.
   *
@@ -123,9 +136,12 @@ object LiveRows {
       metadata: Metadata = snapshot.metadata,
       streaming: Boolean = false,
       extra: Seq[Column] = Nil): DataFrame = {
-    val rows = frame(snapshot.spark, new DeltaFileIndex(snapshot.spark, snapshot),
-      metadata, metadata, streaming)
-    project(dropDeleted(rows, snapshot), metadata, extra)
+    val spark = snapshot.spark
+    val scan = LogicalRelation(relation(spark,
+      new DeltaFileIndex(spark, snapshot), metadata, metadata), streaming)
+    frame(spark,
+      if (snapshot.dvCardinality == 0L) scan else DvFilter(scan, snapshot.deltaLog),
+      metadata, extra)
   }
 
   /** The live rows of `files`. `metadata` shapes the relation; `mapping`
@@ -136,10 +152,12 @@ object LiveRows {
       streaming: Boolean = false,
       extra: Seq[Column] = Nil): DataFrame = {
     val spark = deltaLog.spark
-    val rows = frame(spark,
+    val scan = LogicalRelation(relation(spark,
       new DeltaFileIndex(spark, deltaLog.dataPath, metadata, files),
-      metadata, mapping, streaming)
-    project(DvFilter.forFiles(rows, files, deltaLog.dataPath, deltaLog.hadoopConf),
+      metadata, mapping), streaming)
+    frame(spark,
+      if (files.exists(_.deletionVector.isDefined)) DvFilter(scan, deltaLog)
+      else scan,
       metadata, extra)
   }
 
@@ -158,90 +176,137 @@ object LiveRows {
 
   /** A resolved SQL read of [[InsertableDeltaRelation]] `lr`, minus the
     * rows its snapshot's deletion vectors hide; `lr.output` is kept, so
-    * references above stay bound and DML routing still finds `lr` among
-    * the leaves. A DV-free snapshot returns `lr` itself. */
+    * references above stay bound and DML routing still finds the
+    * relation among the leaves. A DV-free snapshot, or a read this
+    * already filtered, returns `lr` itself. */
   private[graft] def filterSqlRead(lr: LogicalRelation,
                                    rel: InsertableDeltaRelation): LogicalPlan =
-    if (rel.snapshot.dvCardinality == 0L) lr
-    else Project(lr.output,
-      dropDeleted(Shims.ofRows(rel.snapshot.spark, lr), rel.snapshot)
-        .queryExecution.analyzed)
+    if (rel.snapshot.dvCardinality == 0L || DvFilter.filtered(lr)) lr
+    else DvFilter(lr, rel.snapshot.deltaLog)
 
   /** The table columns in declared order. */
   private[read] def tableColumns(metadata: Metadata): Seq[Column] =
     metadata.schema.fieldNames.toSeq.map(n => col(s"`${n.replace("`", "``")}`"))
 
-  private def frame(spark: SparkSession, index: DeltaFileIndex,
-                    metadata: Metadata, mapping: Metadata,
-                    streaming: Boolean): DataFrame =
-    Shims.relationToDataFrame(spark, relation(spark, index, metadata, mapping),
-      streaming)
-
-  private def dropDeleted(df: DataFrame, snapshot: Snapshot): DataFrame =
-    if (snapshot.dvCardinality == 0L) df
-    else DvFilter(df, snapshot.dvFiles, snapshot.dvCardinality,
-      snapshot.deltaLog.dataPath, snapshot.deltaLog.hadoopConf)
-
-  private def project(df: DataFrame, metadata: Metadata,
-                      extra: Seq[Column]): DataFrame = {
+  private def frame(spark: SparkSession, plan: LogicalPlan, metadata: Metadata,
+                    extra: Seq[Column]): DataFrame = {
+    val df = Shims.ofRows(spark, plan)
     val cols = tableColumns(metadata) ++ extra
     if (cols.isEmpty) df else df.select(cols: _*)
   }
 }
 
-/** The deletion-vector row filter, private to [[LiveRows]]: anti-join the
-  * frame's `(_metadata.file_path, _metadata.row_index)` against the
-  * exploded deleted positions, read on EXECUTORS from the descriptors.
-  * `_metadata.row_index` is split-correct — Spark computes it against the
-  * file's row groups, so parallel splits of one parquet file keep
-  * absolute positions. The total deleted cardinality is known from the
-  * log alone (descriptor `cardinality` sums), so the broadcast decision
-  * needs no data read. */
-private object DvFilter {
+/** The deletion-vector row filter, private to [[LiveRows]]. Each file a
+  * [[DeltaFileIndex]] lists with a deletion vector carries the
+  * descriptor (its JSON form) as the constant metadata field
+  * `_metadata.dv_descriptor` ([[GuardedParquetFileFormat]] declares it;
+  * Spark copies the listing's per-file map into the split). The filter
+  * keeps a row when that field is null or when the row's
+  * `_metadata.row_index` is not in the file's bitmap. `row_index` is
+  * split-correct — Spark computes it against the file's row groups, so
+  * parallel splits of one parquet file keep absolute positions, under
+  * the vectorized reader and the row reader alike. Bitmaps are read
+  * inside the scan task, only for files that survived pruning
+  * ([[DvRowIsLive]]). */
+private[read] object DvFilter {
 
-  /** Positions under ~1M broadcast (a few MB of (path, long) rows); above
-    * that the join shuffles — still linear in deleted rows, never in the
-    * table. */
-  private val BroadcastPositionsMax = 1000000L
+  /** The `_metadata` field holding a file's descriptor. */
+  val Field = "dv_descriptor"
 
-  def apply(df: DataFrame,
-            dvFiles: org.apache.spark.sql.Dataset[AddFile],
-            totalCardinality: Long,
-            dataPath: org.apache.hadoop.fs.Path,
-            hadoopConf: org.apache.hadoop.conf.Configuration): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dataPathStr = dataPath.toString
-    val conf = new graft.delta.SerializableHadoopConf(hadoopConf)
-    val deleted = dvFiles.flatMap { add =>
-      val tablePath = new org.apache.hadoop.fs.Path(dataPathStr)
-      val bitmap = graft.delta.dv.DeletionVectors.readBitmap(
-        add.deletionVector.get, tablePath, conf.value)
-      // _metadata.file_path spells files the SparkPath way — match it
-      // (PartitionUtils.inputFileName scaladoc)
-      val file = PartitionUtils.inputFileName(tablePath, add.path)
-      bitmap.values.map(pos => (file, pos))
-    }.toDF("__dv_file", "__dv_pos")
-    val right =
-      if (totalCardinality <= BroadcastPositionsMax) broadcast(deleted)
-      else deleted
-    df.join(right,
-        col("_metadata.file_path") === col("__dv_file") &&
-          col("_metadata.row_index") === col("__dv_pos"),
-        "left_anti")
+  private val Filtered = TreeNodeTag[Unit]("graft.dvFiltered")
+
+  /** The listing's per-file metadata map for `add`: its descriptor, or
+    * nothing for a file without a deletion vector. */
+  def fileMetadata(add: AddFile): Map[String, Any] =
+    add.deletionVector.fold(Map.empty[String, Any])(dv =>
+      Map(Field -> JsonCodec.mapper.writeValueAsString(dv)))
+
+  def descriptor(json: String): DeletionVectorDescriptor =
+    JsonCodec.mapper.readValue(json, classOf[DeletionVectorDescriptor])
+
+  /** Whether `scan` is the relation of a plan [[apply]] built. */
+  def filtered(scan: LogicalRelation): Boolean =
+    scan.getTagValue(Filtered).isDefined
+
+  /** `Project(scan.output, Filter(<row is live>, scan + _metadata))`. The
+    * Hadoop conf ships to executors once, as one broadcast. */
+  def apply(scan: LogicalRelation, deltaLog: DeltaLog): LogicalPlan = {
+    val withMeta = scan.copy(output =
+      scan.output ++ scan.metadataOutput.filterNot(scan.outputSet.contains))
+    withMeta.setTagValue(Filtered, ())
+    val meta = withMeta.output.collectFirst {
+      case FileSourceMetadataAttribute(a) => a
+    }.get
+    val fields = meta.dataType.asInstanceOf[StructType]
+    def field(name: String): Expression =
+      GetStructField(meta, fields.fieldIndex(name), Some(name))
+    val conf = deltaLog.spark.sparkContext.broadcast(
+      new SerializableHadoopConf(deltaLog.hadoopConf))
+    Project(scan.output, Filter(
+      DvRowIsLive(field(Field), field(ParquetFileFormat.ROW_INDEX),
+        deltaLog.dataPath.toString, conf),
+      withMeta))
   }
+}
 
-  /** Driver-side-file-list face: only files carrying a descriptor join. */
-  def forFiles(df: DataFrame, files: Seq[AddFile],
-               dataPath: org.apache.hadoop.fs.Path,
-               hadoopConf: org.apache.hadoop.conf.Configuration): DataFrame = {
-    val withDv = files.filter(_.deletionVector.isDefined)
-    if (withDv.isEmpty) df
-    else {
-      implicit val addEnc = Encs.addFile
-      apply(df, df.sparkSession.createDataset(withDv),
-        withDv.iterator.flatMap(_.deletionVector).map(_.cardinality).sum,
-        dataPath, hadoopConf)
+/** True when the row at position `rowIndex` of a file with descriptor
+  * `descriptor` (JSON, null = no deletion vector) is live. Deterministic,
+  * so the caller's other conjuncts still reach parquet as pushed filters.
+  * Each task reads a file's bitmap at most once, through
+  * [[graft.delta.dv.DeletionVectors.readBitmap]] (size and CRC checks
+  * included), and caches it on the descriptor value, so no row parses a
+  * descriptor. */
+private[read] case class DvRowIsLive(
+    descriptor: Expression,
+    rowIndex: Expression,
+    tablePath: String,
+    conf: Broadcast[SerializableHadoopConf])
+  extends BinaryExpression with Predicate {
+
+  override def left: Expression = descriptor
+  override def right: Expression = rowIndex
+  override def nullable: Boolean = false
+  override def prettyName: String = "dv_row_is_live"
+  override def toString: String = s"$prettyName($descriptor, $rowIndex)"
+
+  // per-task caches (the expression deserializes once per task)
+  @transient private lazy val bitmaps =
+    new java.util.HashMap[UTF8String, RoaringBitmapArray]()
+  @transient private var lastDescriptor: UTF8String = _
+  @transient private var lastBitmap: RoaringBitmapArray = _
+
+  /** Whether `pos` is deleted in the file with descriptor `d`. */
+  def deleted(d: UTF8String, pos: Long): Boolean = {
+    if (!d.equals(lastDescriptor)) {
+      // the row's string may point into a reused buffer: key by a copy
+      lastDescriptor = d.clone()
+      lastBitmap = bitmaps.computeIfAbsent(lastDescriptor, k =>
+        DeletionVectors.readBitmap(DvFilter.descriptor(k.toString),
+          new Path(tablePath), conf.value.value))
     }
+    lastBitmap.contains(pos)
   }
+
+  override def eval(input: InternalRow): Any = {
+    val d = descriptor.eval(input)
+    d == null ||
+      !deleted(d.asInstanceOf[UTF8String], rowIndex.eval(input).asInstanceOf[Long])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("dvRowIsLive", this)
+    val d = descriptor.genCode(ctx)
+    val pos = rowIndex.genCode(ctx)
+    ev.copy(code = code"""
+      ${d.code}
+      boolean ${ev.value} = true;
+      if (!${d.isNull}) {
+        ${pos.code}
+        ${ev.value} = !$self.deleted(${d.value}, ${pos.value});
+      }""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DvRowIsLive =
+    copy(descriptor = newLeft, rowIndex = newRight)
 }

@@ -3,11 +3,12 @@ package graft.delta.read
 import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.FileSourceConstantMetadataStructField
 import org.apache.spark.sql.execution.datasources.{OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** ParquetFileFormat whose WRITE path is disabled, with optional
   * logical→physical column-name mapping for renamed columns.
@@ -39,7 +40,14 @@ import org.apache.spark.sql.types.StructType
   * anything at all (the Iceberg-convert case) still binds by id. Spark's
   * own `ParquetFileFormat` never writes that conf key (only
   * `ParquetReadSupport` consults it from the task conf), so setting it
-  * here before building the reader is authoritative for this scan. */
+  * here before building the reader is authoritative for this scan.
+  *
+  * The format declares one metadata field beyond parquet's own:
+  * `_metadata.dv_descriptor`, a per-file constant (string, null for a
+  * file without a deletion vector) that [[DeltaFileIndex]] fills from
+  * each listed file's descriptor. [[LiveRows]]' deletion-vector filter
+  * reads it next to `_metadata.row_index`; declaring it here makes it
+  * resolve on every relation of this format, SQL ones included. */
 class GuardedParquetFileFormat(
     nameMapping: Map[String, String] = Map.empty,
     fieldIds: Map[String, Int] = Map.empty) extends ParquetFileFormat {
@@ -56,6 +64,10 @@ class GuardedParquetFileFormat(
         "(spark.sql.extensions=graft.GraftExtensions) or use " +
         "DeltaTable.write / df.write.format(\"graft-delta\").")
   }
+
+  override def metadataSchemaFields: Seq[StructField] =
+    super.metadataSchemaFields :+
+      FileSourceConstantMetadataStructField(DvFilter.Field, StringType, nullable = true)
 
   private def physical(schema: StructType): StructType = {
     // stamp ids FIRST (fieldIds is keyed by dotted LOGICAL paths and

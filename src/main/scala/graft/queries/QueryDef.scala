@@ -57,6 +57,17 @@ object Tables {
     ScratchDirs.register(
       java.nio.file.Files.createTempDirectory(s"graft_$prefix").toString)
 
+  /** Source-table schemas, inferred once per (dir, name):
+    * `spark.read.parquet` otherwise infers the schema on EVERY call, a
+    * footer-reading Spark job (profiled ~30-40 ms driver-side per call,
+    * 2-4 calls per query). Only the schema is memoized, never a frame: a
+    * DataFrame reaches its session strongly, so a session-keyed frame
+    * memo could never release a dropped session. Every call builds a
+    * fresh frame, and every execution still scans the parquet files. */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String),
+      org.apache.spark.sql.types.StructType]()
+
   /** Load one of the driver-generated tables from an sf directory.
     *
     * `events.ts` has been generated as either parquet TIMESTAMP(NANOS)
@@ -68,49 +79,26 @@ object Tables {
     * 53-bit mantissa, so no floating-point division); when it loads as a
     * timestamp it is already micros — use it as is.
     */
-  /** Plan-level memo of the source-table frames: `spark.read.parquet`
-    * re-lists the directory and re-reads footers for schema on EVERY call
-    * (profiled ~30-40 ms driver-side per call, 2-4 calls per query).
-    * The cached object is a LOGICAL PLAN — every execution still scans
-    * the parquet files; nothing about results or data is cached. Keyed by
-    * session identity so a fresh session (new JVM, tests) rebuilds. */
-  private val tableMemo =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
-
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // keyed on the session OBJECT (weakly): identityHashCode can collide
-    // after a stopped session is GC'd, handing a new session a memoized
-    // frame bound to the dead one
-    val perSession = tableMemo.synchronized {
-      var m = tableMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-        tableMemo.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent((dir, name), _ => tUncached(spark, dir, name))
-  }
-
-  private def tUncached(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          // naive micros: the mains pin the session timezone to UTC, so
-          // this cast is micros-identity and downstream unix_micros /
-          // window functions see the same instants DuckDB computes on
-          // the naive values
-          raw.withColumn("ts",
-            col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
-    } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+    }
+    val schema = schemaMemo.computeIfAbsent((dir, name),
+      _ => spark.read.parquet(path).schema)
+    val raw = spark.read.schema(schema).parquet(path)
+    if (name != "events") raw
+    else raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case org.apache.spark.sql.types.TimestampNTZType =>
+        // naive micros: the mains pin the session timezone to UTC, so
+        // this cast is micros-identity and downstream unix_micros /
+        // window functions see the same instants DuckDB computes on
+        // the naive values
+        raw.withColumn("ts",
+          col("ts").cast(org.apache.spark.sql.types.TimestampType))
+      case _ => raw
     }
   }
 }

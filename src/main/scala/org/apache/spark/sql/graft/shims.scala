@@ -33,17 +33,6 @@ object Shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Wrap a BaseRelation as a (optionally streaming-tagged) DataFrame —
-    * what Source.getBatch must return for the micro-batch executor. */
-  def relationToDataFrame(spark: org.apache.spark.sql.SparkSession,
-                          relation: org.apache.spark.sql.sources.BaseRelation,
-                          isStreaming: Boolean): org.apache.spark.sql.DataFrame = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    org.apache.spark.sql.classic.Dataset.ofRows(cs,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(
-        relation, isStreaming))
-  }
-
   /** Rebind a sink-side streaming micro-batch as a writable batch
     * DataFrame (the incoming frame is tagged streaming and cannot be
     * written directly — the standard V1 sink pattern). */

@@ -9,10 +9,11 @@ import graft.delta.dv.{DeletionVectors, RoaringBitmapArray, Z85}
 
 /** Deletion-vector READS (PROTOCOL.md "Deletion Vectors"): descriptors on
   * AddFile locate a serialized roaring bitmap of deleted row positions,
-  * applied at scan as a (file, row_index) anti-filter. The byte-level
-  * tests pin our codec to the PUBLISHED formats (Z85 reference vector,
-  * hand-built RoaringFormatSpec layouts) rather than to our own writer,
-  * so reader and writer cannot be wrong together. */
+  * applied inside the scan: each file's descriptor rides with its splits
+  * and a row whose `_metadata.row_index` is in the bitmap is dropped. The
+  * byte-level tests pin our codec to the PUBLISHED formats (Z85 reference
+  * vector, hand-built RoaringFormatSpec layouts) rather than to our own
+  * writer, so reader and writer cannot be wrong together. */
 class DeletionVectorSpec extends SparkSpec {
   import spark.implicits._
 
@@ -310,8 +311,6 @@ class DeletionVectorSpec extends SparkSpec {
       assert(DeltaLog.forTable(spark, dir).update().dvCardinality == 4L)
       val live = (4L until 10L).toSeq
 
-      def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-        df.select("id").as[Long].collect().sorted.toSeq
       val streamed = scala.collection.mutable.ArrayBuffer.empty[Long]
       val q = spark.readStream.format("graft-delta").load(dir).writeStream
         .option("checkpointLocation", s"$wh/_ckpt")
@@ -340,17 +339,103 @@ class DeletionVectorSpec extends SparkSpec {
       // a filtered SQL read and a catalog DML still see the live rows only
       assert(spark.sql("SELECT count(*) FROM graftdv.db.t WHERE p = 'p0'")
         .as[Long].head() == 3L)
-      // a self-join filters each side exactly once
+      // a self-join filters each side exactly once, inside its scan: the
+      // only join is the query's own
       val self = spark.sql("SELECT count(*) FROM graftdv.db.t a " +
         "JOIN graftdv.db.t b ON a.id = b.id")
       assert(self.as[Long].head() == live.size)
-      assert(self.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
-      }.size == 2)
+      val optimized = self.queryExecution.optimizedPlan
+      assert(optimized.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+          if f.condition.exists(_.prettyName == "dv_row_is_live") => f
+      }.size == 2, optimized)
+      assert(optimized.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.size == 1, optimized)
       spark.sql("UPDATE graftdv.db.t SET id = id + 100 WHERE id >= 8")
       assert(ids(spark.sql("SELECT id FROM graftdv.db.t")) ==
         Seq(4L, 5L, 6L, 7L, 108L, 109L))
+    }
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("id").as[Long].collect().sorted.toSeq
+
+  test("a shaded multi-row-group file read in mid-file splits returns " +
+      "exactly its live rows, vectorized and not") {
+    withTempDir { dir =>
+      spark.conf.set("parquet.block.size", "16384")
+      try DeltaTable.write((0 until 20000).map(i => (i.toLong, s"row-$i"))
+        .toDF("id", "pad").repartition(1).sortWithinPartitions("id"), dir)
+      finally spark.conf.unset("parquet.block.size")
+      val log = DeltaLog.forTable(spark, dir)
+      val file = log.update().allFiles.head
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(log.dataPath, file.path), log.hadoopConf))
+      val rowGroups = try reader.getFooter.getBlocks.size finally reader.close()
+      assert(rowGroups > 4, s"$rowGroups row groups")
+      val deleted = ((0L until 20000L by 7L) :+ 19999L).toSet
+      attachDv(dir, deleted.toSeq.sorted, inline = false)
+      val live = (0L until 20000L).filterNot(deleted)
+      Seq("true", "false").foreach { vectorized =>
+        spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", (file.size / 5).toString)
+        try {
+          val df = DeltaTable.forPath(spark, dir).toDF
+          assert(df.rdd.getNumPartitions > 1, s"vectorized=$vectorized")
+          assert(ids(df) == live, s"vectorized=$vectorized")
+          assert(df.count() == live.size, s"vectorized=$vectorized")
+        } finally {
+          spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+          spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        }
+      }
+    }
+  }
+
+  test("a scan whose surviving files carry no DV runs no more jobs than " +
+      "the same scan over a DV-free copy") {
+    withTempDir { root =>
+      val data = (0 until 40).map(i => (i.toLong, if (i < 20) "a" else "b"))
+        .toDF("id", "p").repartition(1)
+      Seq("shaded", "clean").foreach(name =>
+        DeltaTable.write(data, s"$root/$name", partitionBy = Seq("p"),
+          configuration = Map("delta.enableDeletionVectors" -> "true")))
+      DeltaTable.forPath(spark, s"$root/shaded").delete($"id" < 5L)
+      assert(DeltaLog.forTable(spark, s"$root/shaded").update().dvCardinality == 5L)
+      def scan(name: String): Long = DeltaTable.forPath(spark, s"$root/$name")
+        .toDF.filter($"p" === "b").agg(sum("id")).as[Long].head()
+      // warm both, so only the scan itself is counted
+      scan("shaded"); scan("clean")
+      val (shadedSum, shadedJobs) = jobsLaunchedBy(scan("shaded"))
+      val (cleanSum, cleanJobs) = jobsLaunchedBy(scan("clean"))
+      assert(shadedSum == (20L until 40L).sum && cleanSum == shadedSum)
+      assert(shadedJobs <= cleanJobs,
+        s"shaded scan ran $shadedJobs jobs, DV-free copy $cleanJobs")
+    }
+  }
+
+  test("a distributed-state snapshot with a shade returns the live rows") {
+    withTempDir { dir =>
+      DeltaTable.write((0 until 30).map(i => (i.toLong, s"p${i % 3}"))
+        .toDF("id", "p").repartition(3), dir, partitionBy = Seq("p"),
+        configuration = Map("delta.enableDeletionVectors" -> "true"))
+      DeltaTable.forPath(spark, dir).delete($"id" % 4L === 0L)
+      val live = (0L until 30L).filterNot(_ % 4 == 0)
+      DeltaLog.clearCache()
+      spark.conf.set(Snapshot.DriverStateMaxBytesKey, "1") // force distributed
+      try {
+        val snap = DeltaLog.forTable(spark, dir).update()
+        assert(snap.distributedState && snap.dvCardinality == 8L)
+        val table = DeltaTable.forPath(spark, dir)
+        assert(ids(table.toDF) == live)
+        assert(ids(table.toDF.filter($"p" === "p1")) == live.filter(_ % 3 == 1))
+        assert(ids(spark.read.format("graft-delta").load(dir)) == live)
+      } finally {
+        spark.conf.unset(Snapshot.DriverStateMaxBytesKey)
+        DeltaLog.clearCache()
+      }
     }
   }
 

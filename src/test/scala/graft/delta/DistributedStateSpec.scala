@@ -15,34 +15,6 @@ import graft.SparkSpec
 class DistributedStateSpec extends SparkSpec {
   import spark.implicits._
 
-  /** `f`'s result and the number of Spark jobs it launched. Listener
-    * events arrive asynchronously but in order, so a marker job run
-    * afterwards flushes them: once its start is seen, every earlier
-    * job's start has been counted. */
-  private def jobsLaunchedBy[T](f: => T): (T, Int) = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      sc.setJobGroup("jobs-marker", "flush the listener bus")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("jobs-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("jobs-marker"), "listener bus did not drain")
-      (out, groups.asScala.count(_ != "jobs-marker"))
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Commit `n` synthetic AddFiles (log-only; no parquet behind them) in
     * partitions other than the real one — if a scan ever touches them,
     * the read fails loudly on the missing files. */

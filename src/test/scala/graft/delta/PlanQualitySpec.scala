@@ -175,14 +175,17 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
-  test("one scan constructor: DV-free file sets plan no join, a shade one " +
-      "broadcast anti-join, and DV DML predicates stay pushed") {
-    import org.apache.spark.sql.catalyst.plans.LeftAnti
-    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+  test("one scan constructor: DV-free file sets plan no DV filter, a shade " +
+      "one in-scan filter and no join, and DV DML predicates stay pushed") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def joins(df: org.apache.spark.sql.DataFrame): Seq[Join] =
       df.queryExecution.optimizedPlan.collect { case j: Join => j }
+    def dvFilters(df: org.apache.spark.sql.DataFrame): Seq[Filter] =
+      df.queryExecution.optimizedPlan.collect {
+        case f: Filter if f.condition.exists(_.prettyName == "dv_row_is_live") => f
+      }
     def scans(plan: SparkPlan): Seq[FileSourceScanExec] = plan match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
       case q: QueryStageExec => scans(q.plan)
@@ -195,17 +198,19 @@ class PlanQualitySpec extends SparkSpec {
         configuration = Map("delta.enableDeletionVectors" -> "true"))
       val table = DeltaTable.forPath(spark, dir)
       val clean = table.deltaLog.update()
-      assert(joins(table.toDF).isEmpty)
-      assert(joins(read.LiveRows.files(table.deltaLog, clean.metadata,
-        clean.allFiles)()).isEmpty)
+      val cleanFiles = read.LiveRows.files(table.deltaLog, clean.metadata,
+        clean.allFiles)()
+      Seq(table.toDF, cleanFiles).foreach { df =>
+        assert(joins(df).isEmpty && dvFilters(df).isEmpty, df.queryExecution)
+      }
 
       table.delete($"id" >= 90L)
-      val shaded = joins(table.toDF)
-      assert(shaded.size == 1 && shaded.head.joinType == LeftAnti, shaded)
-      assert(shaded.head.hint.rightHint.exists(_.strategy.contains(BROADCAST)),
-        shaded.head.hint)
+      val shaded = table.toDF
+      assert(joins(shaded).isEmpty, shaded.queryExecution)
+      assert(dvFilters(shaded).size == 1, shaded.queryExecution)
+      assert(shaded.count() == 90L)
 
-      // a second delete scans the shaded file through the anti-join; its
+      // a second delete scans the shaded file through the DV filter; its
       // predicate must still reach parquet
       val captured = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
       val listener = new org.apache.spark.sql.util.QueryExecutionListener {
