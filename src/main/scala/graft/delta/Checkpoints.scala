@@ -518,9 +518,12 @@ object Checkpoints {
     } finally fs.delete(ticket, false)
   }
 
+  /** `actionsDS` is by-name: the driver-small path writes `driverRows`
+    * and never builds the Dataset (encoding every action through a
+    * freshly generated serializer just to drop it). */
   private def writeCheckpointDS(
       snapshot: Snapshot,
-      actionsDS: org.apache.spark.sql.Dataset[SingleAction],
+      actionsDS: => org.apache.spark.sql.Dataset[SingleAction],
       knownSize: Long,
       parts: Int,
       driverRows: Option[Seq[SingleAction]] = None): Unit = {

@@ -2,6 +2,7 @@ package graft.delta.write
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.conf.{HadoopParquetConfiguration, ParquetConfiguration}
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{Encoder, SparkSession}
@@ -26,7 +27,18 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
   *
   * [[onDriver]] is the only place that decides "local and small enough"
   * and [[readArtifacts]] the only reader that acts on it; at scale, or
-  * off the local scheme, the Spark-job path runs unchanged. */
+  * off the local scheme, the Spark-job path runs unchanged.
+  *
+  * Driver cost is held to what a log replay costs. Each action encoder
+  * is bound ONCE PER THREAD ([[bound]]): generating its serializer, or
+  * resolving its deserializer and the `SafeProjection` source behind it,
+  * used to dominate a cold snapshot load, and Janino caches compiles but
+  * not source generation. The cache is per thread because the bound
+  * serializer and deserializer hold mutable projections, and concurrent
+  * writers checkpoint on their own threads. Readers take the session
+  * conf through the `ParquetReader.Builder(InputFile, ParquetConfiguration)`
+  * constructor: the single-argument one builds a default Hadoop
+  * `Configuration` per file, which re-parses `core-default.xml`. */
 object LocalParquet {
 
   /** Rows a checkpoint artifact may be asked to hold driver-side; above
@@ -81,16 +93,19 @@ object LocalParquet {
     val writer = builder.build()
     var n = 0L
     try {
-      val toRow = ExpressionEncoder(enc.asInstanceOf[AgnosticEncoder[T]])
-        .createSerializer()
+      val toRow = bound(enc).serializer
       rows.foreach { r => writer.write(toRow(r)); n += 1 }
+      writer.close()
     } catch {
       case t: Throwable =>
-        try writer.close() catch { case _: Throwable => () }
-        java.nio.file.Files.deleteIfExists(nioPath)
+        // the caller sees the ORIGINAL failure; a close or delete that
+        // fails too rides along as suppressed, never in its place
+        def suppress(f: => Unit): Unit =
+          try f catch { case s: Throwable => if (s ne t) t.addSuppressed(s) }
+        suppress(writer.close())
+        suppress(java.nio.file.Files.deleteIfExists(nioPath))
         throw t
     }
-    writer.close()
     n
   }
 
@@ -98,6 +113,53 @@ object LocalParquet {
     extends ParquetWriter.Builder[InternalRow, RowBuilder](out) {
     override def getWriteSupport(conf: Configuration) = new ParquetWriteSupport
     override def self(): RowBuilder = this
+  }
+
+  /** One action encoder bound for one thread: the serializer and the
+    * resolved, bound deserializer are each built on first use. */
+  private final class Bound[T](enc: Encoder[T], owner: Bindings) {
+    private lazy val expr = ExpressionEncoder(enc.asInstanceOf[AgnosticEncoder[T]])
+    lazy val serializer: T => InternalRow = {
+      owner.builds += 1
+      expr.createSerializer()
+    }
+    lazy val deserializer: InternalRow => T = {
+      owner.builds += 1
+      expr.resolveAndBind().createDeserializer()
+    }
+  }
+
+  /** One thread's bound encoders, keyed by encoder identity: every
+    * caller passes a JVM-cached `Encs` member, so a thread holds one
+    * entry per action encoder. A caller minting encoders per call cannot
+    * grow it past [[MaxBound]]. */
+  private final class Bindings {
+    val byEncoder = new java.util.IdentityHashMap[Encoder[_], Bound[_]]()
+    var builds = 0L
+  }
+
+  private val MaxBound = 16
+
+  private val bindings = ThreadLocal.withInitial[Bindings](() => new Bindings)
+
+  private def bound[T](enc: Encoder[T]): Bound[T] = {
+    val tc = bindings.get
+    var c = tc.byEncoder.get(enc)
+    if (c == null) {
+      if (tc.byEncoder.size >= MaxBound) tc.byEncoder.clear()
+      c = new Bound(enc, tc)
+      tc.byEncoder.put(enc, c)
+    }
+    c.asInstanceOf[Bound[T]]
+  }
+
+  /** Serializers and deserializers built on the calling thread. */
+  private[delta] def bindBuilds: Long = bindings.get.builds
+
+  /** Encoders the calling thread holds bound. */
+  private[delta] def boundEncoders: Seq[Encoder[_]] = {
+    import scala.jdk.CollectionConverters._
+    bindings.get.byEncoder.keySet.asScala.toSeq
   }
 
   /** Bytes above which the driver-side read defers to a Spark job: a
@@ -155,13 +217,13 @@ object LocalParquet {
       sqlc.getConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).toString)
     conf.set(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key,
       sqlc.getConf(SQLConf.PARQUET_FIELD_ID_READ_ENABLED).toString)
-    val deser = ExpressionEncoder(enc.asInstanceOf[AgnosticEncoder[T]])
-      .resolveAndBind().createDeserializer()
+    val deser = bound(enc).deserializer
+    val parquetConf = new HadoopParquetConfiguration(conf)
     val out = Vector.newBuilder[T]
     paths.foreach { p =>
       val nioPath = java.nio.file.Paths.get(p.toUri.getPath)
       val reader = new RowReadBuilder(
-        new org.apache.parquet.io.LocalInputFile(nioPath))
+        new org.apache.parquet.io.LocalInputFile(nioPath), parquetConf)
         .withConf(conf).build()
       try {
         var row = reader.read()
@@ -174,8 +236,9 @@ object LocalParquet {
     out.result()
   }
 
-  private final class RowReadBuilder(in: org.apache.parquet.io.InputFile)
-    extends org.apache.parquet.hadoop.ParquetReader.Builder[InternalRow](in) {
+  private final class RowReadBuilder(in: org.apache.parquet.io.InputFile,
+                                     conf: ParquetConfiguration)
+    extends org.apache.parquet.hadoop.ParquetReader.Builder[InternalRow](in, conf) {
     override def getReadSupport()
       : org.apache.parquet.hadoop.api.ReadSupport[InternalRow] =
       new org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
