@@ -2,128 +2,83 @@ package graft.delta.dv
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-/** A 64-bit bitmap as an array of 32-bit Roaring bitmaps, implementing the
-  * "portable" serialization the Delta protocol prescribes for deletion
-  * vectors (PROTOCOL.md "Deletion Vectors"; the container-level layout is
-  * the public RoaringFormatSpec shared by CRoaring/RoaringBitmap).
+import org.roaringbitmap.{BitmapContainer, RoaringBitmap, RunContainer}
+
+/** A set of 64-bit row positions as an array of 32-bit Roaring bitmaps
+  * (`org.roaringbitmap`, which Spark already ships), one per bucket: `v`
+  * lives in bucket `v >>> 32` as the unsigned 32-bit value `v.toInt`.
+  * This is delta-spark's layout, so a probe is an array index plus the
+  * library's `contains`.
   *
-  * A 64-bit value `v` lives in 32-bit bitmap number `v >>> 32` at 32-bit
-  * position `v & 0xFFFFFFFF`; each 32-bit bitmap splits its values into
-  * containers keyed by the upper 16 bits, holding the lower 16:
+  * (De)serialization is the "portable" format the Delta protocol requires
+  * in deletion vectors (PROTOCOL.md "Deletion Vectors"), little-endian:
+  * magic `1681511377` (int32) ‖ bucket count (int64) ‖ for each bucket,
+  * its key (uint32) ‖ its 32-bit bitmap in the public RoaringFormatSpec.
+  * The writer emits every bucket `0..n-1`, empty interior ones included,
+  * as delta-spark does. The reader takes any non-negative, strictly
+  * increasing keys and leaves gaps empty: the jar's
+  * `Roaring64NavigableMap.serializePortable` skips empty buckets.
   *
-  *  - '''array''' container (cardinality ≤ 4096): sorted `uint16` values;
-  *  - '''bitmap''' container: 8 KiB bitset (1024 little-endian longs);
-  *  - '''run''' container: `(start, length-1)` `uint16` pairs.
+  * Output is run-free (cookie 12346, array and bitmap containers only).
+  * Values enter through `add`, which never run-compresses, and
+  * `serialize` turns any run container back into an array or bitmap
+  * first: a foreign writer's, or the full container `or` makes in
+  * `union`.
   *
-  * Deserialization accepts all three (foreign writers may run-compress);
-  * serialization emits the run-free cookie (12346) with array/bitmap
-  * containers — always-valid portable output.
-  *
-  * This is a purpose-built reader/builder, not a general bitmap library:
-  * only the operations the DV read path needs (membership, iteration,
-  * cardinality, building) exist, all on the serialized-format's own
-  * container model so (de)serialization is structural, not translated.
+  * The library trusts the bytes it reads. Two checks on bitmaps read from
+  * outside the program stay here:
+  *  - every run must end inside the 16-bit container space. The library
+  *    accepts a run `[65000, +1000]` and reports 1001 values, of which
+  *    536 fit: the rest would wrap onto other row positions and shade
+  *    the wrong rows;
+  *  - a bitmap container's header cardinality must match its bits. The
+  *    library reports the header's count, and a shade whose cardinality
+  *    equals a file's row count drops the whole file.
   */
-final class RoaringBitmapArray private (
-    /** bitmap index → container key → sorted container values.
-      * Kept normalized: no empty maps at the END of the array (trailing
-      * empty bitmaps would change the serialized form), though interior
-      * empty bitmaps are preserved (the portable format writes them). */
-    private val bitmaps: mutable.ArrayBuffer[
-      mutable.SortedMap[Int, RoaringBitmapArray.Container]]) {
-
-  import RoaringBitmapArray._
+final class RoaringBitmapArray private (private var buckets: Array[RoaringBitmap]) {
 
   def add(value: Long): Unit = {
     require(value >= 0, s"negative value $value")
-    val high = (value >>> 32).toInt
-    val low = value.toInt // 32-bit part, as unsigned
-    while (bitmaps.size <= high) bitmaps += mutable.SortedMap.empty
-    val key = low >>> 16
-    val bit = low & 0xffff
-    val m = bitmaps(high)
-    m.get(key) match {
-      case None => m(key) = Container.single(bit)
-      case Some(c) => m(key) = c.add(bit)
-    }
+    bucket((value >>> 32).toInt).add(value.toInt)
   }
 
+  /** A negative `value` has a bucket past any array, so it is absent. */
   def contains(value: Long): Boolean = {
-    if (value < 0) return false
-    val high = (value >>> 32).toInt
-    if (high >= bitmaps.size) return false
-    val low = value.toInt
-    bitmaps(high).get(low >>> 16).exists(_.contains(low & 0xffff))
+    val high = value >>> 32
+    high < buckets.length && buckets(high.toInt).contains(value.toInt)
   }
 
-  def cardinality: Long =
-    bitmaps.iterator.flatMap(_.valuesIterator).map(_.cardinality.toLong).sum
+  def cardinality: Long = buckets.iterator.map(_.getLongCardinality).sum
 
   /** All values in ascending order. */
   def values: Iterator[Long] =
-    bitmaps.iterator.zipWithIndex.flatMap { case (m, high) =>
-      m.iterator.flatMap { case (key, c) =>
-        c.values.map(bit =>
-          (high.toLong << 32) | (key.toLong << 16) | bit.toLong)
-      }
+    buckets.iterator.zipWithIndex.flatMap { case (bm, high) =>
+      bm.iterator.asScala.map(v => (high.toLong << 32) | Integer.toUnsignedLong(v))
     }
 
-  def isEmpty: Boolean = bitmaps.forall(_.isEmpty)
+  def isEmpty: Boolean = buckets.forall(_.isEmpty)
 
-  /** In-place union: container-wise merge of two sorted arrays — O(n+m)
-    * per container, replacing the O(n·m) one-bit-at-a-time `add` loop a
-    * caller would otherwise need (merging a full 65k-value container by
-    * `add` is quadratic: each insert copies the array). Union only adds
-    * values, so the no-trailing-empty-bitmap invariant is preserved. */
-  def union(other: RoaringBitmapArray): Unit = {
-    while (bitmaps.size < other.bitmaps.size) bitmaps += mutable.SortedMap.empty
-    var high = 0
-    while (high < other.bitmaps.size) {
-      val m = bitmaps(high)
-      other.bitmaps(high).foreach { case (key, oc) =>
-        m.get(key) match {
-          case None => m(key) = oc
-          case Some(c) => m(key) = c.union(oc)
-        }
-      }
-      high += 1
-    }
-  }
+  /** In-place union. */
+  def union(other: RoaringBitmapArray): Unit =
+    other.buckets.indices.foreach(i => bucket(i).or(other.buckets(i)))
 
-  /** Portable serialization: magic ‖ number-of-bitmaps (8B LE) ‖ each
-    * 32-bit bitmap with the run-free cookie + offset header. */
   def serialize(): Array[Byte] = {
-    val bufs = bitmaps.map(serializeBitmap)
-    val total = 4 + 8 + bufs.map(_.length).sum
-    val bb = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(PortableMagic)
-    bb.putLong(bitmaps.size.toLong)
-    bufs.foreach(bb.put)
+    buckets.foreach(_.removeRunCompression())
+    val bb = ByteBuffer
+      .allocate(4 + 8 + buckets.iterator.map(4 + _.serializedSizeInBytes).sum)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(RoaringBitmapArray.PortableMagic).putLong(buckets.length.toLong)
+    buckets.indices.foreach { key => bb.putInt(key); buckets(key).serialize(bb) }
     bb.array()
   }
 
-  private def serializeBitmap(
-      m: mutable.SortedMap[Int, Container]): Array[Byte] = {
-    val n = m.size
-    val containerBytes = m.valuesIterator.map(_.serializedSize).sum
-    val bb = ByteBuffer.allocate(4 + 4 + 4 * n + 4 * n + containerBytes)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(CookieNoRun)
-    bb.putInt(n)
-    m.foreach { case (key, c) =>
-      bb.putShort(key.toShort)
-      bb.putShort((c.cardinality - 1).toShort)
-    }
-    // offset header: byte positions of each container from bitmap start
-    var off = 4 + 4 + 4 * n + 4 * n
-    m.valuesIterator.foreach { c =>
-      bb.putInt(off)
-      off += c.serializedSize
-    }
-    m.valuesIterator.foreach(_.serializeInto(bb))
-    bb.array()
+  /** Bucket `i`, growing the array with empty buckets up to it. */
+  private def bucket(i: Int): RoaringBitmap = {
+    if (i >= buckets.length)
+      buckets ++= Array.fill(i + 1 - buckets.length)(new RoaringBitmap)
+    buckets(i)
   }
 }
 
@@ -133,60 +88,18 @@ object RoaringBitmapArray {
     * format the Delta protocol allows in deletion vectors). */
   val PortableMagic = 1681511377
 
-  private val CookieNoRun = 12346
-  private val CookieWithRun = 12347
-  private val ArrayMaxCardinality = 4096
-  /** With the run cookie, the offset header only exists at ≥ 4 keys. */
-  private val NoOffsetThreshold = 4
+  def apply(values: Long*): RoaringBitmapArray = fromUnsorted(values.toArray)
 
-  def apply(values: Long*): RoaringBitmapArray =
-    fromUnsorted(values.toArray)
-
-  /** Bulk builder: sort once, then slice directly into containers —
-    * O(n log n) total, where repeated `add` is O(n) PER VALUE once a
-    * container grows (every insert copies its sorted array; building a
-    * dense 65k-value container that way is ~2e9 element moves). This is
-    * the path every DV build takes (positions arrive unsorted from a
-    * distributed scan), so the builder's complexity IS the DELETE's
-    * executor-side cost profile. Duplicates collapse. */
+  /** Sorting first makes every `add` an append to its container.
+    * Duplicates collapse. */
   def fromUnsorted(values: Array[Long]): RoaringBitmapArray = {
-    if (values.isEmpty) return empty()
-    val sorted = values.clone()
-    java.util.Arrays.sort(sorted)
-    require(sorted(0) >= 0, s"negative value ${sorted(0)}")
-    val arr = mutable.ArrayBuffer.empty[mutable.SortedMap[Int, Container]]
-    var i = 0
-    val n = sorted.length
-    while (i < n) {
-      val v = sorted(i)
-      val high = (v >>> 32).toInt
-      val key = (v.toInt) >>> 16
-      // scan the run of values sharing (high, key): they form one container
-      val prefix = v >>> 16 // high 48 bits identify the container
-      var j = i
-      while (j < n && (sorted(j) >>> 16) == prefix) j += 1
-      val buf = new Array[Int](j - i)
-      var o = 0
-      var k = i
-      var last = -1
-      while (k < j) {
-        val bit = sorted(k).toInt & 0xffff
-        if (bit != last) { buf(o) = bit; o += 1; last = bit }
-        k += 1
-      }
-      while (arr.size <= high) arr += mutable.SortedMap.empty
-      arr(high)(key) =
-        Container(if (o == buf.length) buf else java.util.Arrays.copyOf(buf, o))
-      i = j
-    }
-    new RoaringBitmapArray(arr)
+    val out = empty()
+    values.sorted.foreach(out.add)
+    out
   }
 
-  def empty(): RoaringBitmapArray =
-    new RoaringBitmapArray(mutable.ArrayBuffer.empty)
+  def empty(): RoaringBitmapArray = new RoaringBitmapArray(Array.empty)
 
-  /** Deserialize the portable format produced by any conforming writer
-    * (array, bitmap AND run containers accepted). */
   def deserialize(bytes: Array[Byte]): RoaringBitmapArray = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val magic = bb.getInt
@@ -195,155 +108,42 @@ object RoaringBitmapArray {
         s"(expected portable $PortableMagic)")
     val n = bb.getLong
     require(n >= 0 && n <= Int.MaxValue, s"absurd bitmap count $n")
-    val arr = mutable.ArrayBuffer.fill(n.toInt)(
-      mutable.SortedMap.empty[Int, Container])
-    var i = 0
-    while (i < n) {
-      deserializeBitmapInto(bb, arr(i))
-      i += 1
+    val out = empty()
+    var last = -1
+    (0 until n.toInt).foreach { _ =>
+      val key = bb.getInt
+      require(key > last, s"bitmap bucket key $key after $last: keys must be " +
+        "non-negative and increasing")
+      val bm = new RoaringBitmap
+      // reads from the buffer's position without advancing it
+      bm.deserialize(bb)
+      bb.position(bb.position() + bm.serializedSizeInBytes)
+      validate(bm)
+      out.bucket(key)
+      out.buckets(key) = bm
+      last = key
     }
-    new RoaringBitmapArray(arr)
+    out
   }
 
-  private def deserializeBitmapInto(
-      bb: ByteBuffer, into: mutable.SortedMap[Int, Container]): Unit = {
-    val cookie = bb.getInt
-    val hasRuns = (cookie & 0xffff) == CookieWithRun
-    require(hasRuns || cookie == CookieNoRun,
-      s"unrecognized roaring cookie $cookie")
-    val size = if (hasRuns) (cookie >>> 16) + 1 else bb.getInt
-    val runFlags: Array[Byte] =
-      if (hasRuns) {
-        val f = new Array[Byte]((size + 7) / 8)
-        bb.get(f)
-        f
-      } else Array.emptyByteArray
-    def isRun(idx: Int): Boolean =
-      hasRuns && (runFlags(idx / 8) & (1 << (idx % 8))) != 0
-    val keys = new Array[Int](size)
-    val cards = new Array[Int](size)
-    var i = 0
-    while (i < size) {
-      keys(i) = bb.getShort & 0xffff
-      cards(i) = (bb.getShort & 0xffff) + 1
-      i += 1
-    }
-    // offset header: always with the run-free cookie; with runs only at
-    // NoOffsetThreshold+ keys. Containers are stored in key order, so
-    // sequential reading never needs the offsets themselves.
-    if (!hasRuns || size >= NoOffsetThreshold) bb.position(bb.position() + 4 * size)
-    i = 0
-    while (i < size) {
-      val c =
-        if (isRun(i)) Container.readRuns(bb)
-        else if (cards(i) > ArrayMaxCardinality) Container.readBitset(bb, cards(i))
-        else Container.readArray(bb, cards(i))
-      into(keys(i)) = c
-      i += 1
-    }
-  }
-
-  /** One 16-bit-keyed container: a sorted array of `uint16` values. The
-    * in-memory model is always the sorted-array form (simple, and DV
-    * bitmaps are read once then iterated); the FORMAT distinction between
-    * array/bitmap/run exists only at the (de)serialization boundary. */
-  final case class Container(sorted: Array[Int]) {
-    def cardinality: Int = sorted.length
-    def contains(bit: Int): Boolean =
-      java.util.Arrays.binarySearch(sorted, bit) >= 0
-    def add(bit: Int): Container = {
-      val idx = java.util.Arrays.binarySearch(sorted, bit)
-      if (idx >= 0) this
-      else {
-        val at = -idx - 1
-        val out = new Array[Int](sorted.length + 1)
-        System.arraycopy(sorted, 0, out, 0, at)
-        out(at) = bit
-        System.arraycopy(sorted, at, out, at + 1, sorted.length - at)
-        Container(out)
+  /** The two checks the class scaladoc names, over every container. */
+  private def validate(bm: RoaringBitmap): Unit = {
+    val p = bm.getContainerPointer
+    while (p.getContainer != null) {
+      p.getContainer match {
+        case r: RunContainer =>
+          (0 until r.numberOfRuns).foreach { i =>
+            val (start, end) = (r.getValue(i).toInt, r.getValue(i) + r.getLength(i))
+            require(end <= 0xffff, s"corrupt run container: run [$start, $end] " +
+              "exceeds the 16-bit value space")
+          }
+        case b: BitmapContainer =>
+          val held = b.andCardinality(b)
+          require(held == b.getCardinality,
+            s"bitmap container held $held values, header said ${b.getCardinality}")
+        case _ =>
       }
-    }
-    def values: Iterator[Int] = sorted.iterator
-
-    /** Sorted-array union with `other` — one linear merge pass. */
-    def union(other: Container): Container = {
-      val a = sorted; val b = other.sorted
-      if (a.isEmpty) return other
-      if (b.isEmpty) return this
-      val out = new Array[Int](a.length + b.length)
-      var i = 0; var j = 0; var o = 0
-      while (i < a.length && j < b.length) {
-        val av = a(i); val bv = b(j)
-        if (av < bv) { out(o) = av; i += 1 }
-        else if (av > bv) { out(o) = bv; j += 1 }
-        else { out(o) = av; i += 1; j += 1 }
-        o += 1
-      }
-      while (i < a.length) { out(o) = a(i); i += 1; o += 1 }
-      while (j < b.length) { out(o) = b(j); j += 1; o += 1 }
-      Container(if (o == out.length) out else java.util.Arrays.copyOf(out, o))
-    }
-
-    def serializedSize: Int =
-      if (cardinality > ArrayMaxCardinality) 8192 else 2 * cardinality
-
-    def serializeInto(bb: ByteBuffer): Unit =
-      if (cardinality > ArrayMaxCardinality) {
-        val words = new Array[Long](1024)
-        sorted.foreach(v => words(v >>> 6) |= (1L << (v & 63)))
-        words.foreach(bb.putLong)
-      } else {
-        sorted.foreach(v => bb.putShort(v.toShort))
-      }
-  }
-
-  object Container {
-    def single(bit: Int): Container = Container(Array(bit))
-
-    def readArray(bb: ByteBuffer, card: Int): Container = {
-      val vs = new Array[Int](card)
-      var i = 0
-      while (i < card) { vs(i) = bb.getShort & 0xffff; i += 1 }
-      Container(vs)
-    }
-
-    def readBitset(bb: ByteBuffer, card: Int): Container = {
-      val vs = new Array[Int](card)
-      var o = 0
-      var w = 0
-      while (w < 1024) {
-        var word = bb.getLong
-        val base = w << 6
-        while (word != 0) {
-          vs(o) = base + java.lang.Long.numberOfTrailingZeros(word)
-          o += 1
-          word &= word - 1
-        }
-        w += 1
-      }
-      require(o == card, s"bitmap container held $o values, header said $card")
-      Container(vs)
-    }
-
-    def readRuns(bb: ByteBuffer): Container = {
-      val nRuns = bb.getShort & 0xffff
-      val out = mutable.ArrayBuilder.make[Int]
-      var r = 0
-      while (r < nRuns) {
-        val start = bb.getShort & 0xffff
-        val len = bb.getShort & 0xffff
-        // a run past the 16-bit container space is a corrupt/malformed
-        // DV: values above 0xFFFF would silently truncate through
-        // toShort on re-serialization (merging shades) and mark the
-        // WRONG rows deleted — fail the parse loudly instead
-        require(start + len <= 0xffff,
-          s"corrupt run container: run [$start, ${start + len}] exceeds " +
-            "the 16-bit value space")
-        var v = start
-        while (v <= start + len) { out += v; v += 1 }
-        r += 1
-      }
-      Container(out.result())
+      p.advance()
     }
   }
 }

@@ -221,7 +221,7 @@ object Relational {
         // per stage. Checkpointing the O(|pairs|) intermediate (NOT a
         // result cache — recomputed from parquet on every invocation)
         // measured 7.8 s -> 2.4-3.9 s at sf0.1; results bit-identical
-        // (integer fixed-point ranks, ProfilePageRank identical=true).
+        // (integer fixed-point ranks).
         val co = t(s, dir, "orders")
           .join(t(s, dir, "lineitem"), $"o_orderkey" === $"l_orderkey")
           .select($"o_custkey".as("c"), ($"l_suppkey" + 1000000000L).as("p"))

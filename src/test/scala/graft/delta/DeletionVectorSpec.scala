@@ -13,7 +13,9 @@ import graft.delta.dv.{DeletionVectors, RoaringBitmapArray, Z85}
   * and a row whose `_metadata.row_index` is in the bitmap is dropped. The
   * byte-level tests pin our codec to the PUBLISHED formats (Z85 reference
   * vector, hand-built RoaringFormatSpec layouts) rather than to our own
-  * writer, so reader and writer cannot be wrong together. */
+  * writer, and cross-check it against an independent writer, the
+  * RoaringBitmap jar's `Roaring64NavigableMap.serializePortable`: a
+  * hand-built layout can share the codec's misreading of the format. */
 class DeletionVectorSpec extends SparkSpec {
   import spark.implicits._
 
@@ -44,10 +46,11 @@ class DeletionVectorSpec extends SparkSpec {
     // values 1, 2 (key 0) and 100000 = 1*2^16 + 34464 (key 1): one 32-bit
     // bitmap, two array containers
     val bm = RoaringBitmapArray(1L, 2L, 100000L)
-    val expected = ByteBuffer.allocate(4 + 8 + (4 + 4 + 8 + 8 + 6))
+    val expected = ByteBuffer.allocate(4 + 8 + 4 + (4 + 4 + 8 + 8 + 6))
       .order(ByteOrder.LITTLE_ENDIAN)
     expected.putInt(1681511377) // portable magic
     expected.putLong(1L) // one 32-bit bitmap
+    expected.putInt(0) // its bucket key
     expected.putInt(12346) // SERIAL_COOKIE_NO_RUNCONTAINER
     expected.putInt(2) // two containers
     expected.putShort(0); expected.putShort(1) // key 0, cardinality-1 = 1
@@ -63,10 +66,11 @@ class DeletionVectorSpec extends SparkSpec {
 
   test("run containers deserialize (foreign run-compressed writers)") {
     // hand-built: cookie 12347 with size 1, run flag set, one run [5, 9]
-    val bb = ByteBuffer.allocate(4 + 8 + (4 + 1 + 4 + 2 + 4))
+    val bb = ByteBuffer.allocate(4 + 8 + 4 + (4 + 1 + 4 + 2 + 4))
       .order(ByteOrder.LITTLE_ENDIAN)
     bb.putInt(1681511377)
     bb.putLong(1L)
+    bb.putInt(0) // bucket key
     bb.putInt(12347) // SERIAL_COOKIE, (size-1)=0 in the high bits
     bb.put(1.toByte) // run-flag bitset: container 0 is a run container
     bb.putShort(0); bb.putShort(4) // key 0, cardinality-1 = 4
@@ -81,12 +85,13 @@ class DeletionVectorSpec extends SparkSpec {
   test("a run overflowing the 16-bit container space is refused, not " +
       "silently truncated into the wrong row positions") {
     // same layout as above but run [65000, +1000] reaches 66000 — values
-    // past 0xFFFF would wrap through toShort on re-serialization and
-    // shade the WRONG rows; the parse must fail loudly instead
-    val bb = ByteBuffer.allocate(4 + 8 + (4 + 1 + 4 + 2 + 4))
+    // past 0xFFFF would wrap onto other row positions and shade the
+    // WRONG rows; the parse must fail loudly instead
+    val bb = ByteBuffer.allocate(4 + 8 + 4 + (4 + 1 + 4 + 2 + 4))
       .order(ByteOrder.LITTLE_ENDIAN)
     bb.putInt(1681511377)
     bb.putLong(1L)
+    bb.putInt(0) // bucket key
     bb.putInt(12347)
     bb.put(1.toByte)
     bb.putShort(0); bb.putShort(1000)
@@ -96,6 +101,107 @@ class DeletionVectorSpec extends SparkSpec {
       RoaringBitmapArray.deserialize(bb.array())
     }
     assert(e.getMessage.contains("16-bit"), e.getMessage)
+  }
+
+  test("a bitmap container whose header count disagrees with its bits " +
+      "is refused") {
+    // one bitmap container holding 0..4999 whose header claims 5001
+    val bb = ByteBuffer.allocate(4 + 8 + 4 + (4 + 4 + 4 + 4 + 8192))
+      .order(ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(1681511377)
+    bb.putLong(1L)
+    bb.putInt(0) // bucket key
+    bb.putInt(12346)
+    bb.putInt(1) // one container
+    bb.putShort(0); bb.putShort(5000) // key 0, cardinality-1 = 5000
+    bb.putInt(16) // container offset
+    val words = new Array[Long](1024)
+    (0 until 5000).foreach(v => words(v >>> 6) |= 1L << (v & 63))
+    words.foreach(bb.putLong)
+    val e = intercept[IllegalArgumentException] {
+      RoaringBitmapArray.deserialize(bb.array())
+    }
+    assert(e.getMessage.contains("header said 5001"), e.getMessage)
+  }
+
+  test("a blob without per-bucket keys fails loudly") {
+    // {1, 2, 100000} laid out with the bucket key left out: the reader
+    // takes the cookie for a key and the container count for a cookie
+    val bb = ByteBuffer.allocate(4 + 8 + (4 + 4 + 8 + 8 + 6))
+      .order(ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(1681511377)
+    bb.putLong(1L)
+    bb.putInt(12346)
+    bb.putInt(2)
+    bb.putShort(0); bb.putShort(1)
+    bb.putShort(1); bb.putShort(0)
+    bb.putInt(24); bb.putInt(28)
+    bb.putShort(1); bb.putShort(2)
+    bb.putShort(34464.toShort)
+    intercept[Exception](RoaringBitmapArray.deserialize(bb.array()))
+  }
+
+  test("bucket keys that do not increase are refused") {
+    // buckets 0 (empty) and 1 (one array container); the second key,
+    // at byte 24, rewritten to 0
+    val bytes = RoaringBitmapArray((1L << 32) + 5L).serialize()
+    assert(bytes.length == 4 + 8 + (4 + 8) + (4 + 8 + 4 + 4 + 2))
+    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).putInt(24, 0)
+    val e = intercept[IllegalArgumentException] {
+      RoaringBitmapArray.deserialize(bytes)
+    }
+    assert(e.getMessage.contains("increasing"), e.getMessage)
+  }
+
+  test("serialization equals the RoaringBitmap jar's portable writer, " +
+      "and the jar's bytes read back") {
+    import org.roaringbitmap.longlong.Roaring64NavigableMap
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // one bucket's 32-bit values: sparse draws with duplicates, and
+    // sometimes a dense run past the 4096-value array container limit
+    val inBucket: Gen[Seq[Long]] = for {
+      sparse <- Gen.listOf(Gen.chooseNum(0L, 0xffffffffL))
+      dense <- Gen.option(for {
+        start <- Gen.chooseNum(0L, 0xffffffffL - 65536L)
+        len <- Gen.chooseNum(4097, 65536)
+      } yield start until start + len)
+    } yield sparse ++ sparse.take(3) ++ dense.getOrElse(Nil)
+    // buckets below 2^8 (positions below 2^40): either every bucket up
+    // to the largest, or a few with gaps between them
+    val buckets: Gen[Seq[Int]] = Gen.oneOf(
+      Gen.chooseNum(0, 4).map(max => 0 to max),
+      Gen.chooseNum(1, 4).flatMap(n => Gen.pick(n, 0 until 256))
+        .map(_.toSeq.sorted))
+    val positions: Gen[Seq[Long]] = buckets.flatMap(bs =>
+      Gen.sequence[Seq[Seq[Long]], Seq[Long]](bs.map(b =>
+        inBucket.map(_.map(v => (b.toLong << 32) | v)))).map(_.flatten))
+    val magic = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
+      .putInt(RoaringBitmapArray.PortableMagic).array()
+    var full, gapped = 0
+    val prop = Prop.forAll(positions) { ps =>
+      val jar = new Roaring64NavigableMap()
+      ps.foreach(jar.addLong)
+      val out = new java.io.ByteArrayOutputStream()
+      jar.serializePortable(new java.io.DataOutputStream(out))
+      val jarBytes = magic ++ out.toByteArray
+      val ours = RoaringBitmapArray.fromUnsorted(ps.toArray)
+      val expected = ps.distinct.sorted
+      val everyBucket = ps.isEmpty ||
+        ps.map(_ >>> 32).distinct.size == (ps.max >>> 32) + 1
+      if (everyBucket) full += 1 else gapped += 1
+      val fromJar = RoaringBitmapArray.deserialize(jarBytes)
+      (!everyBucket || ours.serialize().sameElements(jarBytes)) &&
+        fromJar.values.toSeq == expected &&
+        fromJar.serialize().sameElements(ours.serialize()) &&
+        RoaringBitmapArray.deserialize(ours.serialize()).values.toSeq == expected
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default
+        .withMinSuccessfulTests(60)
+        .withInitialSeed(org.scalacheck.rng.Seed(2020L)),
+      prop)
+    assert(result.passed, s"scalacheck: ${result.status}")
+    assert(full > 0 && gapped > 0, s"$full sets without gaps, $gapped with")
   }
 
   test("bitmap containers round-trip above 4096 cardinality") {

@@ -390,11 +390,34 @@ class V2CheckpointSpec extends SparkSpec {
       assert(earlySidecars.nonEmpty)
 
       // ...two days later, more SINGLE-FILE commits roll a NEWER v2
-      // checkpoint that carries the untouched buckets over
+      // checkpoint that carries the untouched buckets over. Their files
+      // are named into one bucket that held an early sidecar, so that
+      // sidecar is rewritten and orphaned wherever v3's random file
+      // landed. The bucket is v3's own when it held an early sidecar, so
+      // only one early bucket is rewritten and the others carry over
       now += 2L * 24 * 3600 * 1000
-      (4 to 5).foreach(i =>
+      val BucketSidecar = """.*\.b(\d+)of(\d+)\.\d+\.parquet""".r
+      val early = earlySidecars.toSeq.collect {
+        case BucketSidecar(b, n) => (b.toInt, n.toInt)
+      }
+      val earlyBuckets = early.map(_._1).toSet
+      val canonical = l.update().canonicalPath
+      def bucketOf(path: String) =
+        Checkpoints.sidecarBucket(canonical(path), early.head._2)
+      val v3Bucket = l.getChanges(3L, endVersion = Some(3L)).flatMap(_._2)
+        .collectFirst { case a: AddFile => bucketOf(a.path) }.get
+      val target = if (earlyBuckets(v3Bucket)) v3Bucket else earlyBuckets.min
+      (4 to 5).foreach { i =>
+        val stage = new File(dir, s"_stage$i").getPath
         DeltaTable.write((i * 10L until i * 10L + 10L).toDF("id")
-          .coalesce(1), dir))
+          .coalesce(1), stage)
+        val add = log(stage).update().allFiles.head
+        val name = Iterator.from(0).map(k => s"part-$i-$k.parquet")
+          .find(bucketOf(_) == target).get
+        java.nio.file.Files.move(new File(stage, add.path).toPath,
+          new File(dir, name).toPath)
+        l.startTransaction().commit(Seq(add.copy(path = name)), "WRITE")
+      }
       val allSidecars = scDir.listFiles().map(_.getName).toSet
       assert(allSidecars.size > earlySidecars.size)
 
