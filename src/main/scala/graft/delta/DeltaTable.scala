@@ -189,182 +189,70 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     if (new read.DeltaScan(txn.snapshot, Some(resolved)).residualPredicate.isEmpty) {
       return deleteWhere(condition) // metadata-only fast path
     }
-    if (DeltaConfigs.ENABLE_DELETION_VECTORS.fromMetadata(txn.snapshot.metadata)) {
-      return deleteWithDeletionVectors(txn, condition, resolved)
-    }
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    rewriteMatchedFiles(txn, condition, DeltaOperations.Delete,
-      // keep rows where the condition is false OR null (SQL DELETE
-      // removes only rows where it is TRUE)
-      df => df.filter(not(coalesce(condition, lit(false)))),
-      changes = df => df.filter(coalesce(condition, lit(false)))
-        .withColumn(write.CdcWriter.ChangeTypeCol, lit("delete")))
+    rowLevel(txn, condition, resolved, None)
   }
 
-  /** Merge-on-read DELETE (`delta.enableDeletionVectors`): instead of
-    * rewriting every file containing a match, SHADE it — record the
-    * matching rows' positions as a deletion-vector bitmap and commit
-    * `remove(path, oldDv) + add(path, newDv)`. The data bytes never move:
-    * a selective delete on a 1 GB file writes a few-KB bitmap instead of
-    * 1 GB of parquet, which is the only delete shape that scales to
-    * routine GDPR/cleanup traffic at 100 TB. OPTIMIZE later purges shades
-    * back to plain parquet.
-    *
-    * Scale shape: position discovery is one distributed scan of the
-    * PRUNED candidate set (through any existing shades); per-file bitmaps
-    * are built and serialized on EXECUTORS (grouped by file), and only the
-    * compressed bitmap bytes reach the driver — bounded by shaded-file
-    * count, not by deleted-row count. A file whose every live row matches
-    * is dropped outright (no shade). The first shading commit upgrades
-    * the protocol to (3, 7) + deletionVectors, preserving
-    * legacy-version-implied features. */
-  private def deleteWithDeletionVectors(
-      transaction: graft.delta.txn.OptimisticTransaction,
-      condition: Column,
-      resolved: org.apache.spark.sql.catalyst.expressions.Expression): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val snapshot = transaction.snapshot
-    val metadata = snapshot.metadata
-    val matched = candidateFiles(snapshot, resolved)
-    transaction.markFilesAsRead(condition)
-    if (matched.isEmpty) return snapshot.version
-
-    val hits = read.LiveRows.files(deltaLog, metadata, matched)(
-        extra = write.DvShade.Positions)
-      // a plain filter already excludes null-evaluating rows (Filter
-      // keeps only TRUE); the old coalesce(cond, false) wrapper blocked
-      // parquet pushdown of the whole predicate — the position-discovery
-      // scan read every row group of every candidate file
-      .filter(condition)
-
-    // CDC first (when enabled): the deleted rows themselves — positions
-    // are re-derived afterwards from the same bounded scan
-    val cdc: Seq[Action] =
-      if (write.CdcWriter.enabled(metadata)) {
-        write.CdcWriter.writeChangeFiles(
-          hits.select(metadata.schema.fieldNames.map(col).toIndexedSeq: _*)
-            .withColumn(write.CdcWriter.ChangeTypeCol, lit("delete")),
-          deltaLog, metadata.columnMapping, metadata.fieldIdMapping)
-      } else Nil
-
-    val shade = write.DvShade.shade(deltaLog, hits, matched)
-    if (shade.isEmpty) return snapshot.version
-
-    transaction.commit(
-      write.DvShade.protocolUpgrade(snapshot) ++ cdc ++ shade.actions,
-      DeltaOperations.Delete,
-      operationMetrics = Map(
-        "numRemovedFiles" -> shade.numRemovedOutright.toString,
-        "numDeletionVectorsAdded" -> shade.numDvsAdded.toString,
-        "numDeletedRows" -> shade.numShadedRows.toString),
-      operationParameters = Map("predicate" -> Seq(resolved.sql)))
-  }
-
-  /** DML UPDATE: rewrite the files that may contain rows matching
-    * `condition`, applying `set` (column name → new value expression) to
-    * the matching rows and carrying all others unchanged. */
+  /** DML UPDATE: apply `set` (column name → new value expression) to the
+    * rows matching `condition` in the files whose partition values or
+    * stats admit a match; all other rows carry unchanged. Every SET value
+    * and the condition see the PRE-update row (SQL UPDATE semantics).
+    * Partition columns MAY be set: the write's dynamic partitioning
+    * places moved rows in their new directories. */
   def update(condition: Column, set: Map[String, Column]): Long = {
     require(set.nonEmpty, "UPDATE requires at least one SET column")
     val txn = deltaLog.startTransaction()
     val schema = txn.snapshot.metadata.schema
-    // partition columns MAY be set: the rewrite's dynamic partitioning
-    // places moved rows in their new directories and the commit's
-    // add/remove pair relocates them atomically (the same machinery that
-    // moves rows when a generated partition column's source changes);
-    // generated-column consistency is enforced inside the write job
     set.keys.foreach { c =>
       require(schema.fieldNames.contains(c), s"Unknown column $c in SET")
       require(!write.IdentityColumns.specs(schema)
         .exists(s => s.name == c && !s.allowExplicit),
         s"Cannot UPDATE GENERATED ALWAYS AS IDENTITY column $c")
     }
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    // ONE projection, not sequential withColumn: every SET value and the
-    // condition must evaluate against the PRE-update row (SQL UPDATE
-    // semantics) — chaining withColumn would let a later SET see an
-    // earlier SET's result (and a condition on an updated column would
-    // flip mid-row)
-    def applySet(df: DataFrame): DataFrame = {
-      val applied = df.select(schema.fieldNames.map { name =>
-        set.get(name) match {
-          case Some(value) =>
-            org.apache.spark.sql.functions.when(condition,
-              value.cast(schema(name).dataType))
-              .otherwise(org.apache.spark.sql.functions.col(name)).as(name)
-          case None => org.apache.spark.sql.functions.col(name)
-        }
-      }.toIndexedSeq: _*)
-      // generated columns follow their (possibly just-changed) sources —
-      // otherwise SET on a generation source trips the write-time guard
-      write.GeneratedColumns.recompute(applied,
-        txn.snapshot.metadata, set.keySet)
-    }
-    if (DeltaConfigs.ENABLE_DELETION_VECTORS.fromMetadata(txn.snapshot.metadata)) {
-      return updateWithDeletionVectors(txn, condition, applySet)
-    }
-    rewriteMatchedFiles(txn, condition, DeltaOperations.Update, applySet,
-      changes = { df =>
-        val matched = df.filter(coalesce(condition, lit(false)))
-        matched.withColumn(write.CdcWriter.ChangeTypeCol, lit("update_preimage"))
-          .unionByName(applySet(matched)
-            .withColumn(write.CdcWriter.ChangeTypeCol, lit("update_postimage")))
-      })
+    val resolved = read.PartitionUtils.resolveFilter(spark, schema, condition)
+    rowLevel(txn, condition, resolved, Some(set))
   }
 
-  /** Merge-on-read UPDATE (`delta.enableDeletionVectors`): shade the
-    * matched rows' positions in their source files and write ONLY the
-    * updated rows as new files — the unmatched rows of a touched file
-    * never move. A selective update on a 1 GB file writes a few KB of
-    * bitmap plus the changed rows instead of 1 GB of parquet; SET on a
-    * partition (or generated-partition-source) column still relocates the
-    * moved rows through the new files' dynamic partitioning. */
-  private def updateWithDeletionVectors(
-      transaction: graft.delta.txn.OptimisticTransaction,
+  /** DELETE (`set = None`) or UPDATE as one clause over
+    * [[write.RowLevelDml]], reporting delta-spark's metric names.
+    * Shading keeps only the hit rows, a plain filter so the bare
+    * predicate reaches parquet (a null result is no hit either way);
+    * rewriting tags every row, hit where the condition is TRUE. */
+  private def rowLevel(
+      txn: graft.delta.txn.OptimisticTransaction,
       condition: Column,
-      applySet: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val snapshot = transaction.snapshot
+      resolved: org.apache.spark.sql.catalyst.expressions.Expression,
+      set: Option[Map[String, Column]]): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit, when}
+    import write.RowLevelDml.ActionCol
+    val snapshot = txn.snapshot
     val metadata = snapshot.metadata
-    val resolved = read.PartitionUtils.resolveFilter(
-      spark, metadata.schema, condition)
-    val matched = candidateFiles(snapshot, resolved)
-    transaction.markFilesAsRead(condition)
-    if (matched.isEmpty) return snapshot.version
-
-    // live rows only (through any existing shade), with positions
-    val hits = read.LiveRows.files(deltaLog, metadata, matched)(
-        extra = write.DvShade.Positions)
-      // plain filter: null-evaluating rows are excluded either way, and
-      // the bare predicate pushes down to parquet (see delete)
-      .filter(condition)
-
-    val shade = write.DvShade.shade(deltaLog, hits, matched)
-    if (shade.isEmpty) return snapshot.version
-
-    // the updated rows themselves are the only data written
-    val updated = applySet(hits)
-    val adds = write.DeltaWriter.writeFiles(
-      write.Invariants.enforce(updated, metadata), deltaLog,
-      metadata.partitionColumns, metadata.columnMapping, Some(metadata))
-    val cdc: Seq[Action] =
-      if (write.CdcWriter.enabled(metadata)) {
-        val pre = hits.select(metadata.schema.fieldNames.map(col).toIndexedSeq: _*)
-        write.CdcWriter.writeChangeFiles(
-          pre.withColumn(write.CdcWriter.ChangeTypeCol, lit("update_preimage"))
-            .unionByName(updated
-              .withColumn(write.CdcWriter.ChangeTypeCol, lit("update_postimage"))),
-          deltaLog, metadata.columnMapping, metadata.fieldIdMapping)
-      } else Nil
-
-    transaction.commit(
-      write.DvShade.protocolUpgrade(snapshot) ++ cdc ++ adds ++ shade.actions,
-      DeltaOperations.Update,
-      operationMetrics = Map(
-        "numRemovedFiles" -> shade.numRemovedOutright.toString,
-        "numDeletionVectorsAdded" -> shade.numDvsAdded.toString,
-        "numAddedFiles" -> adds.size.toString,
-        "numUpdatedRows" -> shade.numShadedRows.toString),
-      operationParameters = Map("predicate" -> Seq(resolved.sql)))
+    val files = write.RowLevelDml.candidates(spark, snapshot, resolved)
+    txn.markFilesAsRead(condition)
+    if (files.isEmpty) return snapshot.version
+    val rows = write.RowLevelDml.target(deltaLog, metadata, files)
+    val tagged =
+      if (write.RowLevelDml.shades(metadata)) {
+        rows.filter(condition).withColumn(ActionCol, lit(0))
+      } else {
+        rows.withColumn(ActionCol,
+          when(coalesce(condition, lit(false)), 0).otherwise(-1))
+      }
+    val operation =
+      if (set.isEmpty) DeltaOperations.Delete else DeltaOperations.Update
+    write.RowLevelDml.run(txn, files, Some(tagged), Seq(set), None,
+      operation, resolved.sql) { c =>
+      val removed = "numRemovedFiles" -> c.removedFiles.toString
+      val added = "numAddedFiles" -> c.addedFiles.toString
+      c.dvsAdded match {
+        case None => Map(removed, added,
+          "numAddedBytes" -> c.addedBytes.toString)
+        case Some(dvs) =>
+          val shaded = c.shadedRows.toString
+          Map(removed, "numDeletionVectorsAdded" -> dvs.toString) ++
+            (if (set.isEmpty) Map("numDeletedRows" -> shaded)
+            else Map(added, "numUpdatedRows" -> shaded))
+      }
+    }
   }
 
   /** MERGE INTO builder: the target joins as alias `t`, `source` as `s`.
@@ -413,63 +301,6 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         read.CdfRelation.cdfSchema(metadata))
     }
-  }
-
-  /** DML candidate selection: the files whose partition values / stats
-    * admit a match (they become the commit's RemoveFiles). */
-  private def candidateFiles(
-      snapshot: Snapshot,
-      resolved: org.apache.spark.sql.catalyst.expressions.Expression)
-    : Seq[AddFile] = {
-    val metadata = snapshot.metadata
-    val (metaPreds0, dataPreds) = read.PartitionUtils
-      .splitMetadataAndDataPredicates(resolved, metadata.partitionColumns)
-    // a DELETE/UPDATE/MERGE condition on a generated-partition SOURCE
-    // (e.g. ts under day=date(ts)) prunes its candidates too
-    val metaPreds = metaPreds0 ++
-      read.GeneratedPartitionFilters.derive(metadata, dataPreds, spark)
-    snapshot.filesMatching(metaPreds, dataPreds)
-  }
-
-  /** Shared rewrite-DML machinery: select the files whose partition
-    * values or stats admit rows matching `condition`, apply `transform`
-    * to their contents, write replacements and commit adds+removes as one
-    * data-changing transaction (Serializable — conflicts with concurrent
-    * writers are detected through the read predicate). */
-  private def rewriteMatchedFiles(
-      transaction: graft.delta.txn.OptimisticTransaction,
-      condition: Column,
-      operation: String,
-      transform: DataFrame => DataFrame,
-      changes: DataFrame => DataFrame = null): Long = {
-    val snapshot = transaction.snapshot
-    val metadata = snapshot.metadata
-    val resolved = read.PartitionUtils.resolveFilter(spark, metadata.schema, condition)
-    val matched = candidateFiles(snapshot, resolved)
-    transaction.markFilesAsRead(condition)
-    if (matched.isEmpty) return snapshot.version
-
-    // read THROUGH any deletion vectors: a rewrite that re-materialized
-    // shaded rows would resurrect them
-    val current = read.LiveRows.files(deltaLog, metadata, matched)()
-    val rewritten = transform(current)
-
-    val adds = write.DeltaWriter.writeFiles(
-      write.Invariants.enforce(rewritten, metadata), deltaLog,
-      metadata.partitionColumns, metadata.columnMapping, Some(metadata))
-    val removes = matched.map(_.remove(deltaLog.clock()))
-    val cdc: Seq[Action] =
-      if (changes != null && write.CdcWriter.enabled(metadata)) {
-        write.CdcWriter.writeChangeFiles(changes(current), deltaLog,
-          metadata.columnMapping, metadata.fieldIdMapping)
-      } else Nil
-    transaction.commit(cdc ++ adds ++ removes, operation,
-      operationMetrics = Map(
-        "numRemovedFiles" -> removes.size.toString,
-        "numAddedFiles" -> adds.size.toString,
-        "numAddedBytes" -> adds.map(_.size).sum.toString),
-      // delta-spark renders DML predicates as a JSON array of strings
-      operationParameters = Map("predicate" -> Seq(resolved.sql)))
   }
 
   /** `FSCK REPAIR TABLE` (delta-spark's surface): drop table entries

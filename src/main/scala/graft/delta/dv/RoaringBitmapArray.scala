@@ -18,8 +18,9 @@ import org.roaringbitmap.{BitmapContainer, RoaringBitmap, RunContainer}
   * its key (uint32) ‖ its 32-bit bitmap in the public RoaringFormatSpec.
   * The writer emits every bucket `0..n-1`, empty interior ones included,
   * as delta-spark does. The reader takes any non-negative, strictly
-  * increasing keys and leaves gaps empty: the jar's
-  * `Roaring64NavigableMap.serializePortable` skips empty buckets.
+  * increasing keys below [[RoaringBitmapArray.MaxBuckets]] and leaves
+  * gaps empty: the jar's `Roaring64NavigableMap.serializePortable` skips
+  * empty buckets.
   *
   * Output is run-free (cookie 12346, array and bitmap containers only).
   * Values enter through `add`, which never run-compresses, and
@@ -76,6 +77,8 @@ final class RoaringBitmapArray private (private var buckets: Array[RoaringBitmap
 
   /** Bucket `i`, growing the array with empty buckets up to it. */
   private def bucket(i: Int): RoaringBitmap = {
+    require(i < RoaringBitmapArray.MaxBuckets, s"bitmap bucket $i holds row " +
+      s"positions past 2^40; at most ${RoaringBitmapArray.MaxBuckets} buckets")
     if (i >= buckets.length)
       buckets ++= Array.fill(i + 1 - buckets.length)(new RoaringBitmap)
     buckets(i)
@@ -87,6 +90,12 @@ object RoaringBitmapArray {
   /** Magic number of the PORTABLE RoaringBitmapArray format (the only
     * format the Delta protocol allows in deletion vectors). */
   val PortableMagic = 1681511377
+
+  /** Buckets a set may hold: row positions below 2^40, a trillion rows
+    * per data file. Gaps below a key are filled with empty bitmaps, so
+    * without a bound a 24-byte inline DV (no CRC) naming one far key
+    * would allocate millions of them. */
+  val MaxBuckets = 256
 
   def apply(values: Long*): RoaringBitmapArray = fromUnsorted(values.toArray)
 

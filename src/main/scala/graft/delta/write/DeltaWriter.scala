@@ -185,20 +185,23 @@ object DeltaWriter {
         "mode" -> mode.name,
         "partitionBy" -> partCols) ++ operationParameters)
 
-    // delta.autoOptimize.autoCompact: bin-pack AFTER the commit lands —
-    // the ingest's answer to the small-file problem without a separate
-    // maintenance job. Best-effort by design: the write above is already
-    // durable, and a compaction conflict with a concurrent writer must
-    // never fail the caller's write (compact commits dataChange=false,
-    // so streams are unaffected). compact() is per-partition and
-    // file-count-reducing, so auto-compaction converges instead of
-    // rewriting the table on every append.
-    if (DeltaConfigs.AUTO_COMPACT.fromMetadata(txn.metadata)) {
-      try DeltaTable.forPath(spark, path).compact()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    autoCompact(DeltaTable.forPath(spark, path), txn.metadata)
     committed
   }
+
+  /** delta.autoOptimize.autoCompact, after an append's or a MERGE's
+    * commit lands: bin-pack as the ingest's answer to the small-file
+    * problem without a separate maintenance job. Best-effort by design:
+    * the write is already durable, and a compaction conflict with a
+    * concurrent writer must never fail the caller's write (compact
+    * commits dataChange=false, so streams are unaffected). compact() is
+    * per-partition and file-count-reducing, so auto-compaction converges
+    * instead of rewriting the table on every write. */
+  private[delta] def autoCompact(table: => DeltaTable, metadata: Metadata): Unit =
+    if (DeltaConfigs.AUTO_COMPACT.fromMetadata(metadata)) {
+      try table.compact()
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
 
   /** Everything-nullable view of a schema (Spark's asNullable is
     * private): used to compare schemas modulo nullability and to store

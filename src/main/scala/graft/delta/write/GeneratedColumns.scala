@@ -30,25 +30,6 @@ object GeneratedColumns {
         f.name -> f.metadata.getString(MetadataKey)
     }
 
-  /** Re-derive stored generated columns after a row-mutating rewrite
-    * (UPDATE / MERGE-update). When a SET changes a generation SOURCE
-    * column (`SET ts = ...` under `day GENERATED AS date(ts)`), the
-    * stored generated value goes stale; without recomputation the
-    * write-time equality guard ([[Invariants.enforce]]) would abort the
-    * whole job, making perfectly legal DML impossible. Columns the user
-    * explicitly SET are left alone — the guard still verifies those
-    * against the expression. Rows the DML did not touch recompute to
-    * their existing values (the invariant already held), so applying
-    * this to a whole rewritten file is value-preserving. */
-  def recompute(df: DataFrame, metadata: Metadata,
-                explicitlySet: Set[String]): DataFrame =
-    expressions(metadata.schema).foldLeft(df) {
-      case (acc, (name, genExpr)) if !explicitlySet.contains(name) =>
-        acc.withColumn(name,
-          expr(genExpr).cast(metadata.schema(name).dataType))
-      case (acc, _) => acc
-    }
-
   /** Compute any generated column the incoming frame does not carry.
     * Presence matches CASE-INSENSITIVELY (Spark's resolution): a frame
     * carrying 'DAY' for generated column 'day' is USER-PROVIDED — it

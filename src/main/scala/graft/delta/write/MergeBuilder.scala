@@ -14,19 +14,21 @@ import graft.delta._
   *   .execute()
   * }}}
   *
-  * Execution (scale notes inline):
-  *  1. the TARGET side joins as `t`, the source as `s`; ONE job finds the
-  *     files that can contain a match — an inner join carrying nothing but
-  *     (file name, row id), aggregated per file so the multi-match guard
-  *     (a target row with >1 source match is an error, like Delta) is
-  *     answered by the same shuffle;
-  *  2. matched files are re-read and LEFT-joined against the source once:
-  *     matched rows take the UPDATE set (or drop, for DELETE), unmatched
-  *     rows carry unchanged;
-  *  3. NOT-MATCHED source rows (left-anti against the WHOLE target, not
-  *     just matched files) insert, schema-aligned by name;
-  *  4. one commit: removes(matched files) + adds(rewrite ∪ inserts),
-  *     operation MERGE, Serializable isolation.
+  * Execution (scale notes inline); everything after the tagging is
+  * [[RowLevelDml]]'s:
+  *  1. the merge condition's target-only conjuncts prune the candidate
+  *     files and narrow the transaction's read set;
+  *  2. ONE job finds the files that can contain a match: an inner join
+  *     carrying nothing but (file name, row id), aggregated per file so
+  *     the multi-match guard (a target row with >1 source match is an
+  *     error, like Delta) is answered by the same shuffle;
+  *  3. the touched files plus the by-source candidates are LEFT-joined
+  *     against the source once, each row tagged with its first firing
+  *     clause;
+  *  4. NOT-MATCHED source rows (left-anti against the candidate target)
+  *     insert, schema-aligned by name;
+  *  5. [[RowLevelDml.run]] shades or rewrites, writes the change images
+  *     and commits as MERGE (Serializable); auto-compaction follows.
   */
 final class MergeBuilder private[delta] (
     table: DeltaTable,
@@ -156,10 +158,6 @@ final class MergeBuilder private[delta] (
       }
       ok
     }
-    def strip(e: Expression): Expression = e.transform {
-      case a: UnresolvedAttribute if a.nameParts.size == 2 &&
-        lower(a.nameParts.head) == "t" => UnresolvedAttribute(a.nameParts.tail)
-    }
     // the Column-API tree spells AND as UnresolvedFunction("and", ...) —
     // split that form as well as an already-catalyst And
     def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -174,8 +172,8 @@ final class MergeBuilder private[delta] (
       org.apache.spark.sql.graft.Shims.catalystExpression(condition))
       .filter(targetOnly(_))
     if (kept.isEmpty) None
-    else Some(org.apache.spark.sql.graft.Shims.column(
-      kept.map(strip).reduce(CatalystAnd)))
+    else Some(stripTargetAlias(
+      org.apache.spark.sql.graft.Shims.column(kept.reduce(CatalystAnd))))
   }
 
   /** Rewrite `t.`-qualified references to bare names so a target-only
@@ -242,10 +240,6 @@ final class MergeBuilder private[delta] (
     // one combined index space over all row-rewriting clauses: matched
     // clauses first, then not-matched-by-source clauses
     val rewriteClauses = matchedClauses ++ bySourceClauses
-    val updateCases = rewriteClauses.zipWithIndex.collect {
-      case (cl, i) if cl.set.isDefined => (i, cl.set.get) }
-    val deleteIdx = rewriteClauses.zipWithIndex.collect {
-      case (cl, i) if cl.set.isEmpty => i }
     // first-applicable-clause action per row; -1 = no clause fires and
     // the row carries unchanged. Clause conditions may reference both
     // sides; a null condition result does NOT fire.
@@ -296,22 +290,14 @@ final class MergeBuilder private[delta] (
         txn.readWholeTable() // merge reads target rows by data condition
         None
       }
-    // merge-on-read (`delta.enableDeletionVectors`): clause-hit target
-    // rows are SHADED in place (position bitmaps) and only the updated
-    // rows and inserts are written — a 10-row upsert against a 1 GB file
-    // writes KBs, not the file. Rows no clause accepts never move.
-    val dvMode = DeltaConfigs.ENABLE_DELETION_VECTORS.fromMetadata(metadata) &&
-      rewriteClauses.nonEmpty
     // shaded target files contribute live rows only (merge must never
-    // match against — or copy forward — DV-deleted rows)
-    def scanFiles(files: Seq[AddFile], withPos: Boolean = false): DataFrame =
-      read.LiveRows.files(deltaLog, metadata, files)(
-        extra = if (withPos) DvShade.Positions else Nil)
-    val target = candidateFiles.map(f => scanFiles(f))
+    // match against, or copy forward, DV-deleted rows)
+    val target = candidateFiles
+      .map(f => read.LiveRows.files(deltaLog, metadata, f)())
       .getOrElse(snapshot.toDF).alias("t")
     val src = source.alias("s")
 
-    // 1. ONE touched-file job: inner join carrying only (file, row-id),
+    // 2. ONE touched-file job: inner join carrying only (file, row-id),
     //    aggregated so the multi-match guard rides along — no second pass.
     //    The collect is file-count bounded (same order as the commit's
     //    RemoveFile list, which is driver-side by construction).
@@ -360,14 +346,8 @@ final class MergeBuilder private[delta] (
       else {
         val conds = bySourceClauses.map(_.cond)
         if (conds.exists(_.isEmpty)) snapshot.filesWhere(_ => true)
-        else {
-          val resolved = read.PartitionUtils.resolveFilter(spark, schema,
-            stripTargetAlias(conds.flatten.reduce(_ || _)))
-          val (m0, d) = read.PartitionUtils.splitMetadataAndDataPredicates(
-            resolved, metadata.partitionColumns)
-          snapshot.filesMatching(
-            m0 ++ read.GeneratedPartitionFilters.derive(metadata, d, spark), d)
-        }
+        else RowLevelDml.candidates(spark, snapshot, read.PartitionUtils
+          .resolveFilter(spark, schema, stripTargetAlias(conds.flatten.reduce(_ || _))))
       }
     // the files the rewrite must re-emit: match-touched files (only when
     // a matched clause can change them) plus the by-source candidates
@@ -377,133 +357,43 @@ final class MergeBuilder private[delta] (
       fromMatch ++ bySourceFiles.filterNot(f => seen.contains(f.path))
     }
 
-    val cdcEnabled = CdcWriter.enabled(metadata)
-    var changeFrames = Vector.empty[DataFrame]
-    var cached: Option[DataFrame] = None
-    // dvMode: the (__file, __pos) pairs of every clause-hit target row
-    var shadeHits: Option[DataFrame] = None
-
-    // 2. rewrite the affected files with the source joined in (dvMode:
-    //    emit only the UPDATED rows; hit rows shade instead of rewriting)
-    val rewritten: Option[DataFrame] =
+    // 3. tag each row of the affected files with its first firing clause.
+    //    One output row PER TARGET ROW is the invariant. With matched
+    //    clauses the touched-file job's multi-match guard makes the left
+    //    join 1:1; with ONLY by-source clauses the guard does not run
+    //    (duplicate source keys are legal then), so the source must never
+    //    join INTO the row set: matched rows carry via a semi join (one
+    //    row regardless of match count), not-matched rows come from the
+    //    anti join.
+    val tagged: Option[DataFrame] =
       if (rewriteFiles.isEmpty || rewriteClauses.isEmpty) None
-      else {
-        val rows = scanFiles(rewriteFiles, withPos = dvMode).alias("t")
-        // One output row PER TARGET ROW is the rewrite invariant. With
-        // matched clauses the touched-file job's multi-match guard makes
-        // the left join 1:1; with ONLY by-source clauses the guard does
-        // not run (duplicate source keys are legal then), so the source
-        // must never join INTO the row set — matched rows carry via a
-        // semi join (one row regardless of match count), not-matched
-        // rows come from the anti join. With CDF on, the frame feeds
-        // BOTH the rewrite and the change images: persist it so the
-        // join executes once, not once per consumer.
-        var tagged =
-          if (matchedClauses.isEmpty) {
-            val offset = matchedClauses.size
-            rows.join(src, condition, "left_semi")
-              .withColumn("__graft_action", lit(-1))
-              .unionByName(rows.join(src, condition, "left_anti")
-                .withColumn("__graft_action",
-                  firstAction(bySourceClauses.map(_.cond), offset)))
-          } else {
-            val joined = rows.join(
-              src.withColumn("__match", lit(1)), condition, "left")
-            // per-row action: matched rows take the first matched clause
-            // whose condition holds; not-matched-by-source rows take the
-            // first by-source clause (offset into the combined index
-            // space)
-            joined.withColumn("__graft_action",
-              when(col("__match").isNull,
-                firstAction(bySourceClauses.map(_.cond), matchedClauses.size))
-                .otherwise(firstAction(matchedClauses.map(_.cond))))
-          }
-        if (cdcEnabled || dvMode) {
-          // consumed by the rewrite AND the change images / shade-bitmap
-          // job — persist so the join executes once per consumer set
-          tagged = tagged.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cached = Some(tagged)
-        }
-
-        // project straight to the target schema (never withColumn — the
-        // joined frame carries ambiguous names from both sides), the SET
-        // of the row's clause winning per column; then re-derive
-        // generated columns for rows whose clause did not SET them
-        // explicitly (a SET on a generation source must not trip the
-        // write-time guard)
-        def projectUpdated(dfIn: DataFrame): DataFrame = {
-          val base = dfIn.select((schema.fieldNames.map { name =>
-            updateCases.foldRight(col(s"t.$name")) { case ((i, set), els) =>
-              set.get(name) match {
-                case Some(v) =>
-                  when(col("__graft_action") === i,
-                    v.cast(schema(name).dataType)).otherwise(els)
-                case None => els
-              }
-            }.as(name)
-          } :+ col("__graft_action")).toIndexedSeq: _*)
-          GeneratedColumns.expressions(schema).foldLeft(base) {
-            case (acc, (g, genExpr)) =>
-              val setters = updateCases.collect {
-                case (i, set) if set.contains(g) => i }
-              val keep = (col("__graft_action") === -1) ||
-                (if (setters.nonEmpty)
-                  col("__graft_action").isin(setters.map(Int.box): _*)
-                else lit(false))
-              acc.withColumn(g, when(keep, col(s"`$g`"))
-                .otherwise(expr(genExpr).cast(schema(g).dataType)))
-          }
-        }
-
-        val updIdx = updateCases.map(_._1)
-        if (cdcEnabled) {
-          def tCols(df: DataFrame) = df.select(
-            schema.fieldNames.map(n => col(s"t.$n").as(n)).toIndexedSeq: _*)
-          if (updIdx.nonEmpty) {
-            val updRows = tagged.filter(
-              col("__graft_action").isin(updIdx.map(Int.box): _*))
-            changeFrames :+= tCols(updRows)
-              .withColumn(CdcWriter.ChangeTypeCol, lit("update_preimage"))
-              .unionByName(projectUpdated(updRows).drop("__graft_action")
-                .withColumn(CdcWriter.ChangeTypeCol, lit("update_postimage")))
-          }
-          if (deleteIdx.nonEmpty) {
-            changeFrames :+= tCols(tagged.filter(
-              col("__graft_action").isin(deleteIdx.map(Int.box): _*)))
-              .withColumn(CdcWriter.ChangeTypeCol, lit("delete"))
-          }
-        }
-        if (dvMode) {
-          // every clause-hit row (update OR delete) shades its position;
-          // only the UPDATED rows are re-materialized as new files
-          shadeHits = Some(tagged.filter(col("__graft_action") =!= -1)
-            .select(col("t.__file").as("__file"), col("t.__pos").as("__pos")))
-          if (updIdx.isEmpty) None
-          else Some(projectUpdated(tagged.filter(
-            col("__graft_action").isin(updIdx.map(Int.box): _*)))
-            .drop("__graft_action"))
+      else Some {
+        val rows = RowLevelDml.target(deltaLog, metadata, rewriteFiles)
+        val bySource = firstAction(bySourceClauses.map(_.cond), matchedClauses.size)
+        if (matchedClauses.isEmpty) {
+          rows.join(src, condition, "left_semi")
+            .withColumn(RowLevelDml.ActionCol, lit(-1))
+            .unionByName(rows.join(src, condition, "left_anti")
+              .withColumn(RowLevelDml.ActionCol, bySource))
         } else {
-          val kept =
-            if (deleteIdx.isEmpty) tagged
-            else tagged.filter(!col("__graft_action")
-              .isin(deleteIdx.map(Int.box): _*))
-          Some(projectUpdated(kept).drop("__graft_action"))
+          rows.join(src.withColumn("__match", lit(1)), condition, "left")
+            .withColumn(RowLevelDml.ActionCol, when(col("__match").isNull, bySource)
+              .otherwise(firstAction(matchedClauses.map(_.cond))))
         }
       }
 
-    // 3. inserts: source rows matching NO target row — the FIRST insert
+    // 4. inserts: source rows matching NO target row — the FIRST insert
     //    clause whose condition holds supplies the values (explicit map,
     //    or align-by-name for INSERT *); rows no clause accepts drop
     val inserts: Option[DataFrame] =
       if (insertClauses.isEmpty) None
       else {
         val unmatched = src.join(target, condition, "left_anti")
-          .withColumn("__graft_action", firstAction(insertClauses.map(_.cond)))
-          .filter(col("__graft_action") =!= -1)
+          .withColumn(RowLevelDml.ActionCol, firstAction(insertClauses.map(_.cond)))
+          .filter(col(RowLevelDml.ActionCol) =!= -1)
         val frames = insertClauses.zipWithIndex.map { case (cl, i) =>
-          val rowsI = unmatched.filter(col("__graft_action") === i)
-            .drop("__graft_action")
+          val rowsI = unmatched.filter(col(RowLevelDml.ActionCol) === i)
+            .drop(RowLevelDml.ActionCol)
           // generated columns the clause does not provide COMPUTE (not
           // null-fill) — a date-partitioned target must place
           // merge-inserts in the right partition, same as appends
@@ -524,58 +414,19 @@ final class MergeBuilder private[delta] (
         Some(frames.reduce(_.unionByName(_)))
       }
 
-    val toWrite = (rewritten, inserts) match {
-      case (Some(r), Some(i)) => Some(r.unionByName(i))
-      case (r, i) => r.orElse(i)
+    // 5. shade or rewrite, change images, one write job and the commit
+    val txnAction: Seq[Action] = idempotency.toSeq.map { case (appId, v) =>
+      SetTransaction(appId, v, Some(deltaLog.clock()))
     }
-    // the persisted CDF join must be released on EVERY exit — a failing
-    // write job would otherwise leak the cache for the session
-    try {
-      val adds = toWrite.map(df =>
-        DeltaWriter.writeFiles(Invariants.enforce(df, metadata), deltaLog,
-          metadata.partitionColumns, metadata.columnMapping, Some(metadata)))
-        .getOrElse(Nil)
-      // dvMode: shade the hit rows' positions instead of removing +
-      // re-emitting whole files (fully-shaded files still drop outright)
-      val shade = shadeHits.map(h => DvShade.shade(deltaLog, h, rewriteFiles))
-      val removes: Seq[Action] = shade.map(_.actions).getOrElse {
-        if (rewritten.isDefined) rewriteFiles.map(_.remove(deltaLog.clock()))
-        else Nil
-      }
-
-      if (adds.isEmpty && removes.isEmpty) return snapshot.version
-      if (cdcEnabled) {
-        inserts.foreach(i => changeFrames :+=
-          i.withColumn(CdcWriter.ChangeTypeCol, lit("insert")))
-      }
-      val cdc: Seq[Action] = changeFrames.reduceOption(_.unionByName(_))
-        .map(CdcWriter.writeChangeFiles(_, deltaLog, metadata.columnMapping,
-          metadata.fieldIdMapping))
-        .getOrElse(Nil)
-      val txnAction: Seq[Action] = idempotency.toSeq.map { case (appId, v) =>
-        SetTransaction(appId, v, Some(deltaLog.clock()))
-      }
-      val protoActions: Seq[Action] =
-        if (shade.exists(!_.isEmpty)) DvShade.protocolUpgrade(snapshot) else Nil
-      val committed = txn.commit(
-        protoActions ++ txnAction ++ cdc ++ adds ++ removes,
-        DeltaOperations.Merge,
-        operationMetrics = Map(
-          "numTargetFilesRemoved" ->
-            shade.fold(removes.size)(_.numRemovedOutright).toString,
-          "numTargetFilesAdded" -> adds.size.toString) ++
-          shade.map(s => "numDeletionVectorsAdded" -> s.numDvsAdded.toString),
-        // delta-spark renders DML predicates as a JSON array of strings
-        operationParameters = Map("predicate" -> Seq(condition.toString)))
-      // delta.autoOptimize.autoCompact applies to MERGE-grown tables the
-      // same as to appends (a per-batch upsert artifact accretes
-      // insert-files just like an append-only one); best-effort, the
-      // merge above is already durable
-      if (graft.delta.DeltaConfigs.AUTO_COMPACT.fromMetadata(txn.metadata)) {
-        try table.compact()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      committed
-    } finally cached.foreach(_.unpersist(blocking = false))
+    val committed = RowLevelDml.run(txn, rewriteFiles, tagged,
+      rewriteClauses.map(_.set), inserts, DeltaOperations.Merge,
+      condition.toString, txnAction) { c =>
+      Map("numTargetFilesRemoved" -> c.removedFiles.toString,
+        "numTargetFilesAdded" -> c.addedFiles.toString) ++
+        c.dvsAdded.map(n => "numDeletionVectorsAdded" -> n.toString)
+    }
+    // merge-grown tables accrete insert files like appended ones
+    if (committed != snapshot.version) DeltaWriter.autoCompact(table, txn.metadata)
+    committed
   }
 }

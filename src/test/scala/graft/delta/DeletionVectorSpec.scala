@@ -153,6 +153,28 @@ class DeletionVectorSpec extends SparkSpec {
     assert(e.getMessage.contains("increasing"), e.getMessage)
   }
 
+  test("a far bucket key costs at most what its blob holds") {
+    // 24 bytes: magic, count 1, the key, an empty 32-bit bitmap
+    def blob(key: Int): Array[Byte] = {
+      val bb = ByteBuffer.allocate(24).order(ByteOrder.LITTLE_ENDIAN)
+      bb.putInt(RoaringBitmapArray.PortableMagic).putLong(1L).putInt(key)
+      bb.putInt(12346).putInt(0)
+      bb.array()
+    }
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val self = Thread.currentThread().getId
+    Seq(1 << 22, Int.MaxValue).foreach { key =>
+      val before = threads.getThreadAllocatedBytes(self)
+      val outcome = scala.util.Try(RoaringBitmapArray.deserialize(blob(key)))
+      val allocated = threads.getThreadAllocatedBytes(self) - before
+      outcome.failed.foreach(e =>
+        assert(e.isInstanceOf[IllegalArgumentException], s"key $key: $e"))
+      outcome.foreach(bm => assert(bm.isEmpty, s"key $key"))
+      assert(allocated < (16L << 20), s"key $key allocated $allocated bytes")
+    }
+  }
+
   test("serialization equals the RoaringBitmap jar's portable writer, " +
       "and the jar's bytes read back") {
     import org.roaringbitmap.longlong.Roaring64NavigableMap
