@@ -1,10 +1,9 @@
 package graft.delta
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Encoders, SaveMode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Dataset, Encoder}
 
 import graft.delta.write.LocalParquet
-import graft.delta.write.LocalParquet.MaxDriverRows
 
 /** `_last_checkpoint` contents (ref: Checkpoints.scala:54-101). */
 case class LastCheckpoint(version: Long, size: Long, parts: Option[Int] = None)
@@ -14,11 +13,13 @@ case class LastCheckpoint(version: Long, size: Long, parts: Option[Int] = None)
   * A checkpoint is the snapshot's folded state (protocol, metadata, txns,
   * active files, unexpired tombstones) as parquet, written every
   * `checkpointInterval` commits so readers replay at most one checkpoint
-  * plus a bounded number of JSON commits. The state is written as a Spark
-  * job (scales to any file count), then the single part file is renamed to
-  * the protocol's `N.checkpoint.parquet` name; `_last_checkpoint` is
-  * updated last (overwrite, best-effort — corrupted hints are repaired by
-  * listing, ref Checkpoints.scala:110-210).
+  * plus a bounded number of JSON commits. Every checkpoint runs the same
+  * three steps: STAGE each artifact class under one
+  * `_delta_log/.checkpoint_tmp_<uuid>/` directory
+  * ([[LocalParquet.writeArtifacts]] decides driver or Spark job),
+  * PUBLISH each staged file under its protocol name by one rename, then
+  * write `_last_checkpoint` (overwrite, best-effort — corrupted hints are
+  * repaired by listing, ref Checkpoints.scala:110-210).
   */
 object Checkpoints {
 
@@ -71,63 +72,100 @@ object Checkpoints {
     }
   }
 
-  /** Write the snapshot's checkpoint; `parts > 1` produces the protocol's
-    * multi-part form `V.checkpoint.i.n.parquet` (one Spark output
-    * partition per part — at very large file counts no single writer task
-    * or reader task handles the whole state). Tables with
-    * `delta.checkpointPolicy=v2` get a V2 (uuid-named) checkpoint with
-    * sidecars instead — multi-part classic checkpoints are not legal
-    * under that policy. Beyond the driver-state bound the file list flows
-    * checkpoint → checkpoint as a Spark job, never through the driver
-    * ([[writeCheckpointDistributed]]). */
-  def writeCheckpoint(snapshot: Snapshot, parts: Int = 1): Unit = {
-    if (checkpointPolicy(snapshot) == "v2") return writeV2Checkpoint(snapshot, parts)
-    if (snapshot.distributedState) return writeCheckpointDistributed(snapshot, parts)
-    implicit val enc = Encs.singleAction
+  /** The active files as checkpoint rows, in the container they live in.
+    * Stats parse ONCE at checkpoint time; every later pruning query reads
+    * the `stats_parsed` struct instead of re-walking the JSON. */
+  private def fileRows(snapshot: Snapshot,
+      files: Either[Seq[AddFile], Dataset[AddFile]])
+    : Either[Seq[SingleAction], Dataset[SingleAction]] = {
     val statsXf = statsTransform(snapshot.metadata)
-    val actions: Seq[SingleAction] =
-      (snapshot.protocol.wrap +: snapshot.metadata.wrap +:
-        liveSetTransactions(snapshot).map(_.wrap)) ++
-        snapshot.domainActions.map(_.wrap) ++
-        // stats parse ONCE at checkpoint time; every later pruning query
-        // reads the stats_parsed struct instead of re-walking the JSON
-        snapshot.allFiles.map(a => statsXf(a).wrap) ++
-        snapshot.tombstones.map(_.wrap)
-    writeCheckpointDS(snapshot, snapshot.spark.createDataset(actions),
-      actions.size.toLong, autoParts(snapshot, parts, actions.size.toLong),
-      driverRows = Some(actions))
+    files match {
+      case Left(adds) => Left(adds.map(a => statsXf(a).wrap))
+      case Right(adds) => Right(adds.map(a => statsXf(a).wrap)(Encs.singleAction))
+    }
   }
 
-  /** Fully distributed variant: the AddFile set comes from the
-    * distributed log replay (M3) and flows into the checkpoint parquet as
-    * a Spark job — the table's file list never materializes on the
-    * driver. Protocol/metadata/txns/tombstones are driver-small by
-    * construction. */
-  def writeCheckpointDistributed(snapshot: Snapshot, parts: Int = 1): Unit = {
-    if (checkpointPolicy(snapshot) == "v2") return writeV2Checkpoint(snapshot, parts)
+  /** Write the snapshot's checkpoint; `parts > 1` produces the protocol's
+    * multi-part form `V.checkpoint.i.n.parquet` (at very large file
+    * counts no single writer or reader task handles the whole state).
+    * Tables with `delta.checkpointPolicy=v2` get a V2 (uuid-named)
+    * checkpoint with sidecars instead — multi-part classic checkpoints
+    * are not legal under that policy. Beyond the driver-state bound the
+    * file list flows checkpoint → checkpoint as a Spark job, never
+    * through the driver. */
+  def writeCheckpoint(snapshot: Snapshot, parts: Int = 1): Unit =
+    writeClassic(snapshot, snapshot.fileState, parts)
+
+  /** [[writeCheckpoint]] with the AddFile set taken from the distributed
+    * log replay (M3) whatever the state mode: the file list flows into
+    * the checkpoint parquet as a Spark job and never materializes on the
+    * driver. */
+  def writeCheckpointDistributed(snapshot: Snapshot, parts: Int = 1): Unit =
+    writeClassic(snapshot, Right(snapshot.allFilesDistributed), parts)
+
+  private def writeClassic(snapshot: Snapshot,
+      files: => Either[Seq[AddFile], Dataset[AddFile]], requested: Int): Unit = {
+    if (checkpointPolicy(snapshot) == "v2") return writeV2Checkpoint(snapshot, requested)
+    require(requested >= 1, s"parts must be >= 1, got $requested")
     implicit val enc = Encs.singleAction
-    val statsXf = statsTransform(snapshot.metadata)
-    val small: Seq[SingleAction] =
-      (snapshot.protocol.wrap +: snapshot.metadata.wrap +:
-        liveSetTransactions(snapshot).map(_.wrap)) ++
-        snapshot.domainActions.map(_.wrap) ++
-        snapshot.tombstones.map(_.wrap)
-    val ds = snapshot.spark.createDataset(small)
-      .unionByName(snapshot.allFilesDistributed
-        .map(a => statsXf(a).wrap)(
-          Encs.singleAction))
-    // the action count is an aggregation over the (persisted) distributed
-    // state — the file list itself never touches the driver
-    val total = small.size.toLong + snapshot.numOfFiles
-    writeCheckpointDS(snapshot, ds, total, autoParts(snapshot, parts, total))
+    val log = snapshot.deltaLog
+    // every action but the files is driver-small by construction
+    val head = (snapshot.protocol.wrap +: snapshot.metadata.wrap +:
+      liveSetTransactions(snapshot).map(_.wrap)) ++
+      snapshot.domainActions.map(_.wrap)
+    val tombstones = snapshot.tombstones.map(_.wrap)
+    val (rows, total) = fileRows(snapshot, files) match {
+      case Left(adds) =>
+        (Left(head ++ adds ++ tombstones), (head.size + adds.size + tombstones.size).toLong)
+      case Right(adds) =>
+        // the action count is an aggregation over the (persisted)
+        // distributed state — the file list itself never touches the driver
+        (Right(snapshot.spark.createDataset(head ++ tombstones).unionByName(adds)),
+          head.size + tombstones.size + snapshot.numOfFiles)
+    }
+    val parts = autoParts(snapshot, requested, total)
+    withStaging(snapshot) { staging =>
+      val written = staging.stage("parts", rows, enc, parts).map(_._2)
+      require(written.nonEmpty, "checkpoint write produced no parquet")
+      // CONCURRENT-WRITER GUARD (VERDICT r12 #3): publishing a
+      // (possibly multi-part) group is not atomic — two processes
+      // explicitly checkpointing the SAME version could interleave
+      // delete+rename over the same destinations and mix parts from two
+      // different row distributions of the state (losing/duplicating
+      // rows). An O_EXCL claim marker elects ONE publisher per version;
+      // the loser abandons its staged parts — a checkpoint for this
+      // version is being (or was) written, which is the outcome its
+      // caller asked for. The automatic cadence path could never reach
+      // the interleave (NOTES r12), but the public API can: this turns
+      // that adjudication into enforcement (CrossProcessCheckpointSpec).
+      val marker = new Path(log.logPath,
+        "." + "%020d".format(snapshot.version) + ".checkpoint.publishing")
+      if (claimPublish(staging.fs, marker)) {
+        try {
+          // a near-empty state can yield fewer files than parts
+          val dests =
+            if (parts == 1) Seq(FileNames.checkpointFileSingular(log.logPath, snapshot.version))
+            else FileNames.checkpointFileWithParts(log.logPath, snapshot.version, written.length)
+          written.zip(dests).foreach { case (part, dest) => staging.publish(part, dest) }
+          writeLastCheckpoint(log, LastCheckpoint(snapshot.version, total,
+            parts = Some(written.length).filter(_ > 1)))
+        } finally {
+          try staging.fs.delete(marker, false)
+          catch { case t: java.io.IOException =>
+            System.err.println(
+              s"graft: checkpoint publish marker $marker delete failed (ignored): $t")
+          }
+        }
+      }
+    }
   }
 
   /** V2 checkpoint write (`delta.checkpointPolicy=v2`): the file actions
-    * flow as Spark jobs into sidecar parquets under
-    * `_delta_log/_sidecars/`, and a single uuid-named main parquet
-    * carries `checkpointMetadata`, protocol, metadata, txns and the
-    * sidecar references. Works in both driver and distributed state modes
-    * (the file list never touches the driver in the latter).
+    * go to sidecar parquets under `_delta_log/_sidecars/`, and a single
+    * uuid-named main parquet carries `checkpointMetadata`, protocol,
+    * metadata, txns and the sidecar references. Works in both driver and
+    * distributed state modes (the file list never touches the driver in
+    * the latter).
     *
     * '''Sidecar carry-over''' — the reason the V2 format exists. Adds are
     * bucketed by a stable hash of their (canonicalized) path, one bucket
@@ -157,24 +195,7 @@ object Checkpoints {
     * sees only that writer's files; `_last_checkpoint` is a last-wins
     * atomic overwrite. */
   def writeV2Checkpoint(snapshot: Snapshot, parts: Int = 1): Unit = {
-    implicit val enc = Encs.singleAction
-    import org.apache.spark.sql.functions.{col, lit, udf}
-    val statsXf = statsTransform(snapshot.metadata)
     val log = snapshot.deltaLog
-    val fs = log.logPath.getFileSystem(log.hadoopConf)
-    val spark = snapshot.spark
-
-    val total = snapshot.numOfFiles + snapshot.tombstones.size
-    // DRIVER-SMALL v2 checkpoint (r16, guide §1 profile): the action set
-    // is already a driver Seq and each artifact is a KB-sized file, yet
-    // the job path paid one full Spark write job per artifact class
-    // (sidecars, tombstones, main) — 0.5-0.9 s per cadence checkpoint of
-    // scaffolding. Same bytes via LocalParquet, same names, same publish
-    // protocol; distributed-state (and non-local-scheme) tables keep the
-    // Spark-job path unchanged.
-    val driverSmall = !snapshot.distributedState &&
-      LocalParquet.onDriver(Seq(log.logPath), fs, Some(total), MaxDriverRows)
-
     val plan = planV2CarryOver(snapshot, parts)
     // full-rewrite bucket count: driven by the SIDECAR size target, not
     // the classic part size — finer buckets are what make carry-over
@@ -184,154 +205,106 @@ object Checkpoints {
     val nBuckets = plan.map(_.nBuckets).getOrElse(math.max(parts,
       math.ceil(snapshot.numOfFiles.toDouble / sidecarSize.toDouble)
         .toInt.max(1)))
-
-    val uuid = java.util.UUID.randomUUID().toString
-    val tempDir = new Path(log.logPath, s".v2cp_tmp_$uuid")
-    val sidecarDir = FileNames.sidecarDir(log.logPath)
     // bucket on the CANONICAL path: foreign logs legally mix relative and
     // absolute spellings of the same file, and a remove spelled
     // differently from its add must still land in the add's bucket
     val canonical = snapshot.canonicalPath
-    val nb = nBuckets
-    try {
-      fs.mkdirs(sidecarDir)
-      def publish(src: Path, destName: String): SidecarFile = {
-        val dest = new Path(sidecarDir, destName)
-        fs.delete(dest, false)
-        if (!fs.rename(src, dest)) {
-          throw new java.io.IOException(s"rename $src -> $dest failed")
-        }
-        val st = fs.getFileStatus(dest)
-        SidecarFile(dest.getName, sizeInBytes = Some(st.getLen),
-          modificationTime = Some(st.getModificationTime))
-      }
-      // 1. bucketed add sidecars: one file per (changed) bucket.
-      val newBucketSidecars = if (driverSmall) {
-        // rows already driver-resident: bucket with the SAME function,
-        // write each changed bucket via LocalParquet (identical rows and
-        // schema — partitionBy dropped __bucket on the job path too),
-        // publish under the same names
-        val changed = plan.map(_.changed.toSet)
-        snapshot.allFiles.map(a => statsXf(a).wrap)
-          .groupBy(sa => sidecarBucket(canonical(sa.add.get.path), nb))
-          .toSeq.sortBy(_._1)
-          .filter { case (b, _) => changed.forall(_.contains(b)) }
-          .map { case (b, rows) =>
-            val tmp = new Path(tempDir, s"b$b.parquet")
-            LocalParquet.write(spark, tmp.toString, rows, Encs.singleAction)
-            publish(tmp, s"$uuid.b${b}of$nBuckets.0.parquet")
+    val bucketOf = (sa: SingleAction) => sidecarBucket(canonical(sa.add.get.path), nBuckets)
+    val uuid = java.util.UUID.randomUUID().toString
+    val tombstones = snapshot.tombstones.map(_.wrap)
+    withStaging(snapshot) { staging =>
+      val sidecarDir = FileNames.sidecarDir(log.logPath)
+      staging.fs.mkdirs(sidecarDir)
+      def publishSidecars(staged: Seq[(Int, Path)],
+                          name: (Int, Int) => String): Seq[SidecarFile] =
+        staged.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (b, files) =>
+          files.map(_._2).zipWithIndex.map { case (file, j) =>
+            val dest = new Path(sidecarDir, name(b, j))
+            staging.publish(file, dest)
+            val st = staging.fs.getFileStatus(dest)
+            SidecarFile(dest.getName, sizeInBytes = Some(st.getLen),
+              modificationTime = Some(st.getModificationTime))
           }
-      } else {
-        val bucketOf = udf((p: String) => sidecarBucket(canonical(p), nb))
-        val bucketed = snapshot.allFilesDS.map(a => statsXf(a).wrap)(enc).toDF
-          .withColumn("__bucket", bucketOf(col("add.path")))
-        val toWrite = plan match {
-          case Some(p) if p.changed.isEmpty => bucketed.filter(lit(false))
-          case Some(p) => bucketed.filter(
-            col("__bucket").isInCollection(p.changed))
-          case None => bucketed
         }
-        // one directory per (changed) bucket. The repartition keys every
-        // bucket's rows into ONE task (bucket collisions inside a task
-        // are fine — partitionBy still splits them into their own
-        // directories), so each bucket rewrite produces exactly one
-        // sidecar instead of one file per input partition that happened
-        // to hold a row of it.
-        val writeParts = plan.map(p => math.max(1, p.changed.size))
-          .getOrElse(nBuckets)
-        toWrite.repartition(writeParts, col("__bucket"))
-          .write.partitionBy("__bucket")
-          .mode(SaveMode.Overwrite).parquet(tempDir.toString)
-        fs.listStatus(tempDir)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("__bucket="))
-          .sortBy(_.getPath.getName).flatMap { d =>
-            val b = d.getPath.getName.stripPrefix("__bucket=").toInt
-            fs.listStatus(d.getPath).map(_.getPath)
-              .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-              .zipWithIndex.map { case (part, j) =>
-                publish(part, s"$uuid.b${b}of$nBuckets.$j.parquet")
-              }
-          }.toSeq
+      // 1. add sidecars, one per (changed) bucket; a carry-over that
+      // changed no bucket stages nothing
+      val changed = plan.map(_.changed)
+      val addSidecars = if (changed.exists(_.isEmpty)) Seq.empty else {
+        val keep = (sa: SingleAction) => changed.forall(_.contains(bucketOf(sa)))
+        val rows = fileRows(snapshot, snapshot.fileState) match {
+          case Left(adds) => Left(adds.filter(keep))
+          case Right(adds) => Right(adds.filter(keep))
+        }
+        publishSidecars(staging.stage("adds", rows, Encs.singleAction,
+          changed.fold(nBuckets)(_.size), Some(bucketOf)),
+          (b, j) => s"$uuid.b${b}of$nBuckets.$j.parquet")
       }
       // 2. tombstone sidecars: rewritten from the snapshot every time so
       // retention-based expiry is applied on the checkpoint cadence
-      val tombstoneSidecars =
-        if (snapshot.tombstones.isEmpty) Seq.empty[SidecarFile]
-        else if (driverSmall) {
-          val tmp = new Path(tempDir, "tombstones.parquet")
-          LocalParquet.write(spark, tmp.toString,
-            snapshot.tombstones.map(_.wrap), Encs.singleAction)
-          Seq(publish(tmp, s"$uuid.tombstones.0.parquet"))
-        } else {
-          val tsDir = new Path(log.logPath, s".v2cp_ts_tmp_$uuid")
-          val tParts = autoParts(snapshot, 1, snapshot.tombstones.size.toLong)
-          spark.createDataset(snapshot.tombstones.map(_.wrap))
-            .repartition(tParts)
-            .write.mode(SaveMode.Overwrite).parquet(tsDir.toString)
-          try fs.listStatus(tsDir).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            .zipWithIndex.map { case (part, j) =>
-              publish(part, s"$uuid.tombstones.$j.parquet")
-            }.toSeq
-          finally fs.delete(tsDir, true)
-        }
-      val sidecars =
-        (plan.map(_.carried).getOrElse(Seq.empty) ++ newBucketSidecars ++
-          tombstoneSidecars).sortBy(_.path)
+      val tombstoneSidecars = publishSidecars(staging.stage("tombstones",
+        Left(tombstones), Encs.singleAction,
+        autoParts(snapshot, 1, tombstones.size.toLong)),
+        (_, j) => s"$uuid.tombstones.$j.parquet")
+      val sidecars = (plan.map(_.carried).getOrElse(Seq.empty) ++ addSidecars ++
+        tombstoneSidecars).sortBy(_.path)
 
-      // 2. main file: exactly one checkpointMetadata + the non-file
+      // 3. main file: exactly one checkpointMetadata + the non-file
       // actions + the sidecar references
-      implicit val mainEnc = Encs.v2MainAction
-      val mainRows: Seq[Checkpoints.V2MainAction] =
-        Checkpoints.V2MainAction(checkpointMetadata =
-          Some(CheckpointMetadata(snapshot.version))) +:
-        Checkpoints.V2MainAction(protocol = Some(snapshot.protocol)) +:
-        Checkpoints.V2MainAction(metaData = Some(snapshot.metadata)) +:
-        (liveSetTransactions(snapshot).map(t =>
-          Checkpoints.V2MainAction(txn = Some(t))) ++
-          snapshot.domainActions.map(d =>
-            Checkpoints.V2MainAction(domainMetadata = Some(d))) ++
-          sidecars.map(s => Checkpoints.V2MainAction(sidecar = Some(s))))
-      // the main file's rows are a driver Seq by construction (non-file
-      // actions + sidecar references) — on the local scheme write it
-      // driver-side whatever the state mode; the temp+rename publish is
-      // unchanged so readers never observe a torn main
-      if (LocalParquet.onDriver(Seq(log.logPath), fs,
-          Some(mainRows.size.toLong), MaxDriverRows)) {
-        val mainTmp = new Path(tempDir, "main.parquet")
-        LocalParquet.write(spark, mainTmp.toString, mainRows,
-          Encs.v2MainAction)
-        val dest = FileNames.v2CheckpointFile(
-          log.logPath, snapshot.version, uuid, "parquet")
-        fs.delete(dest, false)
-        if (!fs.rename(mainTmp, dest)) {
-          throw new java.io.IOException(s"rename $mainTmp -> $dest failed")
-        }
-      } else {
-        val mainTmp = new Path(log.logPath, s".v2cp_main_tmp_$uuid")
-        spark.createDataset(mainRows).coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(mainTmp.toString)
-        try {
-          val mainPart = fs.listStatus(mainTmp)
-            .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-          val dest = FileNames.v2CheckpointFile(
-            log.logPath, snapshot.version, uuid, "parquet")
-          fs.delete(dest, false)
-          if (!fs.rename(mainPart, dest)) {
-            throw new java.io.IOException(s"rename $mainPart -> $dest failed")
-          }
-        } finally fs.delete(mainTmp, true)
-      }
-
-      val lc = LastCheckpoint(snapshot.version,
-        total + mainRows.size.toLong, parts = None)
-      log.store.write(FileNames.lastCheckpointFile(log.logPath),
-        Iterator(JsonCodec.mapper.writeValueAsString(lc)),
-        overwrite = true, log.hadoopConf)
-    } finally {
-      fs.delete(tempDir, true)
+      val mainRows: Seq[V2MainAction] =
+        V2MainAction(checkpointMetadata = Some(CheckpointMetadata(snapshot.version))) +:
+        V2MainAction(protocol = Some(snapshot.protocol)) +:
+        V2MainAction(metaData = Some(snapshot.metadata)) +:
+        (liveSetTransactions(snapshot).map(t => V2MainAction(txn = Some(t))) ++
+          snapshot.domainActions.map(d => V2MainAction(domainMetadata = Some(d))) ++
+          sidecars.map(s => V2MainAction(sidecar = Some(s))))
+      staging.publish(staging.stage("main", Left(mainRows), Encs.v2MainAction, 1).head._2,
+        FileNames.v2CheckpointFile(log.logPath, snapshot.version, uuid, "parquet"))
+      writeLastCheckpoint(log, LastCheckpoint(snapshot.version,
+        snapshot.numOfFiles + tombstones.size + mainRows.size, parts = None))
     }
   }
+
+  /** Name prefix of a checkpoint's staging directory under `_delta_log`. */
+  private val StagingPrefix = ".checkpoint_tmp_"
+
+  /** Names a checkpoint leaves in `_delta_log` only when its process dies
+    * mid-write: the staging directory, the classic publish claim marker
+    * and a stale claim's reclaim ticket. [[DeltaLog.cleanUpExpiredLogs]]
+    * sweeps the expired ones. */
+  private[delta] val RemnantGlobs: Seq[String] = Seq(StagingPrefix + "*",
+    ".*.checkpoint.publishing", ".*.checkpoint.publishing.reclaim.*")
+
+  /** One checkpoint's staging directory, with one subdirectory per
+    * artifact class. */
+  private final class Staging(spark: org.apache.spark.sql.SparkSession,
+                              val fs: FileSystem, dir: Path) {
+    def stage[T](artifact: String, rows: Either[Seq[T], Dataset[T]],
+                 enc: Encoder[T], parts: Int,
+                 bucket: Option[T => Int] = None): Seq[(Int, Path)] =
+      LocalParquet.writeArtifacts(spark, fs, new Path(dir, artifact), rows,
+        enc, parts, bucket)
+
+    /** Move a staged file to its protocol name, replacing an existing
+      * one (an idempotent re-checkpoint). */
+    def publish(staged: Path, dest: Path): Unit = {
+      fs.delete(dest, false)
+      if (!fs.rename(staged, dest)) {
+        throw new java.io.IOException(s"rename $staged -> $dest failed")
+      }
+    }
+  }
+
+  private def withStaging(snapshot: Snapshot)(body: Staging => Unit): Unit = {
+    val log = snapshot.deltaLog
+    val fs = log.logPath.getFileSystem(log.hadoopConf)
+    val dir = new Path(log.logPath, StagingPrefix + java.util.UUID.randomUUID())
+    try body(new Staging(snapshot.spark, fs, dir)) finally fs.delete(dir, true)
+  }
+
+  private def writeLastCheckpoint(log: DeltaLog, lc: LastCheckpoint): Unit =
+    log.store.write(FileNames.lastCheckpointFile(log.logPath),
+      Iterator(JsonCodec.mapper.writeValueAsString(lc)),
+      overwrite = true, log.hadoopConf)
 
   /** One add-bucket sidecar name this writer produces:
     * `<uuid>.b<bucket>of<nBuckets>.<j>.parquet`. The bucket geometry
@@ -518,93 +491,6 @@ object Checkpoints {
     } finally fs.delete(ticket, false)
   }
 
-  /** `actionsDS` is by-name: the driver-small path writes `driverRows`
-    * and never builds the Dataset (encoding every action through a
-    * freshly generated serializer just to drop it). */
-  private def writeCheckpointDS(
-      snapshot: Snapshot,
-      actionsDS: => org.apache.spark.sql.Dataset[SingleAction],
-      knownSize: Long,
-      parts: Int,
-      driverRows: Option[Seq[SingleAction]] = None): Unit = {
-    require(parts >= 1, s"parts must be >= 1, got $parts")
-    val log = snapshot.deltaLog
-    val fs = log.logPath.getFileSystem(log.hadoopConf)
-
-    val tempDir = new Path(log.logPath,
-      s".checkpoint_tmp_${java.util.UUID.randomUUID()}")
-    // DRIVER-SMALL single-part checkpoint (r16, guide §1 profile): the
-    // rows are already a driver Seq and the output is one KB-sized file —
-    // write it with LocalParquet (same WriteSupport/schema/codec as the
-    // one-task job, none of the job/committer/chmod scaffolding, measured
-    // 0.3-0.9 s per cadence checkpoint). The publish protocol below
-    // (claim marker, rename, _last_checkpoint) is unchanged.
-    val wroteDriverSide = driverRows match {
-      case Some(rows) if parts == 1 && LocalParquet.onDriver(
-          Seq(log.logPath), fs, Some(rows.size.toLong), MaxDriverRows) =>
-        LocalParquet.write(snapshot.spark,
-          new Path(tempDir, "part-00000.parquet").toString, rows,
-          Encs.singleAction)
-        true
-      case _ => false
-    }
-    if (!wroteDriverSide) {
-      // parts == 1 (the steady-state cadence checkpoint): coalesce instead
-      // of repartition — one task, NO shuffle exchange (guide §2.4; the
-      // round-robin repartition additionally paid sortBeforeRepartition).
-      // Multi-part keeps repartition: even part sizes need the shuffle.
-      val shaped =
-        if (parts == 1) actionsDS.coalesce(1) else actionsDS.repartition(parts)
-      shaped.write.mode(SaveMode.Overwrite).parquet(tempDir.toString)
-    }
-    try {
-      val written = fs.listStatus(tempDir)
-        .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      require(written.nonEmpty, "checkpoint write produced no parquet")
-      // CONCURRENT-WRITER GUARD (VERDICT r12 #3): publishing a
-      // (possibly multi-part) group is not atomic — two processes
-      // explicitly checkpointing the SAME version could interleave
-      // delete+rename over the same destinations and mix parts from two
-      // different row distributions of the state (losing/duplicating
-      // rows). An O_EXCL claim marker elects ONE publisher per version;
-      // the loser abandons its staged parts — a checkpoint for this
-      // version is being (or was) written, which is the outcome its
-      // caller asked for. The automatic cadence path could never reach
-      // the interleave (NOTES r12), but the public API can: this turns
-      // that adjudication into enforcement (CrossProcessCheckpointSpec).
-      val marker = new Path(log.logPath,
-        "." + "%020d".format(snapshot.version) + ".checkpoint.publishing")
-      if (!claimPublish(fs, marker)) return
-      try {
-        val dests =
-          if (parts == 1) {
-            Seq(FileNames.checkpointFileSingular(log.logPath, snapshot.version))
-          } else {
-            // a near-empty state can yield fewer Spark partitions than parts
-            FileNames.checkpointFileWithParts(
-              log.logPath, snapshot.version, written.length)
-          }
-        written.zip(dests).foreach { case (part, dest) =>
-          fs.delete(dest, false) // idempotent re-checkpoint
-          if (!fs.rename(part, dest)) {
-            throw new java.io.IOException(s"rename $part -> $dest failed")
-          }
-        }
-        val lc = LastCheckpoint(snapshot.version, knownSize,
-          parts = Some(written.length).filter(_ > 1))
-        log.store.write(FileNames.lastCheckpointFile(log.logPath),
-          Iterator(JsonCodec.mapper.writeValueAsString(lc)),
-          overwrite = true, log.hadoopConf)
-      } finally {
-        try fs.delete(marker, false)
-        catch { case _: java.io.IOException => () }
-      }
-    } finally {
-      fs.delete(tempDir, true)
-    }
-  }
-
   /** Row shape of a V2 checkpoint's MAIN parquet file: the non-file
     * action columns plus `checkpointMetadata` and `sidecar` (top-level —
     * Spark's generated serializer must reach the constructor). */
@@ -616,13 +502,20 @@ object Checkpoints {
       sidecar: Option[SidecarFile] = None,
       domainMetadata: Option[DomainMetadata] = None)
 
-  /** Read `_last_checkpoint`; any failure (missing, corrupt) yields None
-    * and the caller falls back to a full listing. */
-  def lastCheckpoint(log: DeltaLog): Option[LastCheckpoint] =
+  /** Read `_last_checkpoint`; None when it is missing (every
+    * checkpoint-less table) or unreadable, and the caller falls back to a
+    * full listing. An unreadable hint is reported: some writer left it. */
+  def lastCheckpoint(log: DeltaLog): Option[LastCheckpoint] = {
+    val hint = FileNames.lastCheckpointFile(log.logPath)
     try {
-      val lines = log.store.read(
-        FileNames.lastCheckpointFile(log.logPath), log.hadoopConf)
-      lines.headOption.map(
+      log.store.read(hint, log.hadoopConf).headOption.map(
         JsonCodec.mapper.readValue(_, classOf[LastCheckpoint]))
-    } catch { case _: Exception => None }
+    } catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException =>
+        None
+      case t: Exception =>
+        System.err.println(s"graft: unreadable checkpoint hint $hint (ignored): $t")
+        None
+    }
+  }
 }

@@ -767,17 +767,24 @@ class DeltaLog private (
     // mains are few — one read each)
     val sidecarDir = FileNames.sidecarDir(logPath)
     if (fs.exists(sidecarDir)) {
-      val referenced = survivingV2.result().flatMap { f =>
-        try V2Checkpoints.readMain(spark, logPath, f, hadoopConf)
+      val referenced = try Some(survivingV2.result().flatMap { f =>
+        V2Checkpoints.readMain(spark, logPath, f, hadoopConf)
           .sidecars.map(s => V2Checkpoints.sidecarPath(logPath, s).getName)
-        catch { case _: Exception => return deleted } // unreadable: keep all
-      }.toSet
-      fs.listStatus(sidecarDir).foreach { sf =>
+      }.toSet) catch { case _: Exception => None } // unreadable: keep all
+      referenced.foreach(refs => fs.listStatus(sidecarDir).foreach { sf =>
         if (sf.getModificationTime < cutoff &&
-            !referenced.contains(sf.getPath.getName) &&
+            !refs.contains(sf.getPath.getName) &&
             fs.delete(sf.getPath, false)) deleted += 1
-      }
+      })
     }
+    // a checkpoint whose process died mid-write leaves its staging
+    // directory, claim marker or reclaim ticket behind; all are
+    // dot-named, so the listing above never sees them. Past the cutoff
+    // (days, against a claim grace of minutes) no live writer owns one.
+    Checkpoints.RemnantGlobs.flatMap(g => fs.globStatus(new Path(logPath, g)))
+      .foreach { st =>
+        if (st.getModificationTime < cutoff && fs.delete(st.getPath, true)) deleted += 1
+      }
     deleted
   }
 }

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.conf.{HadoopParquetConfiguration, ParquetConfiguration}
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.{Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
@@ -25,9 +25,10 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
   * Reads mirror it: a KB-sized checkpoint read costs a job per snapshot
   * bootstrap otherwise.
   *
-  * [[onDriver]] is the only place that decides "local and small enough"
-  * and [[readArtifacts]] the only reader that acts on it; at scale, or
-  * off the local scheme, the Spark-job path runs unchanged.
+  * [[onDriver]] is the only place that decides "local and small enough";
+  * [[readArtifacts]] is the one reader and [[writeArtifacts]] the one
+  * writer that act on it. At scale, or off the local scheme, both run a
+  * Spark job instead.
   *
   * Driver cost is held to what a log replay costs. Each action encoder
   * is bound ONCE PER THREAD ([[bound]]): generating its serializer, or
@@ -108,6 +109,53 @@ object LocalParquet {
     }
     n
   }
+
+  /** Stage one class of log artifact as parquet files under `dir`, and
+    * return them as (bucket, file) in bucket, then name order (bucket 0
+    * when `bucket` is None). A driver `Seq` that [[onDriver]] admits
+    * (at most [[MaxDriverRows]] rows, local scheme) is written here with
+    * no Spark job: `parts` even slices, or one file per bucket. Any other
+    * rows run one job: `coalesce(1)` for one part, `repartition(parts)`
+    * for several, and `repartition(parts, bucket)` + `partitionBy` for
+    * buckets, which keys each bucket's rows into one task and so one
+    * file. An empty driver `Seq` writes nothing. */
+  def writeArtifacts[T](spark: SparkSession, fs: FileSystem, dir: Path,
+                        rows: Either[Seq[T], Dataset[T]], enc: Encoder[T],
+                        parts: Int, bucket: Option[T => Int] = None): Seq[(Int, Path)] =
+    rows match {
+      case Left(seq) if seq.isEmpty => Seq.empty
+      case Left(seq) if onDriver(Seq(dir), fs, Some(seq.size.toLong), MaxDriverRows) =>
+        val slices: Seq[(Int, Seq[T])] = bucket match {
+          case Some(b) => seq.groupBy(b).toSeq.sortBy(_._1)
+          case None =>
+            val (n, k) = (seq.size, math.min(parts, seq.size))
+            (0 until k).map(i => 0 -> seq.slice(i * n / k, (i + 1) * n / k))
+        }
+        slices.zipWithIndex.map { case ((b, slice), i) =>
+          val file = new Path(dir, f"part-$i%05d.parquet")
+          write(spark, file.toString, slice, enc)
+          b -> file
+        }
+      case _ =>
+        import org.apache.spark.sql.functions.col
+        val ds = rows.fold(spark.createDataset(_)(enc), identity)
+        val writer = bucket match {
+          case None => (if (parts == 1) ds.coalesce(1) else ds.repartition(parts)).write
+          case Some(b) =>
+            ds.map(t => (b(t), t))(Encoders.tuple(Encoders.scalaInt, enc))
+              .select(col("_1").as("__bucket"), col("_2.*"))
+              .repartition(parts, col("__bucket")).write.partitionBy("__bucket")
+        }
+        writer.mode(SaveMode.Overwrite).parquet(dir.toString)
+        // each bucket's files sit in its `__bucket=<b>` directory
+        def staged(d: Path, b: Int): Seq[(Int, Path)] =
+          fs.listStatus(d).toSeq.sortBy(_.getPath.getName).flatMap { st =>
+            val name = st.getPath.getName
+            if (st.isDirectory) staged(st.getPath, name.stripPrefix("__bucket=").toInt)
+            else if (name.endsWith(".parquet")) Seq(b -> st.getPath) else Nil
+          }
+        staged(dir, 0).sortBy(_._1)
+    }
 
   private final class RowBuilder(out: org.apache.parquet.io.OutputFile)
     extends ParquetWriter.Builder[InternalRow, RowBuilder](out) {

@@ -207,4 +207,114 @@ class LocalParquetSpec extends SparkSpec {
       assert(path.exists())
     }
   }
+
+  /** What one checkpoint of a table's head wrote, read back after the
+    * write and the fresh load through it. */
+  private case class Written(artifacts: Seq[String], hint: String,
+                             hintParts: Int, partFiles: Int,
+                             state: Seq[String], jobs: Int)
+
+  private val Uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+
+  /** Checkpoints the head of `dir` (through the job when `viaJob`: a
+    * 1-byte driver-state bound puts the file list in a Dataset), then
+    * removes everything it wrote and restores the previous hint, so the
+    * next call sees the same table. */
+  private def checkpointHead(dir: String, parts: Int, viaJob: Boolean): Written = {
+    if (viaJob) spark.conf.set(Snapshot.DriverStateMaxBytesKey, "1")
+    DeltaLog.clearCache()
+    val log = DeltaLog.forTable(spark, dir)
+    val fs = log.logPath.getFileSystem(log.hadoopConf)
+    def files(): Set[Path] = Seq(log.logPath, FileNames.sidecarDir(log.logPath))
+      .filter(fs.exists).flatMap(d => fs.listStatus(d).filter(_.isFile).map(_.getPath)).toSet
+    val hintPath = FileNames.lastCheckpointFile(log.logPath)
+    def hint() = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(hintPath.toUri)), "UTF-8")
+    val before = files()
+    val hintBefore = if (fs.exists(hintPath)) Some(hint()) else None
+    val jobs = try {
+      val head = log.update()
+      assert(head.distributedState == viaJob)
+      head.tombstones
+      jobsLaunchedBy(Checkpoints.writeCheckpoint(head, parts))._2
+    } finally spark.conf.unset(Snapshot.DriverStateMaxBytesKey)
+    val added = (files() -- before).toSeq.filterNot(_.getName.startsWith("."))
+    val written = hint()
+    DeltaLog.clearCache()
+    val reloaded = DeltaLog.forTable(spark, dir).update()
+    assert(reloaded.logSegment.checkpointVersion.contains(reloaded.version))
+    val state = (reloaded.allFiles ++ reloaded.tombstones ++
+      reloaded.setTransactions :+ reloaded.metadata :+ reloaded.protocol)
+      .map(_.toString).sorted
+    (files() -- before).foreach(fs.delete(_, false))
+    hintBefore match {
+      case Some(h) => log.store.write(hintPath, Iterator(h), overwrite = true, log.hadoopConf)
+      case None => fs.delete(hintPath, false)
+    }
+    DeltaLog.clearCache()
+    val lc = JsonCodec.mapper.readValue(written, classOf[LastCheckpoint])
+    Written(added.map(p => Uuid.replaceAllIn(p.getName, "<uuid>")).sorted, written,
+      lc.parts.getOrElse(1), added.count(FileNames.isCheckpointFile), state, jobs)
+  }
+
+  /** The same checkpoint written on the driver and through the job:
+    * same state, same artifact names and hint; only the driver side runs
+    * no job. */
+  private def assertSameOnBothSides(dir: String, parts: Int): Written = {
+    val driver = checkpointHead(dir, parts, viaJob = false)
+    val job = checkpointHead(dir, parts, viaJob = true)
+    assert(driver.jobs == 0, "the driver-side checkpoint launched a Spark job")
+    assert(job.jobs > 0, "the job-side checkpoint ran on the driver")
+    assert(driver.state == job.state)
+    assert(driver.artifacts == job.artifacts)
+    assert(driver.hint == job.hint)
+    Seq(driver, job).foreach(w => assert(w.hintParts == w.partFiles, w))
+    driver
+  }
+
+  /** 24 files over four commits, two of them removed (tombstones), and
+    * one streaming txn. */
+  private def churnedTable(dir: String, conf: Map[String, String]): Unit = {
+    DeltaTable.write((0 until 40).toDF("v").repartition(8), dir, configuration = conf)
+    DeltaTable.write((40 until 80).toDF("v").repartition(8), dir)
+    DeltaTable.write((80 until 120).toDF("v").repartition(8), dir)
+    val log = DeltaLog.forTable(spark, dir)
+    val gone = log.update().allFiles.sortBy(_.path).take(2).map(_.remove())
+    log.startTransaction().commit(gone :+ SetTransaction("stream-a", 3L),
+      DeltaOperations.ManualUpdate)
+  }
+
+  test("a classic single-part checkpoint is the same on the driver and through the job") {
+    withTempDir { dir =>
+      churnedTable(dir, Map.empty)
+      val w = assertSameOnBothSides(dir, parts = 1)
+      assert(w.artifacts == Seq("00000000000000000003.checkpoint.parquet",
+        "_last_checkpoint"))
+    }
+  }
+
+  test("a classic 3-part checkpoint is the same on the driver and through the job") {
+    withTempDir { dir =>
+      churnedTable(dir, Map.empty)
+      val w = assertSameOnBothSides(dir, parts = 3)
+      assert(w.partFiles == 3, w.artifacts)
+    }
+  }
+
+  test("a V2 checkpoint with tombstones and a carry-over is the same on the driver and through the job") {
+    withTempDir { dir =>
+      churnedTable(dir, Map("delta.checkpointPolicy" -> "v2",
+        "delta.checkpoint.sidecarSize" -> "4"))
+      val log = DeltaLog.forTable(spark, dir)
+      Checkpoints.writeCheckpoint(log.update())
+      DeltaTable.write(Seq(1000).toDF("v"), dir)
+      val head = log.update()
+      assert(head.tombstones.nonEmpty)
+      val plan = Checkpoints.planV2CarryOver(head, 1)
+      assert(plan.exists(p => p.carried.nonEmpty && p.changed.nonEmpty), plan)
+      val w = assertSameOnBothSides(dir, parts = 1)
+      assert(w.artifacts.exists(_.matches("""<uuid>\.b\d+of\d+\.0\.parquet""")), w.artifacts)
+      assert(w.artifacts.contains("<uuid>.tombstones.0.parquet"), w.artifacts)
+    }
+  }
 }
