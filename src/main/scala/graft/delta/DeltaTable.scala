@@ -352,477 +352,16 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     missing.length.toLong
   }
 
-  /** Physically delete data files no longer referenced by the latest
-    * snapshot, once their tombstones have aged past `retentionMillis`
-    * (default: the table's deletedFileRetentionDuration). Files still
-    * named by a younger tombstone are kept so time travel within the
-    * retention window — and any reader pinned to an old snapshot — stays
-    * intact. Returns the number of deleted files.
-    *
-    * Scale shape: the recursive table listing runs as a Spark job (one
-    * task per top-level directory — on a 100 TB table a driver loop over
-    * `fs.listFiles(recursive)` takes hours), candidates anti-join against
-    * the (possibly distributed) active-file set, and the deletes
-    * themselves run in tasks.
-    *
-    * `lite = true` (delta-spark 4.0's `VACUUM … LITE`) skips the table
-    * listing entirely: candidates come from the LOG's remove actions —
-    * O(recent churn) instead of O(table files), the steady-state shape a
-    * 100 TB table wants between occasional full vacuums. The tradeoff is
-    * inherent to the mode: files the log never tracked (a crashed
-    * writer's orphans) are only ever cleaned by a FULL vacuum. LITE runs
-    * record `VACUUM START`/`VACUUM END` commits (delta-spark's vacuum
-    * logging; opt-in for full vacuums via
-    * `spark.graft.vacuum.logging.enabled`), and the next LITE run uses
-    * the last `VACUUM END`'s recorded cutoff to skip commits whose
-    * removes are provably already deleted — a remove committed before
-    * the previous cutoff carries `deletionTimestamp <= commit time <
-    * cutoff`, so it was eligible then. */
+  /** Physically delete the files under the table directory that the
+    * latest snapshot no longer references, once they have aged past
+    * `retentionMillis` (default: the table's deletedFileRetentionDuration).
+    * `lite = true` (`VACUUM … LITE`) takes its candidates from the log's
+    * removes instead of a table listing. Returns the number of deleted
+    * files (with `dryRun`, the number that would be). See [[Vacuum]]. */
   def vacuum(retentionMillis: Option[Long] = None,
              dryRun: Boolean = false,
-             lite: Boolean = false): Int = {
-    import org.apache.spark.sql.functions.col
-    val snapshot = deltaLog.update()
-    // vacuumProtocolCheck (PROTOCOL.md, reader+writer feature): GC must
-    // refuse a table whose protocol it doesn't fully implement — an
-    // unknown feature may keep live data in files this vacuum would
-    // classify as orphans (exactly the failure the feature exists to
-    // prevent; refusal names the features, same as the read/write gates)
-    locally {
-      val p = snapshot.protocol
-      val missing =
-        (if (p.minReaderVersion == 3) TableFeatures.unsupportedReader(p)
-         else Nil) ++
-        // read-tolerated writer features (UniForm) never change which
-        // files are live, so they cannot make GC mis-classify an orphan
-        (if (p.minWriterVersion == 7)
-           TableFeatures.unsupportedWriter(p)
-             .filterNot(TableFeatures.readToleratedWriter)
-         else Nil)
-      require(missing.isEmpty,
-        s"Cannot vacuum: table requires table feature(s) " +
-          s"${missing.distinct.mkString(", ")} this engine does not " +
-          "implement - files it would delete may be live under those features")
-    }
-    val retention = retentionMillis.getOrElse(
-      DeltaConfigs.TOMBSTONE_RETENTION.fromMetadata(snapshot.metadata))
-    // retention guard (Delta's retentionDurationCheck): with the
-    // in-place batch-dir layout, an IN-FLIGHT writer's uncommitted files
-    // are only protected by their mtime being younger than the cutoff —
-    // a sub-retention vacuum could delete files a concurrent commit is
-    // about to reference. Require the table's tombstone retention unless
-    // the operator explicitly opts out.
-    val tableRetention =
-      DeltaConfigs.TOMBSTONE_RETENTION.fromMetadata(snapshot.metadata)
-    val checkEnabled = spark.conf
-      .getOption("spark.graft.vacuum.retentionCheck.enabled")
-      .forall(_.toBoolean)
-    require(!checkEnabled || retention >= tableRetention,
-      s"vacuum retention ${retention}ms is below the table's " +
-        s"deletedFileRetentionDuration (${tableRetention}ms); this risks " +
-        "deleting files of in-flight commits and breaking time travel. " +
-        "Set spark.graft.vacuum.retentionCheck.enabled=false to override.")
-    val cutoff = deltaLog.clock() - retention
-    val conf = deltaLog.hadoopConf
-    val root = deltaLog.dataPath.toUri.getPath
-
-    def decode(child: String): String =
-      new org.apache.hadoop.fs.Path(new java.net.URI(child)).toUri.getPath
-    // A tombstone younger than the cutoff protects its file. The snapshot's
-    // own tombstone list is pre-filtered by the TABLE retention, so a
-    // vacuum asked to preserve a LONGER window must re-replay the log with
-    // the requested cutoff — otherwise files removed recently but written
-    // long ago get deleted inside the window the caller asked to keep.
-    // (Bounded by what the log/checkpoints still record: checkpoints drop
-    // tombstones expired at write time.)
-    val tombstones =
-      if (cutoff < snapshot.minFileRetentionTimestamp) {
-        new Snapshot(spark, deltaLog, snapshot.version, snapshot.logSegment,
-          cutoff, snapshot.timestamp).tombstones
-      } else snapshot.tombstones
-    // a file's deletion-vector bin lives in the table directory too:
-    // active/protected sets must carry it or vacuum CORRUPTS a DV table
-    // by deleting the bitmaps its active files still reference
-    val rootPrefixForDv = root + "/"
-    def dvRelPath(d: Option[DeletionVectorDescriptor]): Option[String] =
-      d.filter(x => x.storageType == "u" || x.storageType == "p").map { x =>
-        dv.DeletionVectors.absolutePath(x, deltaLog.dataPath)
-          .toUri.getPath.stripPrefix(rootPrefixForDv)
-      }
-    val protectedPaths = tombstones
-      .filter(_.delTimestamp >= cutoff)
-      .flatMap(r => decode(r.path) +: dvRelPath(r.deletionVector).toSeq)
-
-    // SCALE-ADAPTIVE FAST PATH (guide §1.2/§6): the distributed listing +
-    // two anti-joins below exist for million-file tables; on a
-    // driver-small state they cost ~6 Spark jobs (~3 s profiled in
-    // delta_sql_maintenance) to decide a handful of deletes. Same
-    // decision rules, computed driver-side; the distributed path remains
-    // for distributed-state snapshots and large file counts, and a walk
-    // that discovers an unexpectedly huge orphan set falls through to it.
-    if (!lite && !snapshot.distributedState &&
-        snapshot.numOfFiles <= DeltaTable.DriverVacuumMaxFiles) {
-      driverVacuum(snapshot, cutoff, dryRun, protectedPaths,
-        dvRelPath, decode, tableRetention, retentionMillis,
-        checkEnabled) match {
-        case Some(n) => return n
-        case None => // fell through: too many candidates for the driver
-      }
-    }
-
-    import spark.implicits._
-    val sconf = new SerializableHadoopConf(conf)
-    val rootPrefix = root + "/"
-    val rootStr0 = deltaLog.dataPath.toString
-    // caches to release at the end (the full path persists its root scan)
-    var caches: List[DataFrame] = Nil
-
-    // candidate (rel, age) pairs. FULL: distributed recursive listing,
-    // age = fs modification time. LITE: the log's remove actions, age =
-    // the tombstone's deletionTimestamp (strictly later than the file's
-    // write mtime — conservative in the same direction).
-    val listing: DataFrame = if (lite) {
-      // commits before the previous vacuum's cutoff hold only removes
-      // with deletionTimestamp < that cutoff — already deleted then
-      val fromVersion = deltaLog.history()
-        .find(_.operation.contains("VACUUM END"))
-        .flatMap(_.operationParameters.flatMap(_.get("cutoffMillis")))
-        .map(_.toLong)
-        .map { prevCutoff =>
-          try deltaLog.getVersionAtOrAfterTimestamp(prevCutoff)
-          catch { // no commit since the previous cutoff: nothing new
-            case _: IllegalArgumentException => snapshot.version + 1
-          }
-        }
-        .getOrElse { // first LITE vacuum: all retained commits
-          deltaLog.store.listFrom(
-              FileNames.deltaFile(deltaLog.logPath, 0), conf)
-            .filter(f => FileNames.isDeltaFile(f.getPath))
-            .map(f => FileNames.deltaVersion(f.getPath))
-            .take(1).toList.headOption.getOrElse(0L)
-        }
-      val deltaPaths = (fromVersion to snapshot.version)
-        .map(v => FileNames.deltaFile(deltaLog.logPath, v).toString)
-      if (deltaPaths.isEmpty) Seq.empty[(String, Long)].toDF("rel", "mtime")
-      else {
-        implicit val rsEnc = org.apache.spark.sql.Encoders
-          .product[DeltaTable.RemoveSlice]
-        val prefix = rootPrefixForDv
-        val dataPathStr = deltaLog.dataPath.toString
-        spark.read.schema(rsEnc.schema).json(deltaPaths: _*)
-          .as[DeltaTable.RemoveSlice]
-          .flatMap { s =>
-            s.remove.toSeq.flatMap { r =>
-              val rel = new org.apache.hadoop.fs.Path(
-                  new java.net.URI(r.path))
-                .toUri.getPath.stripPrefix(prefix)
-              val dvPath = r.deletionVector
-                .filter(x => x.storageType == "u" || x.storageType == "p")
-                .map(x => dv.DeletionVectors.absolutePath(x,
-                    new org.apache.hadoop.fs.Path(dataPathStr))
-                  .toUri.getPath.stripPrefix(prefix))
-              (rel +: dvPath.toSeq).map(p => (p, r.delTimestamp))
-            }
-          }
-          .toDF("rel", "mtime")
-          // external (absolute) paths are outside the table dir — a
-          // vacuum never touches them (same as the listing-based path,
-          // which only ever sees the table dir)
-          .filter(!col("rel").startsWith("/"))
-          // a path removed in several commits keeps its OLDEST tombstone
-          // time for the age check; a younger tombstone still protects
-          // it through protectedDF below
-          .groupBy(col("rel")).agg(
-            org.apache.spark.sql.functions.min(col("mtime")).as("mtime"))
-      }
-    } else {
-      // distributed recursive listing: the ROOT level lists in one
-      // executor task too (an unpartitioned million-file table would
-      // otherwise allocate every FileStatus on the driver); only
-      // DIRECTORY paths are collected — bounded by partition count —
-      // while root-level files stay a Dataset end to end.
-      val rootEntries = spark.range(1).mapPartitions { it =>
-        // guard on the iterator: mapPartitions runs the closure on EVERY
-        // partition of range(1) (one holds the row, the rest are empty) —
-        // listing unconditionally would duplicate every entry
-        // numPartitions× (and so the whole downstream delete set)
-        if (!it.hasNext) Iterator.empty else {
-        val p = new org.apache.hadoop.fs.Path(rootStr0)
-        val dfs = p.getFileSystem(sconf.value)
-        dfs.listStatus(p).iterator
-          // hidden = leading [._], EXCEPT the CDC data dir (its expired
-          // files are vacuum's to reclaim — delta-spark exempts it the
-          // same way; skipping it is an unbounded leak on CDF tables)
-          // and partition dirs for columns whose NAME starts with _ or .
-          // (their component looks like `_col=value`)
-          .filter { st =>
-            val n = st.getPath.getName
-            !(n.startsWith("_") || n.startsWith(".")) ||
-              n == write.CdcWriter.ChangeDir || n.contains("=")
-          }
-          .map(st => (st.getPath.toString,
-            st.getPath.toUri.getPath.stripPrefix(rootPrefix),
-            st.getModificationTime, st.isDirectory))
-        }
-      }.toDF("abs", "rel", "mtime", "isDir")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      caches ::= rootEntries
-      val topFiles = rootEntries.filter(!col("isDir"))
-        .select(col("rel"), col("mtime")).as[(String, Long)]
-      // the directory set stays a Dataset end to end (a 1M-partition
-      // table would otherwise collect 1M path strings on the driver
-      // just to re-distribute them); empty partitions are free
-      val fromDirs = rootEntries.filter(col("isDir"))
-        .select(col("abs")).as[String]
-        .repartition(64)
-        .mapPartitions { ds =>
-          ds.flatMap { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            val dfs = p.getFileSystem(sconf.value)
-            val it = dfs.listFiles(p, true)
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-            while (it.hasNext) {
-              val st = it.next()
-              val name = st.getPath.getName
-              if (st.isFile && !name.startsWith(".") && !name.startsWith("_")) {
-                buf += ((st.getPath.toUri.getPath.stripPrefix(rootPrefix),
-                  st.getModificationTime))
-              }
-            }
-            buf
-          }
-        }
-      topFiles.toDF("rel", "mtime")
-        .unionByName(fromDirs.toDF("rel", "mtime"))
-        // hidden path COMPONENTS too, not just hidden leaf names: a file
-        // under batch-x/_temporary/... (an in-flight or aborted job's
-        // staging) must never be vacuum's to delete — delta-spark skips
-        // hidden directories at every level of the recursion. Two
-        // delta-spark exemptions from "hidden": the `_change_data` dir
-        // (expired CDC files ARE vacuumable — otherwise CDF tables leak
-        // storage forever) and partition dirs for [._]-named columns
-        // (component shape `_col=value`)
-        .filter(!col("rel").rlike(
-          "(^|/)(?!" + write.CdcWriter.ChangeDir + "(/|$))(?![._][^/]*=)[._]"))
-    }
-
-    // the same rows as decode/dvRelPath, from serializable values only
-    val activeDF = {
-      val dataPathStr = deltaLog.dataPath.toString
-      val prefix = rootPrefixForDv
-      snapshot.allFilesDS.flatMap { f =>
-        val dvPath = f.deletionVector
-          .filter(x => x.storageType == "u" || x.storageType == "p")
-          .map(x => dv.DeletionVectors.absolutePath(x,
-            new org.apache.hadoop.fs.Path(dataPathStr))
-            .toUri.getPath.stripPrefix(prefix))
-        new org.apache.hadoop.fs.Path(new java.net.URI(f.path))
-          .toUri.getPath +: dvPath.toSeq
-      }.toDF("rel")
-    }
-    val protectedDF = spark.createDataset(protectedPaths).toDF("rel")
-
-    val deletable = listing.filter(col("mtime") < cutoff)
-      .join(activeDF, Seq("rel"), "left_anti")
-      .join(protectedDF, Seq("rel"), "left_anti")
-      .select(col("rel")).as[String]
-      // BARRIER: materialize the survivor set before any delete runs — a
-      // broadcast anti-join would otherwise pipeline listing and deleting
-      // into ONE stage, and a task deleting files races the tasks still
-      // iterating listFiles() over the same directories
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDeletable = deletable.count().toInt
-
-    // DRY RUN: report what WOULD be deleted, touch nothing
-    if (dryRun) {
-      deletable.unpersist()
-      caches.foreach(_.unpersist())
-      return nDeletable
-    }
-
-    // vacuum logging (delta-spark's VACUUM START/END commit-info pair):
-    // always on for LITE — the END commit's recorded cutoff is what lets
-    // the NEXT lite run skip already-covered commits — opt-in otherwise
-    val logging = lite || spark.conf
-      .getOption("spark.graft.vacuum.logging.enabled").exists(_.toBoolean)
-    if (logging) {
-      deltaLog.startTransaction().commit(Nil, "VACUUM START",
-        operationParameters = Map(
-          "mode" -> (if (lite) "LITE" else "FULL"),
-          "retentionCheckEnabled" -> checkEnabled.toString,
-          "defaultRetentionMillis" -> tableRetention.toString) ++
-          retentionMillis.map(r => "specifiedRetentionMillis" -> r.toString),
-        operationMetrics = Map("numFilesToDelete" -> nDeletable.toString))
-    }
-
-    // delete in tasks; count via the returned partial sums
-    val rootStr = deltaLog.dataPath.toString
-    val deleted = deletable.mapPartitions { paths =>
-      val dfs = new org.apache.hadoop.fs.Path(rootStr).getFileSystem(sconf.value)
-      var n = 0
-      paths.foreach { rel =>
-        if (dfs.delete(new org.apache.hadoop.fs.Path(s"$rootStr/$rel"), false)) n += 1
-      }
-      Iterator.single(n)
-    }.collect().sum
-    // sweep now-empty per-commit batch directories (the in-place layout
-    // leaves one dir per historical commit behind once its files vacuum
-    // out): non-recursive delete fails harmlessly on non-empty dirs.
-    // Runs in tasks — the dir count tracks historical commits.
-    deletable
-      .map { rel =>
-        // CDC batches nest one level deeper (_change_data/batch-<uuid>/)
-        val parts = rel.split('/')
-        if (parts.length > 2 && parts.head == write.CdcWriter.ChangeDir) {
-          s"${parts(0)}/${parts(1)}"
-        } else parts.head
-      }
-      .filter(d => d.startsWith("batch-") ||
-        d.startsWith(s"${write.CdcWriter.ChangeDir}/batch-"))
-      .distinct()
-      .mapPartitions { dirsIt =>
-        val dfs = new org.apache.hadoop.fs.Path(rootStr).getFileSystem(sconf.value)
-        dirsIt.foreach { d =>
-          val p = new org.apache.hadoop.fs.Path(s"$rootStr/$d")
-          try {
-            // "empty" = only hidden leftovers (checksum/_temporary
-            // crumbs). A partition dir for a [._]-named column
-            // (`_p=value`) is NOT a crumb — it counts as empty only when
-            // it holds nothing, or the recursive delete below would eat
-            // live data files under it
-            val entries = dfs.listStatus(p)
-            val onlyCrumbs = entries.forall { st =>
-              val n = st.getPath.getName
-              if (n.contains("=") && st.isDirectory) {
-                dfs.listStatus(st.getPath).isEmpty
-              } else n.startsWith(".") || n.startsWith("_")
-            }
-            if (onlyCrumbs) dfs.delete(p, true)
-          } catch { case _: java.io.IOException => /* raced: keep */ }
-        }
-        Iterator.empty[Int]
-      }.count()
-    deletable.unpersist()
-    caches.foreach(_.unpersist())
-    if (logging) {
-      deltaLog.startTransaction().commit(Nil, "VACUUM END",
-        operationParameters = Map(
-          "status" -> "COMPLETED",
-          "mode" -> (if (lite) "LITE" else "FULL"),
-          // the boundary the next LITE run prunes its commit scan with
-          "cutoffMillis" -> cutoff.toString),
-        operationMetrics = Map("numDeletedFiles" -> deleted.toString))
-    }
-    deleted
-  }
-
-  /** Driver-side FULL vacuum for driver-small states: identical decision
-    * rules to the distributed path (same hidden-component regex, same
-    * active/protected sets, same cutoff comparison, same batch-dir
-    * sweep, same START/END logging commits), zero Spark jobs. Returns
-    * None when the walk finds more candidates than the driver should
-    * hold — the caller falls through to the distributed path. */
-  private def driverVacuum(snapshot: Snapshot, cutoff: Long,
-                           dryRun: Boolean,
-                           protectedPaths: Seq[String],
-                           dvRelPath: Option[DeletionVectorDescriptor] => Option[String],
-                           decode: String => String,
-                           tableRetention: Long,
-                           retentionMillis: Option[Long],
-                           checkEnabled: Boolean): Option[Int] = {
-    val conf = deltaLog.hadoopConf
-    val fs = deltaLog.dataPath.getFileSystem(conf)
-    val root = deltaLog.dataPath.toUri.getPath
-    val rootPrefix = root + "/"
-    val hiddenRe = ("(^|/)(?!" + write.CdcWriter.ChangeDir +
-      "(/|$))(?![._][^/]*=)[._]").r
-    val candidates = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val tops = fs.listStatus(deltaLog.dataPath).filter { st =>
-      val n = st.getPath.getName
-      !(n.startsWith("_") || n.startsWith(".")) ||
-        n == write.CdcWriter.ChangeDir || n.contains("=")
-    }
-    tops.foreach { st =>
-      if (!st.isDirectory) {
-        candidates += ((st.getPath.toUri.getPath.stripPrefix(rootPrefix),
-          st.getModificationTime))
-      } else {
-        val it = fs.listFiles(st.getPath, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val name = f.getPath.getName
-          if (f.isFile && !name.startsWith(".") && !name.startsWith("_")) {
-            candidates += ((f.getPath.toUri.getPath.stripPrefix(rootPrefix),
-              f.getModificationTime))
-          }
-          if (candidates.size > DeltaTable.DriverVacuumMaxCandidates) {
-            return None // unexpected orphan blow-up: let Spark handle it
-          }
-        }
-      }
-    }
-    val active: Set[String] = snapshot.allFiles.iterator.flatMap(f =>
-      decode(f.path) +: dvRelPath(f.deletionVector).toSeq).toSet
-    val protectedSet = protectedPaths.toSet
-    val deletable = candidates.iterator
-      .filter { case (rel, mtime) =>
-        mtime < cutoff && hiddenRe.findFirstIn(rel).isEmpty &&
-          !active.contains(rel) && !protectedSet.contains(rel)
-      }
-      .map(_._1).toVector
-    if (dryRun) return Some(deletable.length)
-    val logging = spark.conf
-      .getOption("spark.graft.vacuum.logging.enabled").exists(_.toBoolean)
-    if (logging) {
-      deltaLog.startTransaction().commit(Nil, "VACUUM START",
-        operationParameters = Map(
-          "mode" -> "FULL",
-          "retentionCheckEnabled" -> checkEnabled.toString,
-          "defaultRetentionMillis" -> tableRetention.toString) ++
-          retentionMillis.map(r => "specifiedRetentionMillis" -> r.toString),
-        operationMetrics = Map("numFilesToDelete" -> deletable.length.toString))
-    }
-    var deleted = 0
-    deletable.foreach { rel =>
-      if (fs.delete(new org.apache.hadoop.fs.Path(s"$root/$rel"), false)) {
-        deleted += 1
-      }
-    }
-    // now-empty per-commit batch directories (same rule as the
-    // distributed sweep)
-    deletable.iterator
-      .map { rel =>
-        val parts = rel.split('/')
-        if (parts.length > 2 && parts.head == write.CdcWriter.ChangeDir) {
-          s"${parts(0)}/${parts(1)}"
-        } else parts.head
-      }
-      .filter(d => d.startsWith("batch-") ||
-        d.startsWith(s"${write.CdcWriter.ChangeDir}/batch-"))
-      .toSet[String]
-      .foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(s"$root/$d")
-        try {
-          val entries = fs.listStatus(p)
-          val onlyCrumbs = entries.forall { st =>
-            val n = st.getPath.getName
-            if (n.contains("=") && st.isDirectory) {
-              fs.listStatus(st.getPath).isEmpty
-            } else n.startsWith(".") || n.startsWith("_")
-          }
-          if (onlyCrumbs) fs.delete(p, true)
-        } catch { case _: java.io.IOException => /* raced: keep */ }
-      }
-    if (logging) {
-      deltaLog.startTransaction().commit(Nil, "VACUUM END",
-        operationParameters = Map(
-          "status" -> "COMPLETED",
-          "mode" -> "FULL",
-          "cutoffMillis" -> cutoff.toString),
-        operationMetrics = Map("numDeletedFiles" -> deleted.toString))
-    }
-    Some(deleted)
-  }
+             lite: Boolean = false): Int =
+    Vacuum.run(spark, deltaLog, retentionMillis, dryRun, lite)
 
   /** RESTORE the table to an earlier `version`: one transactional commit
     * that re-adds the files of the target snapshot missing from the
@@ -1248,7 +787,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     // descriptors first, then one copy each.
     implicit val dvEnc = Encs.dvDescriptor
     filesDs.flatMap(_.deletionVector.toSeq
-        .filter(d => d.storageType == "u" || d.storageType == "p"))(dvEnc)
+        .filter(dv.DeletionVectors.isOnDisk))(dvEnc)
       .dropDuplicates("storageType", "pathOrInlineDv")
       .foreachPartition { (it: Iterator[DeletionVectorDescriptor]) =>
         val conf = sconf.value
@@ -1739,21 +1278,6 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
 }
 
 object DeltaTable {
-
-  /** The remove slice of the action envelope — all VACUUM LITE reads
-    * from the commit range it scans. */
-  private[delta] case class RemoveSlice(remove: Option[RemoveFile] = None)
-
-  /** FULL vacuum runs driver-side below this active-file count (the
-    * distributed listing + anti-joins cost ~6 Spark jobs, sized for
-    * million-file tables); above it, or in distributed-state mode, the
-    * Spark-job path runs unchanged. */
-  private[delta] val DriverVacuumMaxFiles = 10000L
-
-  /** Driver-side vacuum bails to the distributed path when the directory
-    * walk finds more than this many candidate files (a small ACTIVE set
-    * can still sit in a directory full of orphans). */
-  private[delta] val DriverVacuumMaxCandidates = 200000
 
   /** The domain carrying a clustered table's clustering columns. */
   val ClusteringDomain = "delta.clustering"

@@ -27,6 +27,11 @@ object DeletionVectors {
 
   val FormatVersion: Byte = 1
 
+  /** Whether the bitmap lives in a file (storage types "u" and "p"),
+    * not inline in the descriptor. */
+  def isOnDisk(dv: DeletionVectorDescriptor): Boolean =
+    dv.storageType == "u" || dv.storageType == "p"
+
   /** Absolute path of an on-disk DV (storage types "u" and "p"). */
   def absolutePath(dv: DeletionVectorDescriptor, tablePath: Path): Path =
     dv.storageType match {

@@ -43,7 +43,8 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
 object LocalParquet {
 
   /** Rows a checkpoint artifact may be asked to hold driver-side; above
-    * this the Spark-job path must run (mirrors DriverVacuumMaxFiles). */
+    * this the Spark-job path must run (mirrors
+    * Vacuum.DriverVacuumMaxFiles). */
   val MaxDriverRows = 10000
 
   /** Write `rows` as ONE parquet file at `path` (a local-scheme URI or

@@ -7,6 +7,17 @@ import graft.SparkSpec
 class CompactionAndVacuumSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A FULL-vacuum rule case, run on both executors: the driver walk
+    * (these tables are small) and the Spark job (distributed state
+    * forced). */
+  private def vacuumTest(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name [Spark job]") {
+      spark.conf.set(Snapshot.DriverStateMaxBytesKey, "1")
+      try body finally spark.conf.unset(Snapshot.DriverStateMaxBytesKey)
+    }
+  }
+
   test("compact bin-packs small files without changing data") {
     withTempDir { dir =>
       (1 to 12).foreach(i =>
@@ -163,8 +174,8 @@ class CompactionAndVacuumSpec extends SparkSpec {
     }
   }
 
-  test("vacuum with a retention longer than the table's window re-protects " +
-      "files whose tombstones expired from state") {
+  vacuumTest("vacuum with a retention longer than the table's window " +
+      "re-protects files whose tombstones expired from state") {
     withTempDir { dir =>
       val day = 24L * 3600 * 1000
       val start = 3000000000000L
@@ -213,7 +224,7 @@ class CompactionAndVacuumSpec extends SparkSpec {
     storage.ObjectStoreLogStore.writtenPaths.remove("file:/tmp/ttl-test/1.json")
   }
 
-  test("vacuum deletes unreferenced files after the retention window") {
+  vacuumTest("vacuum deletes unreferenced files after the retention window") {
     withTempDir { dir =>
       (1 to 6).foreach(i => DeltaTable.write(Seq(i).toDF("v"), dir))
       val log = DeltaLog.forTable(spark, dir)
@@ -245,7 +256,7 @@ class CompactionAndVacuumSpec extends SparkSpec {
     }
   }
 
-  test("vacuum never deletes under a hidden path COMPONENT of a shared " +
+  vacuumTest("vacuum never deletes under a hidden path COMPONENT of a shared " +
       "directory (a converted table's p= dirs outlive any one commit)") {
     // this engine's own writes land in write-once batch-<uuid>/ dirs, so
     // hidden crumbs there belong to that dir's own finished job and are
@@ -305,7 +316,7 @@ class CompactionAndVacuumSpec extends SparkSpec {
     }
   }
 
-  test("vacuum DRY RUN counts deletable files without deleting") {
+  vacuumTest("vacuum DRY RUN counts deletable files without deleting") {
     withTempDir { dir =>
       (1 to 4).foreach(i => DeltaTable.write(Seq(i).toDF("v"), dir))
       val log = DeltaLog.forTable(spark, dir)
@@ -343,7 +354,7 @@ class CompactionAndVacuumSpec extends SparkSpec {
     }
   }
 
-  test("vacuum sweeps emptied per-commit batch directories") {
+  vacuumTest("vacuum sweeps emptied per-commit batch directories") {
     withTempDir { dir =>
       (1 to 4).foreach(i => DeltaTable.write(Seq(i).toDF("v"), dir))
       val log = DeltaLog.forTable(spark, dir)
@@ -361,7 +372,7 @@ class CompactionAndVacuumSpec extends SparkSpec {
     }
   }
 
-  test("a crashed writer's orphan batch dir is vacuumed after retention") {
+  vacuumTest("a crashed writer's orphan batch dir is vacuumed after retention") {
     withTempDir { dir =>
       DeltaTable.write(Seq(1, 2, 3).toDF("v"), dir)
       // simulate a writer that died after its distributed write but before
@@ -444,7 +455,7 @@ class CompactionAndVacuumSpec extends SparkSpec {
     }
   }
 
-  test("FULL vacuum reclaims expired change-data files; fresh ones are " +
+  vacuumTest("FULL vacuum reclaims expired change-data files; fresh ones are " +
       "protected by the retention window") {
     withTempDir { dir =>
       import org.apache.hadoop.fs.Path
@@ -487,7 +498,7 @@ class CompactionAndVacuumSpec extends SparkSpec {
     }
   }
 
-  test("FULL vacuum reclaims rewritten files under partition dirs of " +
+  vacuumTest("FULL vacuum reclaims rewritten files under partition dirs of " +
       "[._]-named columns (component shape `_p=value` is data, not hidden)") {
     withTempDir { dir =>
       import org.apache.hadoop.fs.Path
